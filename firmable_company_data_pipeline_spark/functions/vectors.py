@@ -108,11 +108,11 @@ def dot_literal(a: Column, b: list[float]) -> Column:
     same order, ``element_at(lit(b), i)`` ≡ ``lit(b[i])``.  The per-row
     size guard falls back to the HOF fold exactly like :func:`dot`."""
     d = len(b)
+    if d > UNROLL_MAX_D:
+        return _dot_fold(a, F.lit(b))
     unrolled = _unrolled(
         F.element_at(a, i + 1) * F.lit(float(b[i])) for i in range(d)
     )
-    if d > UNROLL_MAX_D:
-        return _dot_fold(a, F.lit(b))
     return F.when(F.size(a) == d, unrolled).otherwise(_dot_fold(a, F.lit(b)))
 
 

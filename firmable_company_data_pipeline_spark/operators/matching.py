@@ -539,7 +539,10 @@ def match_cascade(
     Stage outputs that feed BOTH an anti-join residual and the final
     union are persisted (memory-and-disk, spill-safe) so neither branch
     recomputes the stage — exchange reuse alone doesn't cover the two
-    different plan shapes.
+    different plan shapes.  The inputs ``cc`` and ``abr`` fan out to
+    every tier, so they are persisted at entry too: one pass extracts and
+    cleans each source once instead of once per tier (with a real fetch
+    client, every extra copy re-fetches every page).
     """
     # persist(), NOT localCheckpoint (r14, reverting an r13 sweep
     # conversion): callers attach Observation metrics upstream
@@ -548,6 +551,7 @@ def match_cascade(
     # never fires a query-execution end event — the observed counts
     # silently read 0.  persist keeps the observe node in the acting
     # plan (and keeps size stats for the downstream join planning).
+    cc, abr = cc.persist(), abr.persist()
     rule = rule_based_match(cc, abr).persist()
 
     residual1 = anti_join_residual(cc, rule, "domain")

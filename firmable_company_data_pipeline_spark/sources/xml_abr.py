@@ -19,6 +19,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# Exactly the fields read_abr_xml projects, all as strings.  A fixed
+# schema spares every read a schema-inference job (a whole extra parse of
+# the bulk extract) and keeps Postcode textual: inference types it bigint,
+# which turns NT's "0800" into "800".  A bare <ABN>123</ABN> still lands
+# in _VALUE, and an absent element reads as NULL — the reference's
+# find()-returns-None tolerance (extract/abr_parser.py:51-68).
+ABR_XML_SCHEMA = (
+    "ABN struct<_VALUE: string, _status: string, _ABNStatusFromDate: string>, "
+    "EntityType struct<EntityTypeText: string>, "
+    "MainEntity struct<"
+    "NonIndividualName: struct<NonIndividualNameText: string>, "
+    "BusinessAddress: struct<AddressDetails: struct<State: string, Postcode: string>>>"
+)
+
 
 def read_abr_xml(spark: SparkSession, path: str) -> DataFrame:
     """Read ABR XML into the staging schema (stg.abr_raw_companies analog,
@@ -31,59 +45,25 @@ def read_abr_xml(spark: SparkSession, path: str) -> DataFrame:
     """
     raw = (
         spark.read.format("xml")
+        .schema(ABR_XML_SCHEMA)
         .option("rowTag", "ABR")
         # attributes surface as _<name>; element text with attributes as _VALUE
         .option("attributePrefix", "_")
         .option("valueTag", "_VALUE")
         .load(path)
     )
-    abn_text, abn_status, abn_from = _abn_fields(raw)
-    state = _opt(raw, "MainEntity.BusinessAddress.AddressDetails.State")
-    postcode = _opt(raw, "MainEntity.BusinessAddress.AddressDetails.Postcode")
+    state = F.col("MainEntity.BusinessAddress.AddressDetails.State")
+    postcode = F.col("MainEntity.BusinessAddress.AddressDetails.Postcode")
     return raw.select(
-        abn_text.alias("abn"),
-        _opt(raw, "MainEntity.NonIndividualName.NonIndividualNameText").alias("entity_name"),
-        _opt(raw, "EntityType.EntityTypeText").alias("entity_type"),
-        abn_status.alias("entity_status"),
+        F.col("ABN._VALUE").alias("abn"),
+        F.col("MainEntity.NonIndividualName.NonIndividualNameText").alias("entity_name"),
+        F.col("EntityType.EntityTypeText").alias("entity_type"),
+        F.col("ABN._status").alias("entity_status"),
         # address = f"{state} {postcode}" only when both present (line 66)
         F.when(
             state.isNotNull() & postcode.isNotNull(), F.concat_ws(" ", state, postcode)
         ).alias("address"),
         postcode.alias("postcode"),
         state.alias("state"),
-        F.to_date(abn_from, "yyyyMMdd").alias("start_date"),
+        F.to_date(F.col("ABN._ABNStatusFromDate"), "yyyyMMdd").alias("start_date"),
     )
-
-
-def _abn_fields(df: DataFrame):
-    """ABN element text + status/from-date attributes, tolerant of the
-    element arriving as a bare string (no attributes) or a struct."""
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    abn_type = schema.get("ABN")
-    if abn_type is not None and abn_type.typeName() == "struct":
-        names = [f.name for f in abn_type.fields]
-        text = F.col("ABN._VALUE") if "_VALUE" in names else F.lit(None)
-        status = F.col("ABN._status") if "_status" in names else F.lit(None)
-        from_date = (
-            F.col("ABN._ABNStatusFromDate") if "_ABNStatusFromDate" in names else F.lit(None)
-        )
-        return text.cast("string"), status.cast("string"), from_date.cast("string")
-    if abn_type is not None:
-        return F.col("ABN").cast("string"), F.lit(None).cast("string"), F.lit(None).cast("string")
-    return (
-        F.lit(None).cast("string"),
-        F.lit(None).cast("string"),
-        F.lit(None).cast("string"),
-    )
-
-
-def _opt(df: DataFrame, dotted: str):
-    """Nested column if the path's root exists in the schema, else NULL —
-    mirrors the reference's find()-returns-None tolerance."""
-    root = dotted.split(".")[0]
-    if root in df.columns:
-        try:
-            return F.col(dotted).cast("string")
-        except Exception:  # pragma: no cover
-            return F.lit(None).cast("string")
-    return F.lit(None).cast("string")

@@ -54,8 +54,10 @@ def abr_xml_path(tmp_path_factory):
             _abr_xml_record(abn, "ACT", "20200101", "Australian Private Company",
                             name, "NSW", str(2000 + num % 999))
         )
-    # one record with missing optional fields (NULL tolerance)
+    # one record with missing optional fields (NULL tolerance), and one
+    # bare <ABN> without attributes (its text still reads as the ABN)
     records.append("<ABR><ABN status=\"CAN\">99999999999</ABN></ABR>")
+    records.append("<ABR><ABN>88888888888</ABN></ABR>")
     (d / "part1.xml").write_text(
         "<Transfer>" + "\n".join(records) + "</Transfer>"
     )
@@ -87,7 +89,7 @@ def cc_index_path(tmp_path_factory):
 def test_read_abr_xml(spark, abr_xml_path):
     df = read_abr_xml(spark, abr_xml_path)
     rows = {r.abn: r for r in df.collect()}
-    assert len(rows) == 4
+    assert len(rows) == 5
     num = sum(ord(c) for c in SLUGS[0])
     abn0 = _checksum_valid_abn(num)
     r = rows[abn0]
@@ -100,6 +102,8 @@ def test_read_abr_xml(spark, abr_xml_path):
     # NULL tolerance for sparse record
     sparse = rows["99999999999"]
     assert sparse.entity_name is None and sparse.address is None and sparse.start_date is None
+    bare = rows["88888888888"]
+    assert bare.entity_status is None and bare.postcode is None
 
 
 def test_cc_index_and_fetch_parse(spark, cc_index_path):
@@ -206,6 +210,103 @@ def test_run_pipeline_ccfetch_arm_matches_default(spark, cc_index_path, abr_xml_
         )
 
 
+def _executed_operators(df) -> list[str]:
+    """Names of the physical operators one execution of ``df`` runs,
+    each operator ONCE: AQE final plans, query stages and the cached
+    sub-plans behind every InMemoryTableScan, deduplicated by JVM object
+    identity (every use of one cache shares its cached plan object).
+    Formatted explain re-lists each executed AQE sub-plan's initial plan
+    under fresh node ids, so counting its lines would double-count."""
+    jvm = df.sparkSession._jvm
+    seen, names = set(), []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        key = jvm.System.identityHashCode(node)
+        if key in seen:
+            continue
+        seen.add(key)
+        names.append(node.nodeName().strip())
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif kind == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_run_pipeline_extracts_each_source_once(
+    spark, cc_index_path, abr_xml_path, tmp_path, jobs_during
+):
+    """One pass extracts and cleans each source ONCE: match_cascade
+    persists its fanned-out inputs, so the index scan, the fetch and
+    parse mapInPandas stages and the XML scan each run once, counted
+    across the cached sub-plans of an executed pass.  Building the
+    pipeline starts no job — the fixed ABR schema leaves no inference
+    pass."""
+    spark.catalog.clearCache()
+    built = []
+    n_jobs = jobs_during(
+        lambda: built.append(
+            run_pipeline(
+                spark, cc_index_path, abr_xml_path,
+                fetch_client=StubFetchClient(), enable_llm=True,
+            )
+        )
+    )
+    assert n_jobs == 0
+    df = built[0]
+    df.write.parquet(str(tmp_path / "dim"))
+    ops = _executed_operators(df)
+    assert ops.count("Scan json") == 1, ops
+    assert ops.count("Scan xml") == 1, ops
+    assert ops.count("MapInPandas") == 2, ops
+    spark.catalog.clearCache()
+
+
+def test_abr_postcode_keeps_leading_zero(spark, tmp_path):
+    """NT postcodes start with 0: the ABR side must keep "0800" as
+    text (XML inference typed Postcode bigint and turned it into "800"),
+    or a crawl page in 0800 can never share a block with its register
+    row."""
+    abn = _checksum_valid_abn(800)
+    xml = tmp_path / "nt.xml"
+    xml.write_text(
+        "<Transfer>"
+        + _abr_xml_record(abn, "ACT", "20200101", "Australian Private Company",
+                          "Darwin Traders", "NT", "0800")
+        + "</Transfer>"
+    )
+    abr = clean_abr_data(read_abr_xml(spark, str(xml))).collect()
+    assert [(r.postcode, r.address) for r in abr] == [("0800", "NT 0800")]
+
+    class NoAbnPage:
+        """A page naming no ABN, so only the fuzzy tier can match it."""
+
+        def fetch(self, url, filename, offset, length):
+            return (
+                "<html><head><title>Darwin Traders</title></head>"
+                "<body><p>Visit us in Darwin NT 0800.</p></body></html>"
+            )
+
+    idx = tmp_path / "index.json"
+    idx.write_text(json.dumps({
+        "url": "https://www.darwin-traders.com.au/",
+        "filename": "crawl-data/seg/0.warc.gz",
+        "offset": "0",
+        "length": "500",
+    }))
+    out = run_pipeline(spark, str(idx), str(xml), fetch_client=NoAbnPage()).collect()
+    assert [(r.domain, r.match_method, r.abr_abn, r.abr_postcode) for r in out] == [
+        ("darwin-traders.com.au", "fuzzy", abn, "0800")
+    ]
+
+
 def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     """Two tables bucketed on the join key join without an Exchange —
     the co-located-join layout claimed in README's scale design."""
@@ -293,7 +394,10 @@ def test_run_pipeline_observed_metrics(spark, cc_index_path, abr_xml_path):
     abr = obs["cleaned_abr"].get
     assert cc["n_rows"] == len(SLUGS) == n_out
     assert cc["n_with_abn"] == len(SLUGS)  # every stub page carries an ABN
-    assert abr["n_rows"] >= len(SLUGS)
+    # the observed frames sit inside match_cascade's shared input cache:
+    # the counts must still be exact, never a silent 0
+    assert abr["n_rows"] == clean_abr_data(read_abr_xml(spark, abr_xml_path)).count()
+    assert abr["n_rows"] > 0 and abr["n_with_abn"] > 0
 
 
 def test_strip_html_pathological_cases():
