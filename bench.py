@@ -16,241 +16,35 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set: one per operator family (scan+agg, join+topN, star join,
-# semi join, window, similarity-match cascade, dedup, ANN — extended as
-# milestones land).
-#
-# MEMBERSHIP RULE (round 6, ending the drift class): every registered
-# query belongs here EXCEPT
+# Headline set: every registered query EXCEPT
 #   (a) scalar-function demos and point lookups whose cost is session
-#       overhead, not plan execution: fn_clean_text, fn_domain_company,
-#       fn_abn_checksum, fn_extract_abn_text, fn_contacts,
-#       fn_standardize_state, fn_clean_company_name, fn_dates,
-#       fn_snippet, order_lookup (fn_jaro_winkler and
+#       overhead, not plan execution (fn_jaro_winkler and
 #       fn_token_sort_ratio stay as the family's representatives);
 #   (b) variants fully dominated by a listed query: orders_page
 #       (orders_page_keyset is the listed twin), dedup_clusters
 #       (contained in dup_cluster_size_histogram and run by
 #       dedup_clusters_star), match_rule_based and match_llm_stub
 #       (stages of the listed match_cascade_full).
-# When adding a query, add it here unless it falls under (a)/(b) —
-# tests/test_cli.py::test_headline_membership_rule enforces the
-# reconciliation.  README's headline count is len(HEADLINE).
-HEADLINE = [
-    "pricing_summary",
-    "top_revenue_orders",
-    "nation_revenue",
-    "order_priority_semi",
-    "top1_order_per_customer",
-    "running_order_total",
-    "fn_token_sort_ratio",
-    "match_fuzzy_blocked",
-    "text_stats",
-    "dedup_ngram_jaccard",
-    "dedup_winnow",
-    "dedup_incremental_winnow",
-    "winnow_match_spans",
-    "winnow_match_runs",
-    "winnow_pair_report",
-    "dedup_blocks",
-    "dedup_incremental_blocks",
-    "winnow_contamination",
-    "dsir_select",
-    "dsir_resample",
-    "dsir_resample_by_source",
-    "decontaminate_corpus",
-    "dedup_winnow_keep_best",
-    "quality_classifier_score",
-    "quality_classifier_eval",
-    "quality_classifier_sweep",
-    "trigram_lm_score",
-    "bpe_train",
-    "ann_pq",
-    "build_training_corpus",
-    "corpus_attrition_card",
-    "lm_perplexity_bins",
-    "distinct_ngram_diversity",
-    "quality_ensemble_topk",
-    "ann_ivf_pq_residual",
-    "ivf_pq_topk",
-    "line_dedup_rewrite",
-    "zipf_fit_report",
-    "weighted_corpus_sample",
-    "nucleus_token_budget",
-    "char_entropy_quality",
-    "benford_revenue_audit",
-    "skyline_suppliers",
-    "match_sorted_neighborhood",
-    "ks_drift_orders",
-    "order_price_outliers_mad",
-    "unpivot_part_metrics",
-    "ann_mmr_rerank",
-    "bloom_filtered_lineitems",
-    "kmv_distinct_users",
-    "kmv_join_cardinality",
-    "part_copurchase_bfs",
-    "dedup_bcubed_eval",
-    "asof_next_purchase",
-    "weighted_median_price",
-    # round 13
-    "asof_nearest_event",
-    "overdue_orders_by_priority",
-    "local_supplier_region_revenue",
-    "part_revenue_share_screen",
-    "dedup_effectiveness_report",
-    "training_shuffle_shards",
-    "padding_efficiency_report",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "substring_dup_spans",
-    "contamination_check",
-    "ann_brute_force",
-    "ann_lsh_bucketed",
-    "ann_quantized",
-    "events_session_5m",
-    "multimodal_features",
-    "match_cascade_full",
-    "ann_ivf",
-    "jsonld_flatten",
-    "clean_abr_pipeline",
-    "dq_summary",
-    "dim_merge_upsert",
-    "column_profile_orders",
-    "asof_purchase_attribution",
-    "priority_year_pivot",
-    "nation_order_quantiles",
-    "events_hourly_daily_rollup",
-    "doc_top_terms",
-    "dedup_incremental_minhash",
-    "quality_repetition",
-    "train_split_stratified",
-    "seq_packing_plan",
-    "unigram_surprise_score",
-    "semantic_dedup",
-    "curate_corpus",
-    "chunk_documents",
-    "bm25_search",
-    "random_projection",
-    "dataset_mixing_plan",
-    "vocab_pair_counts",
-    "funnel_conversion",
-    "user_retention_cohorts",
-    "quality_prune_per_source",
-    "k_anonymity_customers",
-    "apply_mixing_plan",
-    "vocab_coverage",
-    "embedding_norm_histogram",
-    "pagerank_neardup",
-    "waiting_suppliers",
-    "customer_order_histogram",
-    "lineitem_correlations",
-    "common_event_paths",
-    "events_trending",
-    "customer_rfm",
-    "events_daily_anomalies",
-    "events_ewma_daily",
-    "part_affinity",
-    "hybrid_search_rrf",
-    "bigram_surprise_score",
-    "salted_user_event_stats",
-    "match_phonetic_blocked",
-    "small_quantity_revenue",
-    "min_cost_supplier",
-    "copurchase_triangles",
-    "user_value_records",
-    "media_phash_dups",
-    "media_frame_plan",
-    "events_rollup_incremental",
-    "bpe_tokenize_stats",
-    "incremental_distinct_users",
-    "customer_360",
-    "events_late_audit",
-    "customer_hierarchy_rollup",
-    "events_daily_gapfill",
-    "part_revenue_pareto",
-    "user_week_over_week",
-    "fn_jaro_winkler",
-    "match_quality_report",
-    "promo_revenue_share",
-    "disjunctive_predicate_revenue",
-    "funnel_time_to_convert",
-    "media_resize_checksum",
-    "embedding_standardize",
-    "order_percentile_ranks",
-    "unshipped_order_revenue",
-    # round 5
-    "forecast_revenue_change",
-    "product_type_profit",
-    "returned_item_customers",
-    "late_shipment_priority_counts",
-    "supplier_part_brands",
-    "supplier_nation_cube",
-    "event_transition_matrix",
-    "customer_order_gaps",
-    "dup_cluster_size_histogram",
-    "cross_source_shingle_overlap",
-    "doc_length_deciles",
-    "source_lang_confusion",
-    "tokenizer_fertility",
-    "term_cms_heavy_hitters",
-    "cms_contamination_probe",
-    # round 6
-    "cms_error_contract",
-    "dedup_clusters_star",
-    # round 6: the membership-rule reconciliation — every remaining
-    # registered query that executes a real plan
-    "customers_without_orders",
-    "distinct_order_dims",
-    "events_lag_delta",
-    "union_missing_columns",
-    "orders_page_keyset",
-    "priority_price_stats",
-    "events_json_k",
-    "priority_status_rollup",
-    "nation_trade_volume",
-    "market_share",
-    "top_supplier_revenue",
-    "corpus_profile_by_source",
-    "corpus_quality_filter",
-    "corpus_sample",
-    "dedup_exact",
-    "dedup_embedding_cosine",
-    "label_centroids",
-    "events_tumbling_1h",
-    "events_sliding_10m",
-    "events_dedup_union",
-    "events_click_error_join",
-    "events_user_seq",
-    "events_variant_stats",
-    "large_orders",
-    "global_sales_opportunity",
-    "excess_suppliers",
-    "skew_report_events",
-    "order_price_band_stats",
-    "approx_distinct_users",
-    "approx_median_value",
-    "pii_redaction",
-    "ann_recall_report",
-    "curation_report",
-    "funnel_user_stages",
-    "l_diversity_customers",
-    "dedup_clusters_incremental",
-    "dedup_clusters_incremental2",
-    "dedup_clusters_incremental_sliver",
-    "scd2_point_in_time",
-    "corpus_snapshot_diff",
-    "boilerplate_screen",
-    "corpus_drift_psi",
-    "embedding_drift",
-    "dedup_keep_best",
-    "minhash_recall_report",
-    "ann_ivf_incremental",
-    "scd2_customer_history",
-    "scd2_order_priority_history",
-    "fk_integrity_audit",
-    "leakage_safe_split",
-    "value_quantile_sketch",
-]
+# A new query is benched by registering it; exclude it here only if it
+# falls under (a)/(b).  tests/test_cli.py::test_headline_membership_rule
+# pins that every exclusion names a registered query.  README's
+# headline count is len(headline(queries())).
+SCALAR_DEMOS = frozenset({
+    "fn_clean_text", "fn_domain_company", "fn_abn_checksum",
+    "fn_extract_abn_text", "fn_contacts", "fn_standardize_state",
+    "fn_clean_company_name", "fn_dates", "fn_snippet", "order_lookup",
+})
+DOMINATED = frozenset({
+    "orders_page", "dedup_clusters", "match_rule_based", "match_llm_stub",
+})
+
+
+def headline(queries) -> list[str]:
+    """The benched query names, in registry order: ``queries`` (the
+    registry mapping) minus the two exclusion sets.  Computed at run
+    time, never at import — perfbench imports this module for
+    ``clear_cached_state`` and must not pay a registry walk."""
+    return [n for n in queries if n not in SCALAR_DEMOS | DOMINATED]
 
 
 def clear_cached_state(spark):
@@ -356,7 +150,7 @@ def main():
 
     spark = get_spark("firmable-bench")
     qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs]
+    names = headline(qs)
 
     # Warm the JVM/session on the smallest table once, and fork the Python
     # UDF workers (pandas/numpy import per worker is a one-time cost that

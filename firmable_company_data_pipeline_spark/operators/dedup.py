@@ -1665,10 +1665,32 @@ def winnow_contamination(
     # the cache the corpus gram scan runs twice
     rows = rows.localCheckpoint(eager=False)
     is_eval = (F.col("id") % eval_mod) == 0
-    tr = rows.filter(~is_eval).select(
-        F.col("id").alias("train_id"), "fp"
+    return fp_containment_flags(
+        rows.filter(~is_eval), rows.filter(is_eval), min_shared, min_containment
     )
-    ev = rows.filter(is_eval).select(
+
+
+def fp_containment_flags(
+    train_rows: DataFrame,
+    eval_rows: DataFrame,
+    min_shared: int = 2,
+    min_containment: float = 0.0,
+) -> DataFrame:
+    """The contamination rule over winnow fingerprint rows (id, n_fp,
+    fp): a training document is flagged against an eval document when
+    it shares ≥ ``min_shared`` fingerprints with it AND covers ≥
+    ``min_containment`` of the eval document's fingerprints.  Output:
+    (train_id, eval_id, shared, eval_containment), the containment
+    rounded to 6 places.
+
+    One definition for the batch screen (:func:`winnow_contamination`),
+    the stream screen against a frozen eval index
+    (``streaming.jobs.streaming_frozen_score``) and the ingest verdict
+    of ``streaming.jobs.streaming_corpus_screen``.  Bipartite: one
+    inverted-index equi-join train-left/eval-right and one pair-key
+    aggregation; a broadcast hint on ``eval_rows`` carries through."""
+    tr = train_rows.select(F.col("id").alias("train_id"), "fp")
+    ev = eval_rows.select(
         F.col("id").alias("eval_id"), F.col("n_fp").alias("ne"), "fp"
     )
     return (

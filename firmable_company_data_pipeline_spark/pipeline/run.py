@@ -47,6 +47,9 @@ def run_commoncrawl_extraction(
       Arm equality is pinned end-to-end by
       tests/test_sources_pipeline.py.
     """
+    # match_cascade leaves its inputs persisted; without the refresh a
+    # later pass over a file rewritten in place is served the old rows
+    spark.catalog.refreshByPath(index_path)
     if source == "ccfetch":
         from firmable_company_data_pipeline_spark.sources.commoncrawl import (
             derive_staging_fields,
@@ -83,7 +86,9 @@ def run_commoncrawl_extraction(
 
 
 def parse_abr_xml(spark: SparkSession, xml_path: str, limit: int | None = None) -> DataFrame:
-    """ABR bulk XML → staging rows (S1/S2)."""
+    """ABR bulk XML → staging rows (S1/S2).  Re-reads a file rewritten
+    in place (see ``run_commoncrawl_extraction``)."""
+    spark.catalog.refreshByPath(xml_path)
     df = read_abr_xml(spark, xml_path)
     return df.limit(limit) if limit else df
 

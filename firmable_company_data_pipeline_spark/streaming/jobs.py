@@ -83,6 +83,98 @@ def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
+# The fold skeleton.  Every foreachBatch fold below is built from these
+# helpers and states only what differs: it starts through _start, reads
+# an index's history through _history, and writes each per-batch output
+# through _write_batch.  A new fold follows the same rule
+# (tests/test_streaming.py pins it by scanning this file).
+
+
+def _start(stream: DataFrame, fold, checkpoint: str | None):
+    """Start ``fold(batch_df, batch_id)`` as the ``foreachBatch`` sink of
+    ``stream`` — the one start of every fold in this module.  The
+    ``availableNow`` trigger drains a fixed file set deterministically;
+    the checkpoint, when given, makes a restarted stream resume and
+    replay its last uncommitted batch."""
+    writer = stream.writeStream.foreachBatch(fold).trigger(availableNow=True)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
+
+
+def _write_batch(
+    df: DataFrame,
+    base_dir: str,
+    batch_id: int,
+    by: str | None = None,
+    key: str = "batch_id",
+    shuffle: bool = True,
+) -> str:
+    """Overwrite ONE batch-keyed partition, ``base_dir/<key>=<batch_id>``,
+    and return its path (a fold's commit marker goes into it).  Writing per
+    batch with overwrite is what makes every fold replay-safe: a
+    redelivered micro-batch rewrites its own partition instead of
+    duplicating rows — the parquet emulation of an idempotent MERGE.
+    ``key`` is ``batch_id`` for indexes and outputs, ``batch`` for
+    sketch partials and state snapshots, ``gen`` for label generations.
+
+    ``by`` partitions the batch directory by that column.  The batch is
+    repartitioned by it first, so each value lands in one task: at most
+    one file per value instead of tasks x values, for an O(batch)
+    exchange that never touches the index.  ``shuffle=False`` keeps the
+    batch's own tasks, for a fold that stays map-only (the IVF index)."""
+    path = f"{base_dir.rstrip('/')}/{key}={batch_id}"
+    if by is not None and shuffle:
+        df = df.repartition(by)
+    writer = df.write.mode("overwrite")
+    if by is not None:
+        writer = writer.partitionBy(by)
+    writer.parquet(path)
+    return path
+
+
+def _history(
+    spark: SparkSession,
+    index_dir: str,
+    batch_id: int,
+    touched: DataFrame | None = None,
+) -> DataFrame | None:
+    """A batch-keyed index as a fold reads it: every partition except
+    the replaying batch's own, or None when the index does not exist.
+
+    Excluding the own partition is the replay half of idempotency: on a
+    checkpoint replay (crash after the index write, before the commit)
+    the batch's rows are already in the index, and reading them back as
+    history would pair the batch with itself — duplicate output rows.
+
+    ``touched`` is a one-column frame named after a partition column of
+    the index (``bucket``/``pbucket``).  When the index is laid out by
+    that column, the read is pruned to the frame's distinct values: at
+    most ``n_buckets`` of them, collected to the driver (the O(1)-rows
+    contract of the high-water-mark reads in sources/io.py).  A flat
+    index is read whole."""
+    raw = _read_parquet_or_none(spark, index_dir)
+    if raw is None:
+        return None
+    hist = raw.filter(F.col("batch_id") != batch_id)
+    col = touched.columns[0] if touched is not None else None
+    if col in raw.columns:
+        values = [r[0] for r in touched.distinct().collect()]
+        hist = hist.filter(F.col(col).isin(values))
+    return hist
+
+
+def _read_partials(spark: SparkSession, target_dir: str, empty_ddl: str) -> DataFrame:
+    """Every ``batch=<id>`` partial of a sketch target, or an empty
+    frame of schema ``empty_ddl`` when no batch has landed yet — a
+    reader polling before first data sees "no observations" (an absent
+    key's estimate is exactly 0), never PATH_NOT_FOUND.  Emptiness is
+    detected through Spark's own filesystem, not a local ``glob``,
+    which misreports remote targets."""
+    raw = _read_parquet_or_none(spark, target_dir.rstrip("/") + "/batch=*")
+    return spark.createDataFrame([], empty_ddl) if raw is None else raw
+
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -252,30 +344,8 @@ def foreach_batch_upsert(
         # physical layout — an upsert run with a different n_buckets
         # would hash keys into different buckets, anti-join only the
         # new buckets, and leave stale rows alive in the old ones
-        # (silent duplicate keys).  The guard lists ALL _N_BUCKETS_*
-        # markers (not just the current count's): any marker for a
-        # DIFFERENT count fails the fold, so two incompatible layouts
-        # can never both look declared (review r8 second pass).  NO '='
-        # in the name: underscore-prefixed paths are only hidden from
-        # Spark's file index when they don't look like partition paths.
-        existing = _bucket_markers(spark, target_dir)
-        if existing and existing != [n_buckets]:
-            raise ValueError(
-                f"upsert target {target_dir} is declared with "
-                f"n_buckets {existing}, not {n_buckets}; rebucketing "
-                "requires a full reload"
-            )
-        if not existing:
-            if _read_parquet_or_none(spark, target_dir) is not None:
-                raise ValueError(
-                    f"upsert target {target_dir} carries no "
-                    "_N_BUCKETS_* layout marker: it was seeded "
-                    "externally without declare_upsert_layout()"
-                )
-            fs, marker = _hadoop_fs(
-                spark, target_dir.rstrip("/") + f"/_N_BUCKETS_{n_buckets}"
-            )
-            fs.createNewFile(marker)
+        # (silent duplicate keys)
+        _pin_bucket_count(spark, target_dir, n_buckets)
         incoming = batch_df.dropDuplicates([key]).withColumn(
             "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))
         )
@@ -297,10 +367,7 @@ def foreach_batch_upsert(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("_bucket").parquet(target_dir)
 
-    writer = events.writeStream.foreachBatch(upsert).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(events, upsert, checkpoint)
 
 
 def _batch_partition_ids(spark, index_dir: str) -> list[int]:
@@ -372,21 +439,23 @@ def declare_upsert_layout(spark, target_dir: str, n_buckets: int = 32) -> None:
 
 
 def _pin_bucket_count(spark, target_dir: str, n_buckets: int) -> None:
-    """Pin a bucketed directory's bucket count with the upsert sink's
-    ``_N_BUCKETS_*`` marker (review r10): every bucketed layout this
-    module maintains (winnow index + df partials, banded minhash index,
+    """Pin a bucketed directory's bucket count with a ``_N_BUCKETS_*``
+    marker: every bucketed layout this module maintains
+    (upsert target, winnow index + df partials, banded minhash index,
     bucketed labels) prunes reads or routes writes by ``value % n`` —
     a restart with a different ``n`` would prune against partitions
     laid out under the old modulus and silently drop index rows
-    (missed pairs, undercounted df caps) or strand stale label rows.
+    (missed pairs, undercounted df caps) or strand stale rows.
     The first fold declares the count; every later fold fails loudly on
-    a mismatch.  A NON-EMPTY target without a marker is refused
-    (advice r10 — the same guard ``foreach_batch_upsert`` already has):
-    silently adopting the fold's ``n`` for a directory seeded under a
-    DIFFERENT modulus would partition-prune against the wrong bucket
-    assignment and drop index rows (missed pairs, undercounted df
-    caps).  External seeders declare their layout via
-    :func:`declare_upsert_layout` (the scale-probe seeds do)."""
+    a mismatch.  The guard lists ALL markers, not just the current
+    count's, so two incompatible layouts can never both look declared.
+    A NON-EMPTY target without a marker is refused: silently adopting the fold's ``n`` for a
+    directory seeded under a DIFFERENT modulus would partition-prune
+    against the wrong bucket assignment and drop index rows.  External
+    seeders declare their layout via :func:`declare_upsert_layout` (the
+    scale-probe seeds do).  NO '=' in the marker name: underscore-
+    prefixed paths are only hidden from Spark's file index when they
+    don't look like partition paths."""
     existing = _bucket_markers(spark, target_dir)
     if existing and existing != [n_buckets]:
         raise ValueError(
@@ -491,12 +560,11 @@ def streaming_minhash_dedup(
     3. writes discovered pairs to ``pairs_dir/batch_id=N`` and the new
        signatures to ``index_dir/batch_id=N``.
 
-    Per-batch writes go to batch-keyed partition directories with
-    overwrite, so a replayed micro-batch (checkpoint recovery) rewrites
-    its own partition instead of duplicating rows — the parquet
-    emulation of an idempotent MERGE (with Delta/Iceberg this becomes a
-    real transactional append).  Reading ``index_dir``/``pairs_dir``
-    with partition discovery unions all batches.
+    Replay-safe through the fold skeleton (``_history`` excludes the
+    batch's own partition, ``_write_batch`` overwrites it; with
+    Delta/Iceberg this becomes a real transactional append).  Reading
+    ``index_dir``/``pairs_dir`` with partition discovery unions all
+    batches.
 
     State never lives in the streaming engine: the index IS the parquet
     directory, so the job restarts from checkpoint with no state-store
@@ -541,40 +609,21 @@ def streaming_minhash_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         delta = dd.minhash_signatures(batch_df).persist()
-        raw_index = _read_parquet_or_none(spark, index_dir)
+        # banded once, shared by the touched-pbucket collect and the index
+        # append; lazy, so a flat index never computes it
+        bands = dd.minhash_band_rows(delta, n_buckets).persist()
+        hist = _history(spark, index_dir, batch_id, bands.select("pbucket"))
         # an existing index's layout wins over the parameter (writes
         # must follow reads or partition discovery would see
         # conflicting directory depths)
-        use_banded = (
-            banded if raw_index is None else "pbucket" in raw_index.columns
-        )
-        bands = None
+        use_banded = banded if hist is None else "pbucket" in hist.columns
+        index = index_bands = None
         if use_banded:
             _pin_bucket_count(spark, index_dir, n_buckets)
-            # banded once, shared by the pbucket collect and the index
-            # append (review r10: the band expansion ran twice per batch)
-            bands = dd.minhash_band_rows(delta, n_buckets).persist()
-        index = index_bands = None
-        if raw_index is not None:
-            # Exclude THIS batch's partition: on checkpoint replay (crash
-            # after the index write, before the commit) the batch's own
-            # signatures are already in the index tagged as history, and
-            # reading them back would re-pair the batch against itself in
-            # both orientations — duplicate pair rows, violating the
-            # idempotent-replay contract below.
-            hist = raw_index.filter(F.col("batch_id") != batch_id)
-            if use_banded:
-                # partition-prune the index scan to the delta's touched
-                # pbuckets (<= n_buckets values; the O(1)-rows contract)
-                pbks = [
-                    r[0]
-                    for r in bands.select("pbucket").distinct().collect()
-                ]
-                index_bands = hist.filter(F.col("pbucket").isin(pbks)).select(
-                    "id", "sig", "band", "bucket"
-                )
-            else:
-                index = hist.select("id", "sig")
+            if hist is not None:
+                index_bands = hist.select("id", "sig", "band", "bucket")
+        elif hist is not None:
+            index = hist.select("id", "sig")
         if index is None and index_bands is None:
             index = spark.createDataFrame([], delta.schema)
         # broadcast_delta (caller-controlled, see docstring): bounded
@@ -590,85 +639,74 @@ def streaming_minhash_dedup(
         )
         if labels_dir is not None:
             pairs = pairs.persist()
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch_id={batch_id}")
-        )
+        _write_batch(pairs, pairs_dir, batch_id)
         if use_banded:
-            # repartition by the partition column first: without it each
-            # of the delta's shuffle partitions writes every pbucket it
-            # holds (up to tasks x n_buckets files per batch); after it,
-            # each pbucket lands in exactly one task — <= n_buckets
-            # files.  O(delta) exchange, never the index.
-            bands.repartition("pbucket").write.mode("overwrite").partitionBy(
-                "pbucket"
-            ).parquet(os.path.join(index_dir, f"batch_id={batch_id}"))
+            _write_batch(bands, index_dir, batch_id, by="pbucket")
         else:
-            delta.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"batch_id={batch_id}")
-            )
-        if labels_dir is not None and (
-            _labels_layout_of(spark, labels_dir) or labels_layout
-        ) == "bucketed":
-            _fold_labels_bucketed(
-                spark, labels_dir, pairs, batch_id, n_label_buckets
-            )
-            pairs.unpersist()
-            if bands is not None:
-                bands.unpersist()
-            delta.unpersist()
-            return
+            _write_batch(delta, index_dir, batch_id)
         if labels_dir is not None:
-            import json as _json
-
-            all_gens = _label_gens(labels_dir, spark=spark)
-            prev_gens = sorted(g for g in all_gens if g < batch_id)
-            _repair_label_manifest(labels_dir, batch_id, prev_gens, spark=spark)
-            if prev_gens:
-                prev = spark.read.parquet(
-                    os.path.join(labels_dir, f"gen={prev_gens[-1]}")
+            if (
+                _labels_layout_of(spark, labels_dir) or labels_layout
+            ) == "bucketed":
+                _fold_labels_bucketed(
+                    spark, labels_dir, pairs, batch_id, n_label_buckets
                 )
             else:
-                # type-correct empty labeling derived from the pair ids
-                prev = pairs.select(
-                    F.col("id_a").alias("doc_id"), F.col("id_a").alias("cluster_id")
-                ).limit(0)
-            labels = dd.incremental_components(prev, pairs)
-            labels.write.mode("overwrite").parquet(
-                os.path.join(labels_dir, f"gen={batch_id}")
-            )
-            # publish atomically AFTER the write: readers resolve via the
-            # manifest, so a crash mid-write can never surface a partial
-            # generation (review r6; the compact_rollup rename pattern)
-            _fs_write_text(
-                spark,
-                os.path.join(labels_dir, "_latest.json"),
-                _json.dumps({"gen": batch_id}),
-            )
-            # ALL deletion happens only after the new generation exists
-            # and the manifest points at it (advice r6: deleting dead-run
-            # generations up front meant a crash between the delete and
-            # the republish destroyed the last good labeling).
-            # (1) generations ABOVE this batch id are remnants of a dead
-            # run (checkpoint reset restarts batch ids at 0) — left in
-            # place they'd be read as "previous" once this run's ids pass
-            # them and would shadow read_dedup_labels forever (review r6);
-            # gen == batch_id was just overwritten by this batch's write.
-            for g in (g for g in all_gens if g > batch_id):
-                _rmtree_any(spark, os.path.join(labels_dir, f"gen={g}"))
-            # (2) prune history the NEXT replay can no longer need:
-            # anything older than the generation this batch read from
-            if prev_gens:
-                for g in prev_gens[:-1]:
-                    _rmtree_any(spark, os.path.join(labels_dir, f"gen={g}"))
+                _fold_labels_gen(spark, labels_dir, pairs, batch_id)
             pairs.unpersist()
-        if bands is not None:
-            bands.unpersist()
+        bands.unpersist()
         delta.unpersist()
 
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(docs, process, checkpoint)
+
+
+def _fold_labels_gen(
+    spark, labels_dir: str, pairs: DataFrame, batch_id: int
+) -> None:
+    """Fold a batch's delta pairs into the newest label generation below
+    ``batch_id`` and publish the result as ``gen=<batch_id>`` (see
+    :func:`streaming_minhash_dedup` for the generation protocol)."""
+    import json as _json
+
+    from firmable_company_data_pipeline_spark.operators import dedup as dd
+
+    all_gens = _label_gens(labels_dir, spark=spark)
+    prev_gens = sorted(g for g in all_gens if g < batch_id)
+    _repair_label_manifest(labels_dir, batch_id, prev_gens, spark=spark)
+    if prev_gens:
+        prev = spark.read.parquet(
+            os.path.join(labels_dir, f"gen={prev_gens[-1]}")
+        )
+    else:
+        # type-correct empty labeling derived from the pair ids
+        prev = pairs.select(
+            F.col("id_a").alias("doc_id"), F.col("id_a").alias("cluster_id")
+        ).limit(0)
+    labels = dd.incremental_components(prev, pairs)
+    _write_batch(labels, labels_dir, batch_id, key="gen")
+    # publish atomically AFTER the write: readers resolve via the
+    # manifest, so a crash mid-write can never surface a partial
+    # generation (the compact_rollup rename pattern)
+    _fs_write_text(
+        spark,
+        os.path.join(labels_dir, "_latest.json"),
+        _json.dumps({"gen": batch_id}),
+    )
+    # ALL deletion happens only after the new generation exists
+    # and the manifest points at it: deleting dead-run generations up
+    # front would let a crash between the delete and the republish
+    # destroy the last good labeling.
+    # (1) generations ABOVE this batch id are remnants of a dead
+    # run (checkpoint reset restarts batch ids at 0) — left in
+    # place they'd be read as "previous" once this run's ids pass
+    # them and would shadow read_dedup_labels forever;
+    # gen == batch_id was just overwritten by this batch's write.
+    for g in (g for g in all_gens if g > batch_id):
+        _rmtree_any(spark, os.path.join(labels_dir, f"gen={g}"))
+    # (2) prune history the NEXT replay can no longer need:
+    # anything older than the generation this batch read from
+    for g in prev_gens[:-1]:
+        _rmtree_any(spark, os.path.join(labels_dir, f"gen={g}"))
 
 
 def streaming_winnow_dedup(
@@ -752,57 +790,34 @@ def streaming_winnow_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         delta = dd.winnow_fingerprint_rows(batch_df).persist()
-        raw_index = _read_parquet_or_none(spark, index_dir)
+        # only index/df rows whose fp occurs in the delta can join or
+        # feed the cap: both reads prune to the delta's buckets
+        fp_bucket = F.pmod(F.col("fp"), F.lit(n_buckets))
+        touched = delta.select(fp_bucket.alias("bucket"))
+        hist = _history(spark, index_dir, batch_id, touched)
         # an existing index's layout wins over the parameter (writes
         # follow reads per directory)
-        use_bucketed = (
-            bucketed if raw_index is None else "bucket" in raw_index.columns
-        )
+        use_bucketed = bucketed if hist is None else "bucket" in hist.columns
         if use_bucketed:
             _pin_bucket_count(spark, index_dir, n_buckets)
-
-        def delta_buckets() -> list[int]:
-            # the delta's touched buckets (<= n_buckets values; the
-            # O(1)-rows driver-side collect contract) — only index/df
-            # rows whose fp occurs in the delta can join or feed the cap
-            return [
-                r[0]
-                for r in delta.select(
-                    F.pmod(F.col("fp"), F.lit(n_buckets)).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-
-        bks = delta_buckets() if use_bucketed else None
-        if raw_index is not None:
-            # exclude THIS batch's partition on checkpoint replay (same
-            # self-pairing argument as the MinHash fold)
-            index = raw_index.filter(F.col("batch_id") != batch_id)
-            if use_bucketed:
-                index = index.filter(F.col("bucket").isin(bks))
-            index = index.select("id", "n_fp", "fp")
+        if hist is not None:
+            index = hist.select("id", "n_fp", "fp")
         else:
             index = spark.createDataFrame([], delta.schema)
         index_df = None
         df_bucketed = use_bucketed
         if max_df is not None:
-            raw_df = _read_parquet_or_none(spark, df_dir)
+            hist_df = _history(spark, df_dir, batch_id, touched)
             # the df table follows ITS OWN existing layout (a legacy
             # flat table next to a freshly-bucketed index stays flat
             # until compacted — never mixed within one directory)
             df_bucketed = (
-                use_bucketed if raw_df is None else "bucket" in raw_df.columns
+                use_bucketed if hist_df is None else "bucket" in hist_df.columns
             )
             if df_bucketed:
                 _pin_bucket_count(spark, df_dir, n_buckets)
-            if raw_df is not None:
-                index_df = raw_df.filter(F.col("batch_id") != batch_id)
-                if "bucket" in raw_df.columns:
-                    index_df = index_df.filter(
-                        F.col("bucket").isin(bks if bks is not None else delta_buckets())
-                    )
-                index_df = index_df.select("fp", "df")
+            if hist_df is not None:
+                index_df = hist_df.select("fp", "df")
             elif any(
                 g != batch_id for g in _batch_partition_ids(spark, index_dir)
             ):
@@ -834,9 +849,7 @@ def streaming_winnow_dedup(
             index_df=index_df,
             broadcast_delta=broadcast_delta,
         )
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch_id={batch_id}")
-        )
+        _write_batch(pairs, pairs_dir, batch_id)
         # df partials BEFORE the index partition (advice r9): a crash
         # between the two then leaves "df without index" — harmless, the
         # replay overwrites both — never "index without df", the state
@@ -844,34 +857,20 @@ def streaming_winnow_dedup(
         if max_df is not None:
             partial = dd.winnow_df_table(delta)
             if df_bucketed:
-                partial.withColumn(
-                    "bucket", F.pmod(F.col("fp"), F.lit(n_buckets))
-                ).repartition("bucket").write.mode("overwrite").partitionBy(
-                    "bucket"
-                ).parquet(os.path.join(df_dir, f"batch_id={batch_id}"))
-            else:
-                partial.write.mode("overwrite").parquet(
-                    os.path.join(df_dir, f"batch_id={batch_id}")
-                )
-        if use_bucketed:
-            # repartition by bucket first — one file per touched bucket
-            # instead of tasks x buckets (O(delta) exchange, never the
-            # index; same note as the minhash banded write)
-            delta.withColumn(
-                "bucket", F.pmod(F.col("fp"), F.lit(n_buckets))
-            ).repartition("bucket").write.mode("overwrite").partitionBy(
-                "bucket"
-            ).parquet(os.path.join(index_dir, f"batch_id={batch_id}"))
-        else:
-            delta.write.mode("overwrite").parquet(
-                os.path.join(index_dir, f"batch_id={batch_id}")
+                partial = partial.withColumn("bucket", fp_bucket)
+            _write_batch(
+                partial, df_dir, batch_id, by="bucket" if df_bucketed else None
             )
+        if use_bucketed:
+            _write_batch(
+                delta.withColumn("bucket", fp_bucket), index_dir, batch_id,
+                by="bucket",
+            )
+        else:
+            _write_batch(delta, index_dir, batch_id)
         delta.unpersist()
 
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(docs, process, checkpoint)
 
 
 def streaming_block_dedup(
@@ -924,22 +923,9 @@ def streaming_block_dedup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         blocks = block_rows(batch_df, block_tokens=block_tokens).persist()
-        raw_index = _read_parquet_or_none(spark, index_dir)
-        if raw_index is not None:
-            index = raw_index.filter(F.col("batch_id") != batch_id)
-            # partition-prune the index scan to the delta's buckets
-            # (<= n_buckets values; same O(1)-rows contract as the
-            # upsert fold's bucket-id read)
-            bks = [
-                r[0]
-                for r in blocks.select(
-                    F.pmod(F.xxhash64("block_text"), F.lit(n_buckets)).alias("b")
-                )
-                .distinct()
-                .collect()
-            ]
-            index = index.filter(F.col("bucket").isin(bks))
-        else:
+        bucket = F.pmod(F.xxhash64("block_text"), F.lit(n_buckets)).alias("bucket")
+        index = _history(spark, index_dir, batch_id, blocks.select(bucket))
+        if index is None:
             index = spark.createDataFrame([], "block_text string")
         # persisted: the output plan and the index-append plan both read
         # the fold's flags — without the cache each would rescan the
@@ -947,197 +933,55 @@ def streaming_block_dedup(
         flagged = block_delta_flags(
             index, batch_df, block_tokens=block_tokens, delta_blocks=blocks
         ).persist()
-        _reassemble_blocks(flagged, "_keep").write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-        new_blocks = flagged.filter("_keep").select(
-            "block_text",
-            F.pmod(F.xxhash64("block_text"), F.lit(n_buckets)).alias("bucket"),
-        )
-        # repartition by bucket first — one file per touched bucket per
-        # batch instead of tasks x buckets (O(delta) exchange)
-        new_blocks.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(os.path.join(index_dir, f"batch_id={batch_id}"))
+        _write_batch(_reassemble_blocks(flagged, "_keep"), out_dir, batch_id)
+        new_blocks = flagged.filter("_keep").select("block_text", bucket)
+        _write_batch(new_blocks, index_dir, batch_id, by="bucket")
         flagged.unpersist()
         blocks.unpersist()
 
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(docs, process, checkpoint)
 
 
-def streaming_contamination_screen(
+def streaming_frozen_score(
     docs: DataFrame,
-    eval_fp_dir: str,
-    flags_dir: str,
+    artifact_dir: str,
+    out_dir: str,
+    score,
     checkpoint: str | None = None,
-    min_shared: int = 2,
-    min_containment: float = 0.0,
-    broadcast_eval: bool = True,
 ):
-    """Screen a document stream against a FROZEN eval-benchmark
-    fingerprint index — the production decontamination shape: the
-    benchmark suite is fingerprinted ONCE
-    (``operators/dedup.winnow_fingerprint_rows`` written to
-    ``eval_fp_dir``), and every incoming micro-batch of candidate
-    training documents is checked for substring-grain leaks against
-    it.  Per batch the job writes (train_id, eval_id, shared,
-    eval_containment) rows to ``flags_dir/batch_id=N`` — the same
-    contract as the batch operator ``dedup.winnow_contamination`` with
-    no df cap, so the union of per-batch flags over any batch split
-    equals the batch screen (bipartite: train docs never interact with
-    each other, pinned in ``tests/test_streaming.py``).
+    """Score a document stream against a FROZEN artifact — a table
+    trained once from a corpus snapshot and published as parquet at
+    ``artifact_dir`` — writing ``score(batch_df, artifact_df)`` to
+    ``out_dir/batch_id=N`` per micro-batch (batch-keyed overwrite,
+    idempotent on replay).  The continuous-ingest half of every
+    train-once/score-many curation signal:
 
-    Scale: the eval index is bounded (benchmark suites are small), so
-    with ``broadcast_eval=True`` the whole fold is MAP-SIDE over the
-    batch — no shuffle of anything, per-batch cost O(batch), and no
-    state ever grows (the index is frozen by definition; re-fingerprint
-    and republish when the benchmark suite itself changes)."""
-    from firmable_company_data_pipeline_spark.operators import dedup as dd
+    * DSIR importance — ``curation.dsir_weight_table`` (≤ ``n_buckets``
+      rows), scored by ``dsir_score_docs``;
+    * model-based quality — ``nb_quality_weights`` or the MLlib
+      ``lr_quality_weights`` arm (≤ ``n_buckets``+1 rows), scored by
+      ``nb_quality_score``;
+    * Stupid-Backoff trigram LM — ``trigram_lm_table`` (dictionary-
+      sized), scored by ``trigram_lm_score_docs``;
+    * decontamination — the eval suite's
+      ``dedup.winnow_fingerprint_rows``, screened by
+      ``fp_containment_flags(winnow_fingerprint_rows(batch), eval)``:
+      the batch ``winnow_contamination`` contract with no df cap.
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ev = spark.read.parquet(eval_fp_dir).select(
-            F.col("id").alias("eval_id"), F.col("n_fp").alias("ne"), "fp"
-        )
-        if broadcast_eval:
-            ev = F.broadcast(ev)
-        tr = dd.winnow_fingerprint_rows(batch_df).select(
-            F.col("id").alias("train_id"), "fp"
-        )
-        flags = (
-            tr.join(ev, "fp")
-            .groupBy("train_id", "eval_id", "ne")
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .filter(F.col("shared") >= min_shared)
-            .select(
-                "train_id",
-                "eval_id",
-                "shared",
-                F.round(F.col("shared") / F.col("ne"), 6).alias(
-                    "eval_containment"
-                ),
-            )
-            .filter(F.col("eval_containment") >= min_containment)
-        )
-        flags.write.mode("overwrite").parquet(
-            os.path.join(flags_dir, f"batch_id={batch_id}")
-        )
-
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def streaming_dsir_score(
-    docs: DataFrame,
-    weights_dir: str,
-    scores_dir: str,
-    checkpoint: str | None = None,
-    n_buckets: int = 256,
-):
-    """Score a document stream against a FROZEN DSIR weight table —
-    the continuous-ingest half of importance resampling: the (bucket,
-    w) table is trained once from a corpus snapshot
-    (``operators/curation.dsir_weight_table`` written to
-    ``weights_dir``, ≤ ``n_buckets`` rows) and every micro-batch of
-    candidate documents is scored map-side against its broadcast.
-    Writes (doc_id, n_grams, logratio_sum, avg_logratio) to
-    ``scores_dir/batch_id=N`` (batch-keyed overwrite, idempotent on
-    replay).  Scores are per-document-independent, so the union over
-    ANY batch split equals the batch scorer (pinned in
-    ``tests/test_streaming.py``); like the contamination screen there
-    is no history axis — per-batch cost is O(batch) by construction.
-    Retrain and republish the table when the target or the pool drifts
+    The artifact is bounded by contract, so it is always broadcast: the
+    fold is map-side over the batch, per-batch cost is O(batch), and no
+    state grows — there is no history axis.  Scores are per-document-
+    independent (the contamination screen is bipartite: train docs
+    never interact), so the union over ANY batch split equals the batch
+    scorer (pinned in ``tests/test_streaming.py``).  Retrain and
+    republish the artifact when the target, labels or pool drift
     (``corpus_drift_psi`` is the trigger metric)."""
-    from firmable_company_data_pipeline_spark.operators import curation as cu
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        weights = spark.read.parquet(weights_dir)
-        cu.dsir_score_docs(batch_df, weights, n_buckets=n_buckets).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(scores_dir, f"batch_id={batch_id}"))
+        artifact = F.broadcast(batch_df.sparkSession.read.parquet(artifact_dir))
+        _write_batch(score(batch_df, artifact), out_dir, batch_id)
 
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def streaming_quality_score(
-    docs: DataFrame,
-    weights_dir: str,
-    scores_dir: str,
-    checkpoint: str | None = None,
-    n_buckets: int = 256,
-):
-    """Score a document stream against a FROZEN quality-classifier
-    table — the model-based quality ranker's continuous-ingest half,
-    sharing :func:`streaming_dsir_score`'s composition exactly: the
-    ≤ ``n_buckets``+1-row (bucket, w) table (feature log-odds + the
-    ``bucket = -1`` class prior) is trained once
-    (``operators/curation.nb_quality_weights`` — or the MLlib
-    ``lr_quality_weights`` arm, same contract — written to
-    ``weights_dir``) and every micro-batch is scored map-side against
-    its broadcast by ``nb_quality_score``.  Writes (doc_id, n_grams,
-    log_odds, prob_good, is_good) to ``scores_dir/batch_id=N``
-    (batch-keyed overwrite, idempotent on replay).  Scores are
-    per-document-independent, so the union over ANY batch split equals
-    the batch scorer (pinned in ``tests/test_streaming.py``); no
-    history axis — per-batch cost is O(batch) by construction.
-    Retrain and republish when labels or the pool drift."""
-    from firmable_company_data_pipeline_spark.operators import curation as cu
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        weights = spark.read.parquet(weights_dir)
-        cu.nb_quality_score(batch_df, weights, n_buckets=n_buckets).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(scores_dir, f"batch_id={batch_id}"))
-
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def streaming_trigram_score(
-    docs: DataFrame,
-    model_dir: str,
-    scores_dir: str,
-    checkpoint: str | None = None,
-):
-    """Score a document stream against a FROZEN Stupid-Backoff trigram
-    LM — the word-order quality signal's continuous-ingest half,
-    sharing :func:`streaming_dsir_score`'s composition exactly: the
-    one-table (order, gram, c) model is trained once
-    (``operators/curation.trigram_lm_table`` written to ``model_dir``,
-    dictionary-sized) and every micro-batch is scored map-side against
-    its broadcast slices by ``trigram_lm_score_docs``.  Writes
-    (doc_id, n_trigrams, avg_logscore) to ``scores_dir/batch_id=N``
-    (batch-keyed overwrite, idempotent on replay).  Scores are
-    per-document-independent, so the union over ANY batch split equals
-    the batch scorer (pinned in ``tests/test_streaming.py``); no
-    history axis — per-batch cost is O(batch) by construction.
-    Retrain and republish when the corpus drifts
-    (``corpus_drift_psi`` is the trigger metric)."""
-    from firmable_company_data_pipeline_spark.operators import curation as cu
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        model = spark.read.parquet(model_dir)
-        cu.trigram_lm_score_docs(batch_df, model).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(scores_dir, f"batch_id={batch_id}"))
-
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(docs, process, checkpoint)
 
 
 _LABELS_FOLD_MARKER = "_fold_marker.json"
@@ -1382,14 +1226,9 @@ def streaming_rollup_refresh(
     """
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        _batch_rollup(batch_df).write.mode("overwrite").parquet(
-            target_dir.rstrip("/") + f"/batch={batch_id}"
-        )
+        _write_batch(_batch_rollup(batch_df), target_dir, batch_id, key="batch")
 
-    writer = events.writeStream.foreachBatch(refresh).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(events, refresh, checkpoint)
 
 
 def streaming_cms_refresh(
@@ -1419,14 +1258,9 @@ def streaming_cms_refresh(
         occ = batch_df.select(
             F.explode(tokens(F.col(text_col))).alias("term")
         ).select(char_fold_hash(F.col("term")).alias("h"))
-        sk.cms_partial(occ).write.mode("overwrite").parquet(
-            target_dir.rstrip("/") + f"/batch={batch_id}"
-        )
+        _write_batch(sk.cms_partial(occ), target_dir, batch_id, key="batch")
 
-    writer = docs.writeStream.foreachBatch(refresh).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(docs, refresh, checkpoint)
 
 
 def read_cms(spark, target_dir: str) -> DataFrame:
@@ -1438,10 +1272,9 @@ def read_cms(spark, target_dir: str) -> DataFrame:
     ``glob`` (advice r7: a local probe misreports remote targets)."""
     from firmable_company_data_pipeline_spark.operators import sketches as sk
 
-    raw = _read_parquet_or_none(spark, target_dir.rstrip("/") + "/batch=*")
-    if raw is None:
-        return spark.createDataFrame([], "d int, bucket bigint, cnt bigint")
-    return sk.cms_merge(raw)
+    return sk.cms_merge(
+        _read_partials(spark, target_dir, "d int, bucket bigint, cnt bigint")
+    )
 
 
 def streaming_kmv_refresh(
@@ -1465,14 +1298,10 @@ def streaming_kmv_refresh(
     from firmable_company_data_pipeline_spark.operators import sketches as sk
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        sk.kmv_partial(batch_df, group_col, key_col, k).write.mode(
-            "overwrite"
-        ).parquet(target_dir.rstrip("/") + f"/batch={batch_id}")
+        partial = sk.kmv_partial(batch_df, group_col, key_col, k)
+        _write_batch(partial, target_dir, batch_id, key="batch")
 
-    writer = events.writeStream.foreachBatch(refresh).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(events, refresh, checkpoint)
 
 
 def read_kmv(spark, target_dir: str, k: int = 64) -> DataFrame:
@@ -1482,11 +1311,7 @@ def read_kmv(spark, target_dir: str, k: int = 64) -> DataFrame:
     ``read_cms``)."""
     from firmable_company_data_pipeline_spark.operators import sketches as sk
 
-    raw = _read_parquet_or_none(spark, target_dir.rstrip("/") + "/batch=*")
-    if raw is None:
-        return spark.createDataFrame(
-            [], "g string, hs array<bigint>, est_distinct double"
-        )
+    raw = _read_partials(spark, target_dir, "g string, hs array<bigint>")
     return sk.kmv_merge(raw, k).withColumn(
         "est_distinct", sk.kmv_estimate(F.col("hs"), k)
     )
@@ -1511,14 +1336,10 @@ def streaming_bloom_refresh(
     from firmable_company_data_pipeline_spark.operators import joins as bj
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        bj.bloom_partial(batch_df, key_col, n_bits).write.mode(
-            "overwrite"
-        ).parquet(target_dir.rstrip("/") + f"/batch={batch_id}")
+        partial = bj.bloom_partial(batch_df, key_col, n_bits)
+        _write_batch(partial, target_dir, batch_id, key="batch")
 
-    writer = events.writeStream.foreachBatch(refresh).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(events, refresh, checkpoint)
 
 
 def streaming_asof_enrich(
@@ -1595,7 +1416,7 @@ def streaming_asof_enrich(
             right_cols=["click_id", "click_value"],
             right_order="click_id",
         )
-        enriched.write.mode("overwrite").parquet(out_dir + f"/batch={batch_id}")
+        _write_batch(enriched, out_dir, batch_id, key="batch")
         new_state = (
             universe.groupBy(key_col)
             .agg(
@@ -1606,22 +1427,17 @@ def streaming_asof_enrich(
             )
             .select(key_col, "_s.*")
         )
-        sdir = state_dir + f"/batch={batch_id}"
-        new_state.write.mode("overwrite").parquet(sdir)
+        sdir = _write_batch(new_state, state_dir, batch_id, key="batch")
         fs, marker = _hadoop_fs(spark, sdir + "/_STATE_OK")
         fs.createNewFile(marker)
         # Retention AFTER the commit marker: keep this snapshot and its
         # immediate predecessor (a replay of THIS batch folds from it);
         # anything older is unreachable by construction.
         for i in prior[:-1]:
-            dfs, jp = _hadoop_fs(spark, state_dir + f"/batch={i}")
-            dfs.delete(jp, True)
+            _rmtree_any(spark, state_dir + f"/batch={i}")
         universe.unpersist()
 
-    writer = events.writeStream.foreachBatch(fold).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(events, fold, checkpoint)
 
 
 def read_asof_state(spark, target_dir: str) -> DataFrame:
@@ -1649,10 +1465,7 @@ def read_bloom(spark, target_dir: str) -> DataFrame:
     contract — an absent key tests negative against an empty vector)."""
     from firmable_company_data_pipeline_spark.operators import joins as bj
 
-    raw = _read_parquet_or_none(spark, target_dir.rstrip("/") + "/batch=*")
-    if raw is None:
-        return spark.createDataFrame([], "w bigint, m bigint")
-    return bj.bloom_merge(raw)
+    return bj.bloom_merge(_read_partials(spark, target_dir, "w bigint, m bigint"))
 
 
 def _batch_rollup(batch_df: DataFrame) -> DataFrame:
@@ -1964,9 +1777,7 @@ def streaming_scd2_dimension(
         # closed rows append once, batch-keyed: replay overwrites its
         # own dir; skip-when-empty keeps no-op redeliveries clobber-free
         if newly_closed.limit(1).count() > 0:
-            newly_closed.write.mode("overwrite").parquet(
-                closed_dir + f"/batch={batch_id}"
-            )
+            _write_batch(newly_closed, closed_dir, batch_id, key="batch")
         new_open = merged.filter(F.col("valid_to").isNull())
         tmp = open_dir + f"._staging_{batch_id}"
         new_open.write.mode("overwrite").parquet(tmp)
@@ -1978,10 +1789,7 @@ def streaming_scd2_dimension(
         fs.delete(jtmp, True)
         merged.unpersist()
 
-    writer = changes.writeStream.foreachBatch(fold).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(changes, fold, checkpoint)
 
 
 def read_scd2_dimension(spark, target_dir: str) -> DataFrame:
@@ -2059,14 +1867,10 @@ def streaming_ivf_index(
         # read_ivf_index dynamic-partition-prune to the probed cells, so
         # search I/O never scales with index size (similarity_search.
         # write_ivf_index documents the layout; DPP pinned by test)
-        ivf_assign(batch_df, cents, id_col=id_col, vec_col=vec_col).write.partitionBy(
-            "cell"
-        ).mode("overwrite").parquet(index_dir.rstrip("/") + f"/batch_id={batch_id}")
+        assigned = ivf_assign(batch_df, cents, id_col=id_col, vec_col=vec_col)
+        _write_batch(assigned, index_dir, batch_id, by="cell", shuffle=False)
 
-    writer = vectors.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(vectors, process, checkpoint)
 
 
 def read_ivf_index(spark, index_dir: str) -> DataFrame:
@@ -2099,14 +1903,10 @@ def streaming_histogram_refresh(
     from firmable_company_data_pipeline_spark.operators import sketches as sk
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        sk.hist_partial(batch_df, value_col).write.mode("overwrite").parquet(
-            target_dir.rstrip("/") + f"/batch={batch_id}"
-        )
+        partial = sk.hist_partial(batch_df, value_col)
+        _write_batch(partial, target_dir, batch_id, key="batch")
 
-    writer = events.writeStream.foreachBatch(refresh).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(events, refresh, checkpoint)
 
 
 def read_histogram(spark, target_dir: str) -> DataFrame:
@@ -2120,10 +1920,7 @@ def read_histogram(spark, target_dir: str) -> DataFrame:
     (advice r7)."""
     from firmable_company_data_pipeline_spark.operators import sketches as sk
 
-    raw = _read_parquet_or_none(spark, target_dir.rstrip("/") + "/batch=*")
-    if raw is None:
-        return spark.createDataFrame([], "bin bigint, cnt bigint")
-    return sk.hist_merge(raw)
+    return sk.hist_merge(_read_partials(spark, target_dir, "bin bigint, cnt bigint"))
 
 
 def streaming_corpus_screen(
@@ -2157,16 +1954,17 @@ def streaming_corpus_screen(
     twin).  Batch-keyed idempotent writes to ``verdicts_dir/batch_id=N``.
 
     Contamination uses the BATCH flagship's stage-6 rule (review r11:
-    any-single-shared-fingerprint diverged from it): a doc is
-    contaminated when it shares ≥ ``min_shared`` winnow fingerprints
-    with some eval doc AND covers ≥ ``min_containment`` of that eval
-    doc's fingerprints (the eval index carries ``n_fp``).  The one
-    DOCUMENTED divergence from the batch screen is the ``max_df``
-    hot-fingerprint cap, which needs corpus-wide document frequencies a
-    frozen eval index cannot supply — the ingest screen therefore flags
-    a SUPERSET on boilerplate-heavy fingerprints (same caveat as
-    ``streaming_contamination_screen``); re-screen admitted docs in the
-    batch flagship before shipping.
+    any-single-shared-fingerprint diverged from it), the one definition
+    in ``dedup.fp_containment_flags``: a doc is contaminated when it
+    shares ≥ ``min_shared`` winnow fingerprints with some eval doc AND
+    covers ≥ ``min_containment`` of that eval doc's fingerprints (the
+    eval index carries ``n_fp``).  The one DOCUMENTED divergence from
+    the batch screen is the ``max_df`` hot-fingerprint cap, which needs
+    corpus-wide document frequencies a frozen eval index cannot supply
+    — the ingest screen therefore flags a SUPERSET on boilerplate-heavy
+    fingerprints (same caveat as the frozen-index screen of
+    ``streaming_frozen_score``); re-screen admitted docs in the batch
+    flagship before shipping.
 
     Scale: all four artifacts are frozen and bounded (two ≤ n_buckets-
     row weight tables, one dictionary-sized gram table, one benchmark-
@@ -2185,11 +1983,7 @@ def streaming_corpus_screen(
         qw = spark.read.parquet(quality_weights_dir)
         lm = spark.read.parquet(lm_model_dir)
         dw = spark.read.parquet(dsir_weights_dir)
-        ev = F.broadcast(
-            spark.read.parquet(eval_fp_dir).select(
-                F.col("id").alias("eval_id"), F.col("n_fp").alias("ne"), "fp"
-            )
-        )
+        ev = F.broadcast(spark.read.parquet(eval_fp_dir))
         base = batch_df.select("doc_id")
         q = cu.nb_quality_score(batch_df, qw, n_buckets=n_buckets).select(
             "doc_id", "prob_good"
@@ -2201,19 +1995,11 @@ def streaming_corpus_screen(
             "doc_id", "avg_logratio"
         )
         contam = (
-            dd.winnow_fingerprint_rows(batch_df)
-            .select(F.col("id").alias("doc_id"), "fp")
-            .join(ev, "fp")
-            .groupBy("doc_id", "eval_id", "ne")
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .filter(
-                (F.col("shared") >= min_shared)
-                & (
-                    F.round(F.col("shared") / F.col("ne"), 6)
-                    >= min_containment
-                )
+            dd.fp_containment_flags(
+                dd.winnow_fingerprint_rows(batch_df), ev,
+                min_shared=min_shared, min_containment=min_containment,
             )
-            .select("doc_id")
+            .select(F.col("train_id").alias("doc_id"))
             .distinct()
             .withColumn("_contam", F.lit(True))
         )
@@ -2239,11 +2025,6 @@ def streaming_corpus_screen(
             )
             .withColumn("admit", F.coalesce("admit", F.lit(False)))
         )
-        verdicts.write.mode("overwrite").parquet(
-            os.path.join(verdicts_dir, f"batch_id={batch_id}")
-        )
+        _write_batch(verdicts, verdicts_dir, batch_id)
 
-    writer = docs.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
+    return _start(docs, process, checkpoint)

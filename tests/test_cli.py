@@ -18,10 +18,9 @@ def test_cli_demo_runs_end_to_end(spark, capsys, tmp_path):
 
 
 def test_headline_membership_rule():
-    """bench.HEADLINE must reconcile with the registry under the
-    documented rule: every registered query is benchmarked except the
-    explicit scalar/point-lookup and dominated-variant lists (review
-    r6: the rule was false at introduction — this pins it true)."""
+    """The benched list is the registry minus the scalar/point-lookup
+    and dominated-variant exclusions.  Every exclusion must name a
+    registered query, so a stale one fails here."""
     import importlib.util
     import os as _os
     import sys as _sys
@@ -34,17 +33,9 @@ def test_headline_membership_rule():
     from firmable_company_data_pipeline_spark.queries import registry
 
     queries, _ = registry()
-    scalar_demos = {
-        "fn_clean_text", "fn_domain_company", "fn_abn_checksum",
-        "fn_extract_abn_text", "fn_contacts", "fn_standardize_state",
-        "fn_clean_company_name", "fn_dates", "fn_snippet", "order_lookup",
-    }
-    dominated = {
-        "orders_page", "dedup_clusters", "match_rule_based", "match_llm_stub",
-    }
-    headline = set(bench.HEADLINE)
-    assert len(bench.HEADLINE) == len(headline), "duplicates in HEADLINE"
-    assert headline <= set(queries), sorted(headline - set(queries))
-    missing = set(queries) - headline - scalar_demos - dominated
-    assert not missing, f"registered but unbenchmarked (extend HEADLINE): {sorted(missing)}"
-    assert not (headline & (scalar_demos | dominated)), "excepted query in HEADLINE"
+    excluded = bench.SCALAR_DEMOS | bench.DOMINATED
+    assert not (bench.SCALAR_DEMOS & bench.DOMINATED)
+    assert excluded <= set(queries), sorted(excluded - set(queries))
+    headline = bench.headline(queries)
+    assert len(headline) == len(set(headline)), "duplicates in the headline"
+    assert set(headline) == set(queries) - excluded

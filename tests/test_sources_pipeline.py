@@ -269,6 +269,41 @@ def test_run_pipeline_extracts_each_source_once(
     spark.catalog.clearCache()
 
 
+def test_run_pipeline_rereads_rewritten_abr_xml(spark, cc_index_path, tmp_path):
+    """A second pass in the same session sees an ABR file rewritten in
+    place.  match_cascade leaves its inputs persisted, and an identical
+    later plan would be served from those entries: the rename below
+    must reach the second dimension, not the first pass's cached name."""
+
+    def write_xml(first_name):
+        records = []
+        for i, slug in enumerate(SLUGS):
+            num = sum(ord(c) for c in slug)
+            name = first_name if i == 0 else slug.replace("-", " ").title()
+            records.append(
+                _abr_xml_record(_checksum_valid_abn(num), "ACT", "20200101",
+                                "Australian Private Company", name, "NSW",
+                                str(2000 + num % 999))
+            )
+        xml.write_text("<Transfer>" + "\n".join(records) + "</Transfer>")
+
+    def names():
+        dim = run_pipeline(
+            spark, cc_index_path, str(xml), fetch_client=StubFetchClient()
+        )
+        return {r.entity_name for r in dim.collect()}
+
+    xml = tmp_path / "abr.xml"
+    spark.catalog.clearCache()
+    write_xml("Acme Books")
+    assert "Acme Books" in names()
+    write_xml("Acme Books Stationery Holdings")
+    second = names()
+    assert "Acme Books Stationery Holdings" in second, second
+    assert "Acme Books" not in second
+    spark.catalog.clearCache()
+
+
 def test_abr_postcode_keeps_leading_zero(spark, tmp_path):
     """NT postcodes start with 0: the ABR side must keep "0800" as
     text (XML inference typed Postcode bigint and turned it into "800"),

@@ -354,67 +354,82 @@ def test_streaming_block_dedup_matches_batch(spark, sf_dir, tmp_path):
     assert idx.count() == n_distinct_blocks
 
 
-def test_streaming_contamination_screen_matches_batch(spark, sf_dir, tmp_path):
-    """Screening two train micro-batches against a frozen eval
-    fingerprint index must flag exactly the pairs the batch operator
-    flags on the full corpus (bipartite: train docs never interact, so
-    ANY batch split reproduces the batch screen — no ordering caveat)."""
-    import time as _time
-
+def _contamination_case(spark, docs, artifact_dir):
+    """Frozen eval fingerprint index; the batch twin is the bipartite
+    batch screen on the full corpus."""
     from firmable_company_data_pipeline_spark.operators import dedup as dd
 
-    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
-        "doc_id", "text"
-    )
-    ev_docs = docs.filter(F.col("doc_id") % 10 == 0)
-    tr_docs = docs.filter(F.col("doc_id") % 10 != 0)
-    eval_fp_dir = str(tmp_path / "eval_fps")
-    dd.winnow_fingerprint_rows(ev_docs).write.parquet(eval_fp_dir)
+    docs = docs.select("doc_id", "text")
+    is_eval = F.col("doc_id") % 10 == 0
+    dd.winnow_fingerprint_rows(docs.filter(is_eval)).write.parquet(artifact_dir)
 
-    src = str(tmp_path / "train_src")
-    tr_docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    _time.sleep(0.3)
-    tr_docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    flags_dir = str(tmp_path / "flags")
-    q = jobs.streaming_contamination_screen(
-        stream, eval_fp_dir, flags_dir,
-        checkpoint=str(tmp_path / "ckpt"), min_shared=1,
-    )
-    _drain(q)
+    def score(batch, ev):
+        return dd.fp_containment_flags(
+            dd.winnow_fingerprint_rows(batch), ev, min_shared=1
+        )
 
     cols = ["train_id", "eval_id", "shared", "eval_containment"]
-    streamed = _rows(spark.read.parquet(flags_dir), cols)
-    batch = _rows(
-        dd.winnow_contamination(docs, eval_mod=10, min_shared=1), cols
-    )
-    assert streamed == batch and streamed
+    batch = dd.winnow_contamination(docs, eval_mod=10, min_shared=1)
+    return docs.filter(~is_eval), score, cols, batch
 
 
-def test_streaming_dsir_score_matches_batch(spark, sf_dir, tmp_path):
-    """Scoring two pool micro-batches against a frozen DSIR weight
-    table must reproduce the batch importance scorer exactly (scores
-    are per-document-independent, so any batch split works), and the
-    composed weight-table + scorer pair must equal the fused
-    dsir_importance operator."""
-    import time as _time
-
+def _dsir_case(spark, docs, artifact_dir):
+    """Frozen DSIR weight table; the composed weight-table + scorer pair
+    must also equal the fused dsir_importance operator."""
     from firmable_company_data_pipeline_spark.operators import curation as cu
 
-    docs = load_tables(spark, sf_dir, "documents")["documents"]
     is_target = F.col("source").isin("src0", "src1", "src2", "src3")
-    weights_dir = str(tmp_path / "dsir_w")
-    cu.dsir_weight_table(docs, is_target).write.parquet(weights_dir)
-
+    cu.dsir_weight_table(docs, is_target).write.parquet(artifact_dir)
     pool = docs.filter(~is_target).select("doc_id", "text")
+    cols = ["doc_id", "n_grams", "logratio_sum", "avg_logratio"]
+    batch = cu.dsir_importance(docs, is_target)
+    # composed pair == fused operator (batch side)
+    composed = cu.dsir_score_docs(pool, spark.read.parquet(artifact_dir))
+    assert _rows(composed, cols) == _rows(batch, cols)
+    return pool, cu.dsir_score_docs, cols, batch
+
+
+def _quality_case(spark, docs, artifact_dir):
+    """Frozen NB quality-classifier table."""
+    from firmable_company_data_pipeline_spark.operators import curation as cu
+
+    label = F.col("source").isin("src0", "src1", "src2", "src3")
+    cu.nb_quality_weights(docs, label).write.parquet(artifact_dir)
+    pool = docs.select("doc_id", "text")
+    cols = ["doc_id", "n_grams", "log_odds", "prob_good", "is_good"]
+    batch = cu.nb_quality_score(pool, spark.read.parquet(artifact_dir))
+    return pool, cu.nb_quality_score, cols, batch
+
+
+def _trigram_case(spark, docs, artifact_dir):
+    """Frozen Stupid-Backoff trigram table, trained on a corpus slice."""
+    from firmable_company_data_pipeline_spark.operators import curation as cu
+
+    cu.trigram_lm_table(docs.filter(F.col("doc_id") % 3 != 0)).write.parquet(
+        artifact_dir
+    )
+    pool = docs.select("doc_id", "text")
+    cols = ["doc_id", "n_trigrams", "avg_logscore"]
+    batch = cu.trigram_lm_score_docs(pool, spark.read.parquet(artifact_dir))
+    return pool, cu.trigram_lm_score_docs, cols, batch
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_contamination_case, _dsir_case, _quality_case, _trigram_case],
+    ids=["contamination", "dsir", "quality", "trigram"],
+)
+def test_streaming_frozen_score_matches_batch(spark, sf_dir, tmp_path, case):
+    """Scoring two pool micro-batches against a frozen artifact must
+    reproduce the batch scorer exactly: scores are per-document-
+    independent (the contamination screen is bipartite — train docs
+    never interact), so ANY batch split reproduces the batch result."""
+    import time as _time
+
+    docs = load_tables(spark, sf_dir, "documents")["documents"]
+    artifact_dir = str(tmp_path / "artifact")
+    pool, score, cols, batch = case(spark, docs, artifact_dir)
+
     src = str(tmp_path / "pool_src")
     pool.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
     _time.sleep(0.3)
@@ -424,59 +439,14 @@ def test_streaming_dsir_score_matches_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    scores_dir = str(tmp_path / "dsir_scores")
-    q = jobs.streaming_dsir_score(
-        stream, weights_dir, scores_dir, checkpoint=str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "scores")
+    q = jobs.streaming_frozen_score(
+        stream, artifact_dir, out_dir, score, checkpoint=str(tmp_path / "ckpt")
     )
     _drain(q)
 
-    cols = ["doc_id", "n_grams", "logratio_sum", "avg_logratio"]
-    streamed = _rows(spark.read.parquet(scores_dir), cols)
-    batch = _rows(cu.dsir_importance(docs, is_target), cols)
-    assert streamed == batch and streamed
-    # composed pair == fused operator (batch side)
-    composed = _rows(
-        cu.dsir_score_docs(pool, spark.read.parquet(weights_dir)), cols
-    )
-    assert composed == batch
-
-
-def test_streaming_quality_score_matches_batch(spark, sf_dir, tmp_path):
-    """Scoring two micro-batches against a frozen NB quality-classifier
-    table must reproduce the batch scorer exactly (per-document-
-    independent scores, so any batch split works) — the quality twin of
-    the DSIR streaming parity test."""
-    import time as _time
-
-    from firmable_company_data_pipeline_spark.operators import curation as cu
-
-    docs = load_tables(spark, sf_dir, "documents")["documents"]
-    label = F.col("source").isin("src0", "src1", "src2", "src3")
-    weights_dir = str(tmp_path / "qc_w")
-    cu.nb_quality_weights(docs, label).write.parquet(weights_dir)
-
-    pool = docs.select("doc_id", "text")
-    src = str(tmp_path / "qc_src")
-    pool.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(0.3)
-    pool.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    scores_dir = str(tmp_path / "qc_scores")
-    q = jobs.streaming_quality_score(
-        stream, weights_dir, scores_dir, checkpoint=str(tmp_path / "ckpt")
-    )
-    _drain(q)
-
-    cols = ["doc_id", "n_grams", "log_odds", "prob_good", "is_good"]
-    streamed = _rows(spark.read.parquet(scores_dir), cols)
-    batch = _rows(
-        cu.nb_quality_score(pool, spark.read.parquet(weights_dir)), cols
-    )
-    assert streamed == batch and streamed
+    streamed = _rows(spark.read.parquet(out_dir), cols)
+    assert streamed == _rows(batch, cols) and streamed
 
 
 def test_bucketed_index_folds_prune_partitions(spark, sf_dir, tmp_path):
@@ -1763,45 +1733,6 @@ def test_bucketed_labels_fold_schemed_dir(spark, tmp_path):
     assert got == {(1, 1), (2, 1), (5, 1), (3, 3), (4, 3)}
 
 
-def test_streaming_trigram_score_matches_batch(spark, sf_dir, tmp_path):
-    """Scoring two micro-batches against a frozen Stupid-Backoff
-    trigram table must reproduce the batch scorer exactly (per-
-    document-independent scores) — the LM twin of the DSIR/quality
-    streaming parity tests."""
-    import time as _time
-
-    from firmable_company_data_pipeline_spark.operators import curation as cu
-
-    docs = load_tables(spark, sf_dir, "documents")["documents"]
-    model_dir = str(tmp_path / "lm_model")
-    cu.trigram_lm_table(docs.filter(F.col("doc_id") % 3 != 0)).write.parquet(
-        model_dir
-    )
-
-    pool = docs.select("doc_id", "text")
-    src = str(tmp_path / "lm_src")
-    pool.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(0.3)
-    pool.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    scores_dir = str(tmp_path / "lm_scores")
-    q = jobs.streaming_trigram_score(
-        stream, model_dir, scores_dir, checkpoint=str(tmp_path / "ckpt")
-    )
-    _drain(q)
-
-    cols = ["doc_id", "n_trigrams", "avg_logscore"]
-    streamed = _rows(spark.read.parquet(scores_dir), cols)
-    batch = _rows(
-        cu.trigram_lm_score_docs(pool, spark.read.parquet(model_dir)), cols
-    )
-    assert streamed == batch and streamed
-
-
 def test_streaming_corpus_screen_matches_composed_batch(spark, sf_dir, tmp_path):
     """The four-artifact ingest screen: verdicts over two micro-batches
     equal the composed batch computation (per-doc-independent scores +
@@ -2060,3 +1991,26 @@ def test_streaming_asof_enrich_matches_batch(spark, sf_dir, tmp_path):
     assert state.groupBy("user_id").count().filter("count > 1").count() == 0
     ids = jobs._committed_state_ids(spark, f"{target}/state")
     assert len(ids) <= 2  # retention: current + immediate predecessor
+
+
+def test_folds_share_one_skeleton():
+    """Every fold starts through ``_start`` and writes its per-batch
+    output through ``_write_batch``: the module holds exactly one
+    ``foreachBatch`` call, inside ``_start``, and the batch-key literal
+    only inside ``_write_batch``.  A fold that copies the skeleton
+    again fails here."""
+    import ast
+    import inspect
+
+    src = inspect.getsource(jobs)
+    funcs = [n for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)]
+
+    def owners(needle):
+        return [
+            next((f.name for f in funcs if f.lineno <= i <= f.end_lineno), None)
+            for i, line in enumerate(src.splitlines(), 1)
+            if needle in line
+        ]
+
+    assert owners(".foreachBatch(") == ["_start"]
+    assert owners("={batch_id}") == ["_write_batch"]
