@@ -90,6 +90,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from firmable_company_data_pipeline_spark import get_spark
     from firmable_company_data_pipeline_spark.pipeline.run import run_pipeline_observed
+    from firmable_company_data_pipeline_spark.session import materialize
     from firmable_company_data_pipeline_spark.sources.commoncrawl import (
         HttpFetchClient,
         StubFetchClient,
@@ -122,7 +123,7 @@ def main(argv: list[str] | None = None) -> int:
             write_overwrite(matched, args.out)
             n = spark.read.parquet(args.out).count()
         else:
-            matched = matched.cache()
+            matched = materialize(matched, "share")
             n = matched.count()
             matched.show(20, truncate=False)
         print(f"matched rows: {n}")

@@ -78,17 +78,10 @@ def _profile_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(wordset, t)))
 
 
-def lang_scores(col: Column) -> Column:
-    """Struct of per-language stopword-hit counts (the n-gram heuristic's
-    evidence vector)."""
-    toks = tokens(col)
-    return F.struct(
-        *[_profile_hits(toks, ws).alias(lang) for lang, ws in LANG_PROFILES.items()]
-    )
-
-
 def detect_language_from(toks: Column) -> Column:
-    """Language argmax from a pre-computed token-array column."""
+    """Argmax language over the stopword profiles of a token-array
+    column; 'und' (undetermined) when no profile scores a hit.  Ties
+    break in LANG_PROFILES order (deterministic)."""
     hits = {lang: _profile_hits(toks, ws) for lang, ws in LANG_PROFILES.items()}
     best = F.greatest(*hits.values())
     out = F.lit("und")
@@ -96,13 +89,6 @@ def detect_language_from(toks: Column) -> Column:
     for lang in reversed(list(LANG_PROFILES)):
         out = F.when((hits[lang] > 0) & (hits[lang] == best), F.lit(lang)).otherwise(out)
     return out
-
-
-def detect_language(col: Column) -> Column:
-    """Argmax language over the stopword profiles; 'und' (undetermined)
-    when no profile scores a hit. Ties break in LANG_PROFILES order
-    (deterministic)."""
-    return detect_language_from(tokens(col))
 
 
 def quality_score_from(toks: Column, stripped: Column) -> Column:

@@ -32,13 +32,10 @@ combine; the packing window partitions on the shard key (parallel, no
 global sort); semantic dedup pairs only within cells (expected cell
 size N/n_cells, same candidate-generation contract as IVF ANN).
 
-Caching contract: operators whose plan reads an intermediate from BOTH
-sides of a join (``unigram_surprise``'s tf table,
-``semantic_dedup_pairs``'s assignment) ``persist()`` that intermediate
-and deliberately do NOT unpersist — the returned DataFrame is lazy, so
-the operator cannot know when its caches are safe to drop.  Long-lived
-sessions that call these repeatedly should ``spark.catalog.clearCache()``
-between logical runs (bench.py and check_contract.py do).
+Operators whose plan reads an intermediate from BOTH sides of a join
+(``unigram_surprise``'s tf table, ``semantic_dedup_pairs``'s
+assignment) materialize it and leave it to the caller: the returned
+DataFrame is lazy (ARCHITECTURE §3b).
 """
 
 from __future__ import annotations
@@ -53,7 +50,7 @@ from firmable_company_data_pipeline_spark.functions.textstats import (
     tokens,
 )
 from firmable_company_data_pipeline_spark.functions.vectors import dot, norm2, to_double
-from firmable_company_data_pipeline_spark.session import spread
+from firmable_company_data_pipeline_spark.session import materialize, spread
 
 # Gopher-style repetition thresholds (Rae et al. 2021 use 0.30 /
 # 0.20 / 0.60 on natural-language corpora for duplicate lines, top
@@ -388,7 +385,7 @@ def dsir_weight_table(
             F.sum(F.when(F.col("_tgt"), F.col("c")).otherwise(F.lit(0))).alias("ct"),
             F.sum(F.when(~F.col("_tgt"), F.col("c")).otherwise(F.lit(0))).alias("cs"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     totals = dist.agg(F.sum("ct").alias("tt"), F.sum("cs").alias("ts"))
     # One row for EVERY bucket in range(n_buckets), not just the buckets
@@ -512,12 +509,11 @@ def dsir_importance(
         (char_fold_hash(F.col("gram")) % n_buckets).alias("bucket"),
     )
     # per-(doc, bucket) feature counts — the one corpus-sized exchange;
-    # persisted because the distribution build and the scoring join both
-    # read it
+    # the distribution build and the scoring join both read it
     tf = (
         rows.groupBy("id", "_tgt", *carry, "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     dist = tf.groupBy("bucket").agg(
         F.sum(F.when(F.col("_tgt"), F.col("c")).otherwise(F.lit(0))).alias("ct"),
@@ -732,18 +728,13 @@ def semantic_dedup_pairs(
         .limit(n_cells)
         .withColumn("centn", F.sqrt(norm2(F.col("centv"))))
     )
-    # Persisted: the pair self-join reads the assignment on BOTH sides
-    # (same rationale as the MinHash signature table) — without it the
-    # centroid cross-score runs twice.  One (id, cell, vec) row per
-    # input vector, spill-safe.  nearest_cells is map-only (advice r7:
-    # the former per-id window here was a corpus-sized shuffle).
-    # persist(), NOT localCheckpoint (r14 revert of the r13 sweep): the
-    # cell self-join's broadcast decision reads this frame's stats —
-    # the stats-free checkpoint leaf forces sort-merge (the minhash
-    # signature-table mechanism, verdict r13 #4).
-    assigned = nearest_cells(
-        spread(emb), cents, id_col, vec_col, "id", 1
-    ).persist()
+    # Shared: the pair self-join reads the assignment on BOTH sides and
+    # picks its strategy from this frame's size.  nearest_cells is
+    # map-only (advice r7: the former per-id window here was a
+    # corpus-sized shuffle).
+    assigned = materialize(
+        nearest_cells(spread(emb), cents, id_col, vec_col, "id", 1), "share"
+    )
     a = assigned.select(
         F.col("id").alias("id_a"), "cell", F.col("v").alias("va"), F.col("n").alias("na")
     )
@@ -934,15 +925,13 @@ def boilerplate_stats(
         F.col("gram").isNotNull()
     )
     # pg feeds BOTH the doc-frequency branch and the per-doc rollup's
-    # probe side — without the persist the whole map-side gram assembly
-    # + first hash-agg executes twice (module caching contract; see
-    # docstring header).  Three narrow columns per (doc, gram); at
-    # 100 TB swap the gram string for xxhash64(gram) on both join
-    # sides to shrink the persisted footprint to 8-byte keys.
+    # probe side.  Three narrow columns per (doc, gram); at 100 TB swap
+    # the gram string for xxhash64(gram) on both join sides to shrink
+    # the materialized footprint to 8-byte keys.
     pg = (
         occ.groupBy("source", "id", "gram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     doc_freq = pg.groupBy("source", "gram").agg(
         F.count(F.lit(1)).alias("doc_freq")
@@ -1489,7 +1478,7 @@ def lm_perplexity_bins(
             "left",
         )
         .select(id_col, "source", "avg_logscore")  # n_trigrams unused here
-        .localCheckpoint(eager=True)
+        .transform(materialize, "iterate", eager=True)
     )
     unscored = scored.groupBy("source").agg(
         F.sum(F.col("avg_logscore").isNull().cast("long")).alias("n_unscored")

@@ -47,7 +47,7 @@ from firmable_company_data_pipeline_spark.functions.vectors import (
     probe_dim,
     to_double,
 )
-from firmable_company_data_pipeline_spark.session import spread
+from firmable_company_data_pipeline_spark.session import materialize, release, spread
 
 # Deterministic MinHash permutation parameters (a*h + b) % HASH_MOD.
 # Fixed Knuth-style multiplicative constants — shared verbatim with the
@@ -214,13 +214,11 @@ def ngram_jaccard_pairs(
         ex = ex.withColumn(
             "_df", F.count("*").over(Window.partitionBy("shingle"))
         ).filter(F.col("_df") <= max_df).drop("_df")
-    # Materialized once as persist(), NOT localCheckpoint (r14 revert of
-    # the r13 sweep): the inverted-index join reads this table as both
-    # sides, and the InMemoryRelation's size stats feed that join's
-    # broadcast decision — the stats-free checkpoint leaf regressed the
-    # ngram-pair consumers (dup_cluster_size_histogram 2.52 s -> 3.21 s,
-    # curation_report 3.37 s -> 3.82 s; verdict r13 #4).
-    ex = ex.persist()
+    # Shared, not checkpointed: the inverted-index join reads this table
+    # as both sides and picks broadcast from its size; the checkpoint
+    # leaf regressed the ngram-pair consumers (dup_cluster_size_histogram
+    # 2.52 s -> 3.21 s, curation_report 3.37 s -> 3.82 s; verdict r13 #4).
+    ex = materialize(ex, "share")
     a = ex.select(
         F.col("id").alias("id_a"), F.col("n_sh").alias("na"), F.col("shingle")
     )
@@ -386,11 +384,9 @@ def minhash_lsh_pairs(
     # id_a/id_b renames — without the persist the whole scan→shingle→agg
     # pipeline runs twice (measured 4-8× end-to-end).  16 longs per doc:
     # tiny relative to the corpus, spill-safe at scale.
-    # persist(), NOT localCheckpoint (r14 revert of the r13 sweep): the
-    # InMemoryRelation's size stats feed the band self-join's broadcast
-    # decision; the stats-free checkpoint leaf regressed
+    # Shared, not checkpointed: the checkpoint leaf regressed
     # minhash_recall_report 2.71 s -> 3.11 s (verdict r13 #4).
-    sig = minhash_signatures(df, text_col, id_col, n).persist()
+    sig = materialize(minhash_signatures(df, text_col, id_col, n), "share")
     bands = _lsh_bands(sig)
     left = bands.select(
         F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
@@ -626,7 +622,7 @@ def simhash_pairs(
         .agg(*votes)
         .select("id", fp_expr.alias("fp"))
         .unionByName(no_shingles)
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     band_structs = ", ".join(
         f"struct({i} AS band,"
@@ -983,28 +979,36 @@ def winnow_fingerprint_rows(
     collect_set dedups the selection stream's per-doc fingerprints
     directly — it satisfies its groupBy(id) from the selection window's
     existing id-partitioning, so no extra exchange beyond the window's."""
-    sel = _winnow_selection(df, text_col, id_col, k, w)
-    sets = sel.groupBy("id").agg(F.collect_set("fp").alias("fpset"))
+    return _fp_set_rows(_winnow_selection(df, text_col, id_col, k, w))
+
+
+def _fp_set_rows(fps: DataFrame) -> DataFrame:
+    """(id, n_fp, fp) index rows from any (id, fp) stream: one row per
+    (doc, distinct fingerprint), the doc's distinct count on each."""
+    sets = fps.groupBy("id").agg(F.collect_set("fp").alias("fpset"))
     return sets.select(
         "id", F.size("fpset").alias("n_fp"), F.explode("fpset").alias("fp")
     )
 
 
-def _winnow_df_cap(ex: DataFrame, max_df: int) -> DataFrame:
+def _winnow_df_cap(ex: DataFrame, max_df: int | None) -> DataFrame:
     """Drop fingerprints whose document frequency exceeds ``max_df``
-    from the pairing index (hot-fingerprint = cross-document
-    boilerplate; its df² is the plan's one superlinear term).  The df
-    is computed over whatever corpus ``ex`` represents — the BATCH
-    path's cap (the incremental path derives the same cap decisions
-    from additive per-fp counts instead, see
-    :func:`winnow_delta_pairs`)."""
+    (None keeps all) from the pairing index (hot-fingerprint =
+    cross-document boilerplate; its df² is the plan's one superlinear
+    term), materialized: every batch caller reads the capped rows from
+    both sides of a join.  The df is computed over whatever corpus
+    ``ex`` represents — the BATCH path's cap (the incremental path
+    derives the same cap decisions from additive per-fp counts instead,
+    see :func:`winnow_delta_pairs`)."""
     from pyspark.sql import Window
 
-    return (
-        ex.withColumn("_df", F.count("*").over(Window.partitionBy("fp")))
-        .filter(F.col("_df") <= max_df)
-        .drop("_df")
-    )
+    if max_df is not None:
+        ex = (
+            ex.withColumn("_df", F.count("*").over(Window.partitionBy("fp")))
+            .filter(F.col("_df") <= max_df)
+            .drop("_df")
+        )
+    return materialize(ex, "iterate")
 
 
 def winnow_df_table(index_fps: DataFrame) -> DataFrame:
@@ -1164,16 +1168,8 @@ def winnow_overlap_pairs(
     exact for pairs whose overlap is rare-fingerprint-borne and
     downward-biased for boilerplate-borne pairs — a precision-oriented
     cost knob, deterministic and identically mirrored in the oracle."""
-    ex = winnow_fingerprint_rows(df, text_col, id_col, k, w)
-    if max_df is not None:
-        ex = _winnow_df_cap(ex, max_df)
-    # Materialized once (lazy localCheckpoint, r13; was persist): the
-    # inverted-index join reads this table as both sides (without it the
-    # whole scan→window→agg pipeline runs twice), and lineage truncation
-    # stops per-consumer re-analysis of that pipeline.
-    return _winnow_pairs_join(
-        ex.localCheckpoint(eager=False), min_shared, min_containment
-    )
+    ex = _winnow_df_cap(winnow_fingerprint_rows(df, text_col, id_col, k, w), max_df)
+    return _winnow_pairs_join(ex, min_shared, min_containment)
 
 
 def _winnow_pairs_join(ex: DataFrame, min_shared: int, min_containment: float) -> DataFrame:
@@ -1238,30 +1234,37 @@ def winnow_match_spans(
     and the capped index is what both the pair join and the span
     semi-filter read — the corpus-length gram scan + per-doc selection
     window runs exactly once (pinned by ``tests/test_plan_shapes.py``)."""
-    fps_pos = winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(eager=False)
-    sets = fps_pos.groupBy("id").agg(F.collect_set("fp").alias("fpset"))
-    ex = sets.select(
-        "id", F.size("fpset").alias("n_fp"), F.explode("fpset").alias("fp")
-    )
-    if max_df is not None:
-        ex = _winnow_df_cap(ex, max_df)
-    ex = ex.localCheckpoint(eager=False)
-    pairs = _winnow_pairs_join(ex, min_shared, min_containment).select(
-        "id_a", "id_b"
-    )
+    return _matched_coords(*_winnow_evidence(
+        df, text_col, id_col, k, w, min_shared, min_containment, max_df
+    ))
+
+
+def _winnow_evidence(
+    df: DataFrame, text_col: str, id_col: str, k: int, w: int,
+    min_shared: int, min_containment: float, max_df: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The shared prefix of the span and report operators: (pairs,
+    capped) where ``pairs`` is the audited pair gate over the capped
+    index rows and ``capped`` the positioned (id, pos, fp) fingerprints
+    restricted to that same capped set.  One gram scan feeds both."""
+    fps_pos = materialize(winnow_fingerprints(df, text_col, id_col, k, w), "iterate")
+    ex = _winnow_df_cap(_fp_set_rows(fps_pos), max_df)
     capped = (
         fps_pos.join(ex.select("id", "fp"), ["id", "fp"], "left_semi")
         if max_df is not None
         else fps_pos
     )
-    a = capped.select(
-        F.col("id").alias("id_a"), F.col("pos").alias("pos_a"), "fp"
-    )
-    b = capped.select(
-        F.col("id").alias("id_b"), F.col("pos").alias("pos_b"), "fp"
-    )
+    return _winnow_pairs_join(ex, min_shared, min_containment), capped
+
+
+def _matched_coords(pairs: DataFrame, capped: DataFrame) -> DataFrame:
+    """(id_a, id_b, fp, pos_a, pos_b): every capped position of each
+    shared fingerprint, on both sides of every gated pair."""
+    a = capped.select(F.col("id").alias("id_a"), F.col("pos").alias("pos_a"), "fp")
+    b = capped.select(F.col("id").alias("id_b"), F.col("pos").alias("pos_b"), "fp")
     return (
-        pairs.join(a, "id_a")
+        pairs.select("id_a", "id_b")
+        .join(a, "id_a")
         .join(b, ["id_b", "fp"])
         .select("id_a", "id_b", "fp", "pos_a", "pos_b")
     )
@@ -1373,31 +1376,17 @@ def winnow_pair_report(
     fingerprint table is persisted once; the pair gate, the span
     coordinates, and the islands coalescing are all derived from it —
     the corpus gram scan never re-runs."""
-    fps_pos = winnow_fingerprints(df, text_col, id_col, k, w).localCheckpoint(eager=False)
-    sets = fps_pos.groupBy("id").agg(F.collect_set("fp").alias("fpset"))
-    ex = sets.select(
-        "id", F.size("fpset").alias("n_fp"), F.explode("fpset").alias("fp")
+    pairs, capped = _winnow_evidence(
+        df, text_col, id_col, k, w, min_shared, min_containment, max_df
     )
-    if max_df is not None:
-        ex = _winnow_df_cap(ex, max_df)
-    ex = ex.localCheckpoint(eager=False)
-    pairs = _winnow_pairs_join(ex, min_shared, min_containment).localCheckpoint(eager=False)
-    capped = (
-        fps_pos.join(ex.select("id", "fp"), ["id", "fp"], "left_semi")
-        if max_df is not None
-        else fps_pos
-    )
-    a = capped.select(F.col("id").alias("id_a"), F.col("pos").alias("pos_a"), "fp")
-    b = capped.select(F.col("id").alias("id_b"), F.col("pos").alias("pos_b"), "fp")
+    pairs = materialize(pairs, "iterate")
+    # three consumers below (runs + the two per-side coverages) —
+    # without it the pair gate + two position joins rerun 3×
     coords = (
-        pairs.select("id_a", "id_b")
-        .join(a, "id_a")
-        .join(b, ["id_b", "fp"])
+        _matched_coords(pairs, capped)
         .select("id_a", "id_b", "pos_a", "pos_b")
         .distinct()
-        # three consumers below (runs + the two per-side coverages) —
-        # without the cache the pair-gate + two position joins rerun 3×
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     runs = _coalesce_runs(coords, k)
     stats = runs.groupBy("id_a", "id_b").agg(
@@ -1586,7 +1575,9 @@ def block_delta_dedup(
     to :func:`block_dedup` restricted to the delta's documents; when
     ingest order is doc_id order the union over batches equals the
     batch operator (pinned in ``tests/test_streaming.py``)."""
-    blocks = block_rows(delta_docs, text_col, id_col, block_tokens).localCheckpoint(eager=False)
+    blocks = block_rows(delta_docs, text_col, id_col, block_tokens).transform(
+        materialize, "iterate"
+    )
     return _reassemble_blocks(
         block_delta_flags(
             index_blocks, delta_docs, text_col, id_col, block_tokens,
@@ -1658,12 +1649,7 @@ def winnow_contamination(
     family (``max_df`` evaluated over the full corpus), then one
     inverted-index equi-join filtered to train-left/eval-right and one
     pair-key aggregation."""
-    rows = winnow_fingerprint_rows(df, text_col, id_col, k, w)
-    if max_df is not None:
-        rows = _winnow_df_cap(rows, max_df)
-    # persisted: the bipartite join reads this once per side; without
-    # the cache the corpus gram scan runs twice
-    rows = rows.localCheckpoint(eager=False)
+    rows = _winnow_df_cap(winnow_fingerprint_rows(df, text_col, id_col, k, w), max_df)
     is_eval = (F.col("id") % eval_mod) == 0
     return fp_containment_flags(
         rows.filter(~is_eval), rows.filter(is_eval), min_shared, min_containment
@@ -1805,7 +1791,7 @@ def _cc_star(edges: DataFrame, max_iter: int = 20) -> tuple[DataFrame, int]:
     # dedup_clusters_star and the corpus flagship).  Lazy: the
     # signature-seed action below materializes cur AND these blocks in
     # the same job.
-    edges = edges.localCheckpoint(eager=False)
+    edges = materialize(edges, "iterate")
     # Node domain from the UNFILTERED endpoints: a node whose only
     # edges are self-loops must still appear in the output (as its own
     # cluster), matching the propagation path's contract — the
@@ -1819,7 +1805,7 @@ def _cc_star(edges: DataFrame, max_iter: int = 20) -> tuple[DataFrame, int]:
         edges.filter(F.col("src") != F.col("dst"))
         .select(F.greatest("src", "dst").alias("a"), F.least("src", "dst").alias("b"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     # Seed the convergence signature from the INITIAL edge set (the same
     # action also materializes cur's checkpoint): an input that is
@@ -1855,13 +1841,13 @@ def _cc_star(edges: DataFrame, max_iter: int = 20) -> tuple[DataFrame, int]:
         d = large.select(F.col("a").alias("u"), F.col("b").alias("v"))
         small_min = d.groupBy("u").agg(F.min("v").alias("m"))
         j = d.join(small_min, "u")
+        # lazy: the signature action below materializes the blocks
         nxt = (
             j.select(F.col("v").alias("a"), F.col("m").alias("b"))
             .unionByName(j.select(F.col("u").alias("a"), F.col("m").alias("b")))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            # lazy: the signature action below materializes the blocks
-            .localCheckpoint(eager=False)
+            .transform(materialize, "iterate")
         )
         # order-independent edge-set signature: count + XOR of row
         # hashes (a SUM would overflow long under ANSI; XOR cannot, and
@@ -1873,6 +1859,8 @@ def _cc_star(edges: DataFrame, max_iter: int = 20) -> tuple[DataFrame, int]:
                 F.count(F.lit(1)), F.expr("bit_xor(xxhash64(a, b))")
             ).first()
         )
+        # nxt's blocks are saved: no later plan reads the previous round
+        release(cur)
         cur = nxt
         if sig == prev_sig:
             converged = True
@@ -1941,18 +1929,17 @@ def connected_components(
         return labels
     edges = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-    # localCheckpoint, not persist, on the per-round label state: the
-    # update references the previous labels twice, so the logical plan
-    # doubles per round and Catalyst re-analysis turns superlinear once
-    # the graph is deep enough to need many rounds (persist caches
-    # execution, not analysis).  Shallow near-dup graphs never hit it;
-    # a diameter-8 component did.
+    ).transform(materialize, "iterate")
+    # checkpointed, not shared, label state: the update references the
+    # previous labels twice, so the logical plan doubles per round and
+    # Catalyst re-analysis turns superlinear once the graph needs many
+    # rounds.  Shallow near-dup graphs never hit it; a diameter-8
+    # component did.
     labels = (
         edges.select("src")
         .distinct()
         .select(F.col("src").alias("id"), F.col("src").alias("label"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
 
     converged = False
@@ -1976,14 +1963,16 @@ def connected_components(
                     "label"
                 ),
             )
-            .localCheckpoint(eager=False)
+            .transform(materialize, "iterate")
         )
         changed = upd.filter(F.col("label") != F.col("_old")).count()
-        labels = upd.select("id", "label")
+        # upd's blocks are saved: no later plan reads the previous labels
+        release(labels)
+        labels = upd
         if changed == 0:
             converged = True
             break
-    edges.unpersist()
+    release(edges)
     if not converged:
         raise RuntimeError(
             f"connected_components: min-label propagation still changing after "
@@ -2122,7 +2111,7 @@ def embedding_cosine_pairs(
         F.col(id_col).alias("id"),
         to_double(F.col(vec_col)).alias("v"),
         F.sqrt(norm2(to_double(F.col(vec_col)), d)).alias("nrm"),
-    ).localCheckpoint(eager=False)  # read as both join sides
+    ).transform(materialize, "iterate")  # read as both join sides
     a = base.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("norm_a")
     )
@@ -2187,9 +2176,8 @@ def bcubed_eval(assignments: DataFrame) -> DataFrame:
     npg = (
         assignments.groupBy("p", "g")
         .agg(F.count(F.lit(1)).alias("n_pg"))
-        .persist()
+        .transform(materialize, "share", eager=True)  # see docstring
     )
-    npg.count()  # eager cache fill; see docstring
     np_ = npg.groupBy("p").agg(F.sum("n_pg").alias("n_p"))
     ng = npg.groupBy("g").agg(F.sum("n_pg").alias("n_g"))
     terms = (

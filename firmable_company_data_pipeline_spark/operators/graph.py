@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from firmable_company_data_pipeline_spark.session import materialize
+
 
 # Fixed-point rank scale: ranks are carried as SCALED 64-bit integers
 # (1 rank unit = 10^-12) so every sum is exact integer addition —
@@ -55,26 +57,21 @@ def pagerank(
     d_num = int(round(damping * 1000))
     d_den = 1000
     a, b = F.col(id_a), F.col(id_b)
-    # Persisted: the edge list appears in EVERY iteration's lineage (the
-    # join) plus the degree/node builds — without the persist the pair
-    # stream upstream (typically a full near-dup detection) re-executes
-    # once per reference (~iters+2 times; measured 56 s → 3 s at bench
-    # scale).  Same contract as the MinHash signature table: caller
-    # clears the cache between logical runs.
+    # The edge list appears in EVERY iteration's lineage (the join) plus
+    # the degree/node builds — unmaterialized, the pair stream upstream
+    # (typically a full near-dup detection) re-executes once per
+    # reference (~iters+2 times; measured 56 s → 3 s at bench scale).
+    # Checkpointed PRE-PARTITIONED on the join key (r13): every
+    # iteration's edge⋈rank join reuses this layout for the edge side —
+    # one exchange per iteration instead of two.
     edges = (
         pairs.select(a.alias("src"), b.alias("dst"))
         .unionByName(pairs.select(b.alias("src"), a.alias("dst")))
         .distinct()
-        # Checkpointed PRE-PARTITIONED on the join key (r13; was
-        # persist): every iteration's edge⋈rank join reuses this layout
-        # for the edge side — one exchange per iteration instead of two
-        # — and the truncated lineage keeps the per-iteration plans
-        # (which reference the edge set once per power step) from
-        # re-embedding the caller's full pair pipeline.
         .repartition(F.col("src"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
+    deg = materialize(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "share")
     # The ONLY driver-side value is the node count — one scalar, same
     # contract as connected_components' convergence count.  Inlining N
     # as a literal removes a 1-row broadcast cross-join (its own AQE
@@ -151,7 +148,7 @@ def triangle_count(
         # arbitrary caller pair-streams behave.
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     # Orient u→v iff (deg(u), u) < (deg(v), v); keep each edge once.
@@ -237,13 +234,13 @@ def bfs_levels(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, "iterate", eager=True)
     )
     visited = (
         seeds.select(F.col(id_col).alias("id"))
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
+        .transform(materialize, "iterate", eager=True)
     )
     frontier = visited.select("id")
     for hop in range(1, max_hops + 1):
@@ -252,9 +249,9 @@ def bfs_levels(
             .select(F.col("v").alias("id"))
             .distinct()
             .join(visited, "id", "left_anti")
-            .localCheckpoint()
+            .transform(materialize, "iterate", eager=True)
         )
         visited = visited.union(
             frontier.withColumn("dist", F.lit(hop))
-        ).localCheckpoint()
+        ).transform(materialize, "iterate", eager=True)
     return visited

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from firmable_company_data_pipeline_spark.session import materialize
+
 
 def salted_join(
     left: DataFrame,
@@ -229,13 +231,12 @@ def bloom_semi_join(
     so the verify shuffle carries essentially only true matches.
     """
     _require_integral_key(left, left_key)
-    # rk feeds BOTH the bloom build and the exact verify join —
-    # checkpoint so the right side's scan + key-dedup shuffle runs once
-    # (review r12; the mmr_rerank consumed-N-times convention).
+    # rk feeds BOTH the bloom build and the exact verify join, so the
+    # right side's scan + key-dedup shuffle runs once (review r12)
     rk = (
         right.select(F.col(right_key).alias("_k"))
         .dropDuplicates(["_k"])
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     words = bloom_partial(rk, "_k", n_bits, n_hashes, assume_distinct=True)
     bloom = words.agg(

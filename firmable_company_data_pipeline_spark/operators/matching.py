@@ -44,6 +44,7 @@ from firmable_company_data_pipeline_spark.functions.similarity import (
     bounded_levenshtein_ratio,
     token_sort,
 )
+from firmable_company_data_pipeline_spark.session import materialize
 
 # ---------------------------------------------------------------------------
 
@@ -279,19 +280,6 @@ def fuzzy_match(
 
 # ---------------------------------------------------------------------------
 # Stage 3 — LLM-assisted matching (J5/UD2).
-
-
-def abbreviation_signature(name: Column) -> Column:
-    """Deterministic signature used by the stub client: first letter of
-    each word, lowercased, joined — ``"Acme Holdings Pty" -> "ahp"``.
-
-    Rationale: the reference's own test recipe builds its "LLM-shaped"
-    variants by abbreviating words of the entity name
-    (test/entity_matching_test.py:36-42), so an initials signature is
-    exactly the structure the LLM stage is meant to recover.
-    """
-    words = F.split(F.trim(F.lower(name)), r"\s+")
-    return F.array_join(F.transform(words, lambda wd: F.substring(wd, 1, 1)), "")
 
 
 def stub_llm_client(crawl_names: list[str], candidates: list[dict]) -> list[str | None]:
@@ -544,22 +532,18 @@ def match_cascade(
     cleans each source once instead of once per tier (with a real fetch
     client, every extra copy re-fetches every page).
     """
-    # persist(), NOT localCheckpoint (r14, reverting an r13 sweep
-    # conversion): callers attach Observation metrics upstream
-    # (pipeline.run_pipeline_observed) and a checkpoint buries the
-    # CollectMetrics node inside an RDD leaf whose materialization
-    # never fires a query-execution end event — the observed counts
-    # silently read 0.  persist keeps the observe node in the acting
-    # plan (and keeps size stats for the downstream join planning).
-    cc, abr = cc.persist(), abr.persist()
-    rule = rule_based_match(cc, abr).persist()
+    # Shared, not checkpointed (r14): callers attach Observation metrics
+    # upstream (pipeline.run_pipeline_observed), and inside a checkpoint
+    # the observed counts silently read 0.
+    cc, abr = materialize(cc, "share"), materialize(abr, "share")
+    rule = materialize(rule_based_match(cc, abr), "share")
 
     residual1 = anti_join_residual(cc, rule, "domain")
     fuzzy = fuzzy_match(residual1, abr, threshold=threshold, scorer=scorer)
 
     stages = [rule, fuzzy]
     if enable_llm:
-        fuzzy = fuzzy.persist()
+        fuzzy = materialize(fuzzy, "share")
         stages[1] = fuzzy
         # residual1 already excludes every rule-matched domain, so the
         # second residual only needs to subtract the fuzzy matches —

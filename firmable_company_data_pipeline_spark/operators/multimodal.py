@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from firmable_company_data_pipeline_spark.session import materialize
+
 HASH_MOD = 1_000_000_007
 
 MEDIA_SCHEMA = StructType(
@@ -341,12 +343,11 @@ def phash_dup_pairs(
     band, never N².  Verification is one ``bit_count(xor)`` per
     candidate.  Output: (id_a, id_b, hamming) with id_a < id_b.
 
-    The hash table feeds all ``PHASH_BANDS`` self-joins: persisted so
-    the Arrow decode stage runs once, not 2×bands times (same contract
-    as the MinHash signature persist — caller owns cache lifetime).
+    The hash table feeds all ``PHASH_BANDS`` self-joins: shared so the
+    Arrow decode stage runs once, not 2×bands times.
     """
     bits_per = -(-PHASH_BITS // PHASH_BANDS)
-    ph = extract_phash(media, decoder).persist()
+    ph = materialize(extract_phash(media, decoder), "share")
     mask = (1 << bits_per) - 1
     cands = None
     for b in range(PHASH_BANDS):

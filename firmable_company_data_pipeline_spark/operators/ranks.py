@@ -20,12 +20,10 @@ prefix).  Everything is exact and engine-deterministic as long as
 ``order_cols`` is a total order (include a unique tie-break column),
 because rank values are independent of where the range boundaries fall.
 
-The range-partitioned frame is persisted: the offset build and the row
-output are separate jobs, and RangePartitioner re-samples per
-execution — without the persist the two jobs could disagree on
-partition boundaries and the offsets would be wrong.  Callers own the
-cache lifetime (the standing contract; bench/check_contract clearCache
-between queries).
+The range-partitioned frame is materialized: the offset build and the
+row output are separate jobs, and RangePartitioner re-samples per
+execution — without it the two jobs could disagree on partition
+boundaries and the offsets would be wrong.
 
 Used by ``queries.analytics.customer_rfm`` (quartile ntiles over the
 customer grain), ``queries.analytics.part_revenue_pareto`` (global
@@ -43,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from firmable_company_data_pipeline_spark.session import materialize
 
 _PID, _RN, _OFF, _TOT = "_rk_pid", "_rk_rn", "_rk_off", "_rk_tot"
 
@@ -64,7 +64,7 @@ def _range_partitioned(df: DataFrame, order_cols: list[str]) -> DataFrame:
     return (
         df.repartitionByRange(*[F.asc(c) for c in order_cols])
         .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
 
 

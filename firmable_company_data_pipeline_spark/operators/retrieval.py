@@ -37,7 +37,7 @@ from pyspark.sql.functions import broadcast
 
 from firmable_company_data_pipeline_spark.functions.textstats import tokens
 from firmable_company_data_pipeline_spark.functions.vectors import dot, to_double
-from firmable_company_data_pipeline_spark.session import spread
+from firmable_company_data_pipeline_spark.session import materialize, release, spread
 
 # BM25 shape parameters (standard Robertson defaults).
 BM25_K1 = 1.2
@@ -80,14 +80,13 @@ def bm25_topk(
     occ = sized.select(
         "id", "dl", F.explode("toks").alias("tok")
     ).filter(F.array_contains(terms, F.col("tok")))
-    # Persisted: df_t derives FROM tf and joins back to it — without
-    # the persist the posting-list scan runs twice (once to build the
+    # df_t derives FROM tf and joins back to it (once to build the
     # broadcast df table, once for the probe side).  Size is bounded by
     # |matched docs| × |query terms|.
     tf = (
         occ.groupBy("id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     df_t = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(
@@ -341,16 +340,13 @@ def vocab_coverage(
     fix, the doc_length_deciles defect class).
     """
     max_cp = max(checkpoints)
-    # Persisted: the vocabulary feeds the top-N branch AND the total-sum
-    # branch — without it the corpus tokenize+agg runs twice (caller
-    # owns cache lifetime; bench/check_contract clearCache between
-    # queries).
+    # the vocabulary feeds the top-N branch AND the total-sum branch
     freq = (
         spread(docs)
         .select(F.explode(tokens(F.col(text_col))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     # deterministic total order -> limit picks exactly the rank-filter set
     top = freq.orderBy(F.desc("n"), F.asc("tok")).limit(max_cp)
@@ -547,7 +543,7 @@ def bpe_train(
                 F.regexp_replace("tok", "(.)", "$1" + _BPE_SEP),
             ).alias("spelled"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     merges: list[tuple[int, str, str, int]] = []
     cur = words
@@ -584,10 +580,10 @@ def bpe_train(
         nxt = cur.select(
             "wc",
             F.replace(F.replace("spelled", pat, rep), pat, rep).alias("spelled"),
-        ).localCheckpoint(eager=True)
-        cur.unpersist()
+        ).transform(materialize, "iterate", eager=True)
+        release(cur)
         cur = nxt
-    cur.unpersist()
+    release(cur)
     return spark.createDataFrame(
         merges, "step int, lhs string, rhs string, n_occurrences long"
     )

@@ -33,7 +33,7 @@ from firmable_company_data_pipeline_spark.functions.vectors import (
     probe_dim,
     to_double,
 )
-from firmable_company_data_pipeline_spark.session import spread
+from firmable_company_data_pipeline_spark.session import materialize, release, spread
 
 
 def kmeans_centroids(
@@ -741,7 +741,7 @@ def pq_kmeans_codebooks(
     if d % m != 0:
         raise ValueError(f"dim {d} not divisible into {m} PQ subspaces")
     sub_d = d // m
-    v = corpus.select(to_double(F.col(vec_col)).alias("v")).localCheckpoint(eager=False)
+    v = materialize(corpus.select(to_double(F.col(vec_col)).alias("v")), "iterate")
     spark = corpus.sparkSession
     rows = []
     for j in range(m):
@@ -751,7 +751,7 @@ def pq_kmeans_codebooks(
         model = KMeans(k=ks, seed=seed + j, maxIter=max_iter).fit(feats)
         for c, center in enumerate(model.clusterCenters()):
             rows.append((j, c, [float(x) for x in center]))
-    v.unpersist()
+    release(v)
     return spark.createDataFrame(
         rows, "sub int, cell int, centv array<double>"
     )
@@ -1141,7 +1141,7 @@ def mmr_rerank(
             ).alias("rel"),
             F.sqrt(norm2(F.col("v"), d)).alias("nrm"),
         )
-        .localCheckpoint()  # scored once, probed k times
+        .transform(materialize, "iterate", eager=True)  # scored once, probed k times
     )
     spark = corpus.sparkSession
 

@@ -114,13 +114,25 @@ def run_pipeline(
     the sink (``sources.io``).  ``source`` selects the CC extraction arm
     (see ``run_commoncrawl_extraction``).
     """
+    return _pipeline(
+        spark, cc_index_path, abr_xml_path, commoncrawl_limit, abr_limit,
+        fetch_client, enable_llm, source, observe=lambda name, df: df,
+    )
+
+
+def _pipeline(
+    spark, cc_index_path, abr_xml_path, commoncrawl_limit, abr_limit,
+    fetch_client, enable_llm, source, observe,
+) -> DataFrame:
+    """The one extract → clean → match body; ``observe(name, frame)``
+    wraps each cleaned source (``cleaned_cc``, ``cleaned_abr``)."""
     cc_raw = run_commoncrawl_extraction(
         spark, cc_index_path, limit=commoncrawl_limit, client=fetch_client,
         source=source,
     )
     abr_raw = parse_abr_xml(spark, abr_xml_path, limit=abr_limit)
-    cc_clean = clean_commoncrawl_data(cc_raw)
-    abr_clean = clean_abr_data(abr_raw)
+    cc_clean = observe("cleaned_cc", clean_commoncrawl_data(cc_raw))
+    abr_clean = observe("cleaned_abr", clean_abr_data(abr_raw))
     return match_entities(cc_clean, abr_clean, enable_llm=enable_llm)
 
 
@@ -130,7 +142,8 @@ def run_pipeline_observed(
     abr_xml_path: str,
     **kwargs,
 ) -> tuple[DataFrame, dict]:
-    """``run_pipeline`` with in-flight metrics via the Observation API.
+    """``run_pipeline`` (same keyword arguments) with in-flight metrics
+    via the Observation API.
 
     The reference keeps running totals by counting rows in the driver
     loop (A7: extract/abr_parser.py:73,85-94, running ``total_count``;
@@ -148,30 +161,16 @@ def run_pipeline_observed(
         df.write.parquet(out)
         obs["cleaned_cc"].get   # {'n_rows': ..., 'n_with_abn': ...}
     """
+    import inspect
+
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from firmable_company_data_pipeline_spark.pipeline.cleaning import (
-        clean_abr_data,
-        clean_commoncrawl_data,
+    # run_pipeline's signature holds the defaults and rejects unknown keys
+    args = inspect.signature(run_pipeline).bind(
+        spark, cc_index_path, abr_xml_path, **kwargs
     )
-
-    cc_raw = run_commoncrawl_extraction(
-        spark, cc_index_path, limit=kwargs.get("commoncrawl_limit"),
-        client=kwargs.get("fetch_client"),
-        source=kwargs.get("source", "mapinpandas"),
-    )
-    abr_raw = parse_abr_xml(spark, abr_xml_path, limit=kwargs.get("abr_limit"))
-
-    obs = {"cleaned_cc": Observation("cleaned_cc"), "cleaned_abr": Observation("cleaned_abr")}
-    cc_clean = clean_commoncrawl_data(cc_raw).observe(
-        obs["cleaned_cc"],
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("abn").alias("n_with_abn"),
-    )
-    abr_clean = clean_abr_data(abr_raw).observe(
-        obs["cleaned_abr"],
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("abn").alias("n_with_abn"),
-    )
-    return match_entities(cc_clean, abr_clean, enable_llm=kwargs.get("enable_llm", False)), obs
+    args.apply_defaults()
+    obs = {name: Observation(name) for name in ("cleaned_cc", "cleaned_abr")}
+    counts = (F.count(F.lit(1)).alias("n_rows"), F.count("abn").alias("n_with_abn"))
+    return _pipeline(*args.args, observe=lambda n, df: df.observe(obs[n], *counts)), obs

@@ -78,6 +78,7 @@ from firmable_company_data_pipeline_spark.operators.ranks import (
 from firmable_company_data_pipeline_spark.session import (
     fs_write_text,
     load_tables,
+    materialize,
     spread,
 )
 
@@ -145,7 +146,7 @@ def _corpus_ff(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k2",
             (F.col("doc_id") == F.col("canon_id")).alias("k3"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     surv3 = f3.filter(F.col("k1") & F.col("k2") & F.col("k3"))
     near = (
@@ -191,7 +192,7 @@ def _corpus_ff(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % 10 != 0).alias("k5"),
             F.col("_contam").isNotNull().alias("contam"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize, "iterate")
     )
     is_target = F.col("source").isin(*_TARGETS)
     gum = cu.dsir_importance(
@@ -289,7 +290,7 @@ def _shard_rows(
     final = (
         ffd.filter(F.col("ff").isNull())
         .select("doc_id", "n_tok")
-        .localCheckpoint(eager=True)
+        .transform(materialize, "iterate", eager=True)
     )
     surv_docs = docs.join(final.select("doc_id"), "doc_id")
     copies = rt.apply_mixing(surv_docs)  # (doc_id, source, n_copies)

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from firmable_company_data_pipeline_spark.functions import textstats as ts
 from firmable_company_data_pipeline_spark.operators import curation as cu
-from firmable_company_data_pipeline_spark.session import load_tables
+from firmable_company_data_pipeline_spark.session import load_tables, materialize
 
 _MOD = ts.HASH_MOD
 
@@ -289,17 +289,15 @@ def curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe side of the canon join — without it the full text_features
     # expression tree (tokenize + fingerprint fold + quality + lang)
     # executes twice.  Three narrow columns per doc, spill-safe.
-    # persist(), NOT localCheckpoint (r14 revert of the r13 sweep): the
-    # canon side of the q ⋈ canon join below is an aggregate OVER q, so
-    # its size estimate — and with it the broadcast decision — derives
-    # from q's stats; a stats-free checkpoint leaf forces the pessimist
-    # sort-merge path (the cross_source_shingle_overlap mechanism,
-    # verdict r13 #4; curation_report regressed 3.37 s -> 3.82 s).
+    # Shared, not checkpointed: the canon side of the q ⋈ canon join
+    # below is an aggregate OVER q, so its broadcast decision derives
+    # from q's size (curation_report regressed 3.37 s -> 3.82 s as a
+    # checkpoint; verdict r13 #4).
     q = stats.select(
         "doc_id",
         "fingerprint",
         ((F.col("quality") >= 0.5) & (F.col("lang_pred") == "en")).alias("q_keep"),
-    ).persist()
+    ).transform(materialize, "share")
     rep = cu.repetition_stats(docs).select("doc_id", F.col("keep").alias("rep_keep"))
     canon = q.groupBy("fingerprint").agg(F.min("doc_id").alias("canon_id"))
     ex = q.join(canon, "fingerprint").select(
@@ -1058,8 +1056,8 @@ def trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every downstream join is explicitly broadcast-hinted, so the
     # checkpoint's missing stats cannot change a join strategy (the
     # cross_source_shingle_overlap lesson does not apply).
-    model = cu.trigram_lm_table(docs.filter(in_train)).localCheckpoint(
-        eager=True
+    model = materialize(
+        cu.trigram_lm_table(docs.filter(in_train)), "iterate", eager=True
     )
     return cu.trigram_lm_score_docs(docs, model)
 
@@ -1130,8 +1128,8 @@ def lm_perplexity_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         < 80
     )
     # Same six-slice materialization as trigram_lm_score (r14).
-    model = cu.trigram_lm_table(docs.filter(in_train)).localCheckpoint(
-        eager=True
+    model = materialize(
+        cu.trigram_lm_table(docs.filter(in_train)), "iterate", eager=True
     )
     return cu.lm_perplexity_bins(docs, model, n_bins=3)
 

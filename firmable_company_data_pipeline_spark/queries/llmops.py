@@ -19,7 +19,7 @@ from firmable_company_data_pipeline_spark.functions import textstats as ts
 from firmable_company_data_pipeline_spark.operators import dedup as dd
 from firmable_company_data_pipeline_spark.operators import similarity_search as ann
 from firmable_company_data_pipeline_spark.operators.curation import SPLIT_TRAIN, SPLIT_VAL
-from firmable_company_data_pipeline_spark.session import load_tables, spread
+from firmable_company_data_pipeline_spark.session import load_tables, materialize, spread
 
 # --------------------------------------------------------------------------
 # Shared DuckDB SQL fragments (mirrors of the Spark expressions).
@@ -572,7 +572,7 @@ def dedup_incremental_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-runs the gram-scan + selection-window pipeline.  In production
     # both sides come back from parquet (index_dir + the additive
     # winnow_df_table), so this cache stands in for that storage.
-    fps = dd.winnow_fingerprint_rows(docs).localCheckpoint(eager=False)
+    fps = materialize(dd.winnow_fingerprint_rows(docs), "iterate")
     index = fps.filter(F.col("id") % 10 != 0)
     delta = fps.filter(F.col("id") % 10 == 0)
     # broadcast_delta: the delta is a bounded ingest batch by contract,
@@ -807,7 +807,7 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Signatures are per-doc, so one shingle pass over the corpus and a
     # split-by-id replaces two full pipelines (in production the index
     # side is read back from its parquet home, not recomputed at all).
-    sigs = dd.minhash_signatures(docs).localCheckpoint(eager=False)
+    sigs = materialize(dd.minhash_signatures(docs), "iterate")
     index = sigs.filter(F.col("id") % 10 != 0)
     delta = sigs.filter(F.col("id") % 10 == 0)
     return dd.minhash_delta_pairs(index, delta, threshold=0.5)
@@ -965,8 +965,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 # labeling is a connectivity-preserving star forest, the result must be
 # IDENTICAL to batch-clustering the full pair graph — which is exactly
 # what the shared DEDUP_CLUSTERS_SQL oracle computes.  The pair
-# generator runs once and is persisted (caller-owns lifetime); the
-# previous labeling is localCheckpoint'ed, not persisted: the fold
+# generator runs once and is checkpointed; so is the previous
+# labeling, not shared: the fold
 # consumes it twice (affected semi join + untouched anti join) AND
 # embeds it several times in its own output plan, so persist alone
 # leaves Catalyst re-analyzing the full CC lineage per consumer — the
@@ -974,13 +974,13 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (measured round 7: the two-fold chain went 24 s -> ~4 s of planning).
 def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    pairs = dd.ngram_jaccard_pairs(docs, threshold=0.8).localCheckpoint(eager=False)
+    pairs = materialize(dd.ngram_jaccard_pairs(docs, threshold=0.8), "iterate")
     is_new_a = F.col("id_a") % 4 == 0
     is_new_b = F.col("id_b") % 4 == 0
     old_pairs = pairs.filter(~is_new_a & ~is_new_b)
     delta = pairs.filter(is_new_a | is_new_b)
-    prev = dd.connected_components(old_pairs, deep_graphs=True).localCheckpoint(
-        eager=False
+    prev = materialize(
+        dd.connected_components(old_pairs, deep_graphs=True), "iterate"
     )
     return dd.incremental_components(prev, delta)
 
@@ -1001,15 +1001,13 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # day, so truncating lineage per fold is the load-bearing pattern).
 def dedup_clusters_incremental2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    pairs = dd.ngram_jaccard_pairs(docs, threshold=0.8).localCheckpoint(eager=False)
+    pairs = materialize(dd.ngram_jaccard_pairs(docs, threshold=0.8), "iterate")
     era = F.greatest(F.col("id_a"), F.col("id_b")) % 3
     base = pairs.filter(era == 0)
     day1 = pairs.filter(era == 1)
     day2 = pairs.filter(era == 2)
-    labels0 = dd.connected_components(base, deep_graphs=True).localCheckpoint(
-        eager=False
-    )
-    labels1 = dd.incremental_components(labels0, day1).localCheckpoint(eager=False)
+    labels0 = materialize(dd.connected_components(base, deep_graphs=True), "iterate")
+    labels1 = materialize(dd.incremental_components(labels0, day1), "iterate")
     return dd.incremental_components(labels1, day2)
 
 
@@ -1028,13 +1026,13 @@ def dedup_clusters_incremental_sliver(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_tables(spark, sf_dir, "documents")["documents"]
-    pairs = dd.ngram_jaccard_pairs(docs, threshold=0.8).localCheckpoint(eager=False)
+    pairs = materialize(dd.ngram_jaccard_pairs(docs, threshold=0.8), "iterate")
     is_new_a = F.col("id_a") % 100 == 0
     is_new_b = F.col("id_b") % 100 == 0
     old_pairs = pairs.filter(~is_new_a & ~is_new_b)
     delta = pairs.filter(is_new_a | is_new_b)
-    prev = dd.connected_components(old_pairs, deep_graphs=True).localCheckpoint(
-        eager=False
+    prev = materialize(
+        dd.connected_components(old_pairs, deep_graphs=True), "iterate"
     )
     return dd.incremental_components(prev, delta)
 
@@ -1625,9 +1623,9 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= 10
 # delta is one map pass plus an append, vs a full-corpus rebuild.
 def ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
-    # Frozen centroid set (8 rows); persisted because three consumers
+    # Frozen centroid set (8 rows); materialized because three consumers
     # (two assigns, one probe) would otherwise re-run the TakeOrdered.
-    cents = ann.default_centroids(emb, n_cells=8).localCheckpoint(eager=False)
+    cents = materialize(ann.default_centroids(emb, n_cells=8), "iterate")
     base = ann.ivf_assign(emb.filter(F.col("vec_id") % 4 != 0), cents)
     delta = ann.ivf_assign(emb.filter(F.col("vec_id") % 4 == 0), cents)
     index = base.unionByName(delta)
@@ -2102,9 +2100,8 @@ def cross_source_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("shingle")
         .agg(F.array_sort(F.collect_set("source")).alias("srcs"))
-        .persist()
+        .transform(materialize, "share", eager=True)
     )
-    srcsets.count()  # eager cache fill; see comment above
     tot = (
         srcsets.select(F.explode("srcs").alias("source"))
         .groupBy("source")
@@ -2201,11 +2198,10 @@ def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, 0)
     # persist the bounded cum table (|distinct lengths| rows): it feeds
     # the total, the lo boundary join and the hi boundary join — without
-    # the pin each consumer re-runs the corpus-wide hash-agg (advice r6;
-    # caller-owns-lifetime, same contract as vocab_coverage).
-    # persist(), NOT localCheckpoint (r14 revert of the r13 sweep): the
-    # table is kilobytes — checkpoint block-store traffic cost more than
-    # the lineage truncation saved (0.49 s -> 0.65 s, verdict r13 #4).
+    # the pin each consumer re-runs the corpus-wide hash-agg (advice r6).
+    # Shared, not checkpointed: the table is kilobytes — checkpoint
+    # block-store traffic cost more than the lineage truncation saved
+    # (0.49 s -> 0.65 s, verdict r13 #4).
     cum = (
         hist.select(
             "n_chars",
@@ -2213,7 +2209,7 @@ def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cnt").over(w).alias("cum_end"),
         )
         .withColumn("cum_start", F.col("cum_end") - F.col("cnt") + 1)
-        .persist()
+        .transform(materialize, "share")
     )
     total = cum.agg(F.sum("cnt").cast("long").alias("n_total"))
     q = F.floor(F.col("n_total") / 10)

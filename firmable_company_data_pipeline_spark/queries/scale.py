@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from firmable_company_data_pipeline_spark.operators.profile import skew_report
-from firmable_company_data_pipeline_spark.session import load_tables
+from firmable_company_data_pipeline_spark.session import load_tables, materialize
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str):
@@ -269,13 +269,11 @@ def term_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from firmable_company_data_pipeline_spark.session import spread
 
     docs = spread(_t(spark, sf_dir, "documents")["documents"])
-    # Persisted: the occurrence stream feeds the sketch build (D passes)
-    # and the exact counts; caller owns cache lifetime (the standing
-    # signature-table contract — bench.py and check_contract.py, the
-    # long-session callers, clearCache() between queries).
+    # the occurrence stream feeds the sketch build (D passes) and the
+    # exact counts
     occ = docs.select(F.explode(ts.tokens(F.col("text"))).alias("term")).select(
         "term", ts.char_fold_hash(F.col("term")).alias("h")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, "iterate")
 
     sketch = sk.cms_partial(occ)
     exact = occ.groupBy("term").agg(
@@ -440,12 +438,10 @@ def cms_error_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # Persisted: the occurrence stream feeds the sketch build and the
-    # exact counts (caller owns cache lifetime; the bench/check harness
-    # clears caches between queries).
+    # the occurrence stream feeds the sketch build and the exact counts
     occ = toks.select(F.explode(grams).alias("term")).select(
         "term", ts.char_fold_hash(F.col("term")).alias("h")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, "iterate")
     sketch = sk.cms_partial(occ)
     exact = occ.groupBy("term").agg(
         F.count(F.lit(1)).alias("exact_n"), F.min("h").alias("h")

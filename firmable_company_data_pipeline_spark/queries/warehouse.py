@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from firmable_company_data_pipeline_spark.session import load_tables
+from firmable_company_data_pipeline_spark.session import load_tables, materialize
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str):
@@ -777,7 +777,7 @@ def part_revenue_share_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_partkey")
         .agg(F.round(_dec_sum(F.col("amt")), 2).alias("value"))
-        .localCheckpoint(eager=False)  # consumed twice: threshold + screen
+        .transform(materialize, "iterate")  # consumed twice: threshold + screen
     )
     thresh = per_part.agg(
         (F.avg(F.col("value").cast("double")) * F.lit(_Q11_AVG_MULTIPLE)).alias(

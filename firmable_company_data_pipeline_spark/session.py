@@ -11,8 +11,10 @@ rather than hard-coded.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def is_schemed_path(path: str) -> bool:
@@ -277,6 +279,87 @@ def spread(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+# This thread's stack of open ``materialized()`` scopes, innermost last.
+# Per thread because ``foreachBatch`` runs each fold on the py4j callback
+# thread, not the one that started the stream.
+_scopes = threading.local()
+
+
+def _stack() -> list[list[DataFrame]]:
+    return _scopes.__dict__.setdefault("stack", [])
+
+
+def materialize(df: DataFrame, why: str, *, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once for the consumers that follow — the one
+    place the package decides between ``persist`` and
+    ``localCheckpoint`` (ARCHITECTURE §3b).
+
+    * ``why="share"`` — ``persist()``: a fan-out input read by several
+      branches.  The cached relation keeps ``sizeInBytes``, so joins
+      against it still pick broadcast from statistics, and it keeps the
+      ``Observation`` nodes inside it.
+    * ``why="iterate"`` — ``localCheckpoint``: lineage truncation for
+      iterative rounds and for frames whose consumers each re-embed a
+      very large upstream plan.  The checkpoint scan carries no size
+      statistics, so use it only where that plan explosion is the cost,
+      or where every downstream join is ``F.broadcast``-hinted.
+
+    Lazy by default: the first consumer's job fills it.  ``eager=True``
+    fills it now (one job), for sibling consumers of one action that
+    would otherwise each race the first fill.
+
+    Inside a ``materialized()`` scope the result is released when the
+    scope exits; outside any scope it is the caller's to ``release``
+    (``bench.clear_cached_state`` sweeps whatever is left)."""
+    if why == "share":
+        out = df.persist()
+        if eager:
+            out.count()
+    elif why == "iterate":
+        out = df.localCheckpoint(eager=eager)
+    else:
+        raise ValueError(f"materialize: unknown why={why!r} (share|iterate)")
+    if _stack():
+        _stack()[-1].append(out)
+    return out
+
+
+@contextmanager
+def materialized():
+    """Scope for ``materialize``: every frame materialized inside the
+    ``with`` block on this thread is released when it exits.  For work
+    that finishes its actions inside the block — a streaming fold's
+    micro-batch — never around an operator that returns a lazy frame."""
+    held: list[DataFrame] = []
+    _stack().append(held)
+    try:
+        yield
+    finally:
+        _stack().pop()
+        # persist() returns its own frame: one object can be held twice
+        for df in {id(d): d for d in reversed(held)}.values():
+            release(df)
+
+
+def release(df: DataFrame) -> None:
+    """Free one frame returned by ``materialize`` now — for loops that
+    drop state no later step reads.  A frame derived from it (a
+    ``select``, a filter) is not the materialization and raises.
+
+    ``DataFrame.unpersist()`` on a checkpoint frees nothing: its blocks
+    belong to the checkpoint's own RDD (the frame's ``LogicalRDD``
+    leaf), which only an RDD-level unpersist releases."""
+    for held in _stack():
+        held[:] = [d for d in held if d is not df]
+    if df.is_cached:
+        df.unpersist()
+        return
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() != "LogicalRDD":
+        raise ValueError("release: frame is neither persisted nor checkpointed")
+    plan.rdd().unpersist(False)
 
 
 def _read_events(spark: SparkSession, path: str):

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from firmable_company_data_pipeline_spark.session import materialize, materialized
+
 
 def read_jdbc(
     spark: SparkSession,
@@ -231,11 +233,11 @@ def incremental_append(
     from pyspark.sql import functions as F
 
     delta = source if hwm is None else source.filter(F.col(watermark_col) > F.lit(hwm))
-    delta = delta.persist()
-    n = delta.count()
-    if n:
-        delta.write.mode("append").parquet(sink_path)
-    delta.unpersist()
+    with materialized():
+        delta = materialize(delta, "share")
+        n = delta.count()
+        if n:
+            delta.write.mode("append").parquet(sink_path)
     return n
 
 

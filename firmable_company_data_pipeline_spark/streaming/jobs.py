@@ -49,6 +49,7 @@ from firmable_company_data_pipeline_spark.session import (
 from firmable_company_data_pipeline_spark.session import (
     is_schemed_path as _is_schemed_path,
 )
+from firmable_company_data_pipeline_spark.session import materialize, materialized
 
 
 def _rmtree_any(spark: SparkSession, path: str) -> None:
@@ -95,8 +96,17 @@ def _start(stream: DataFrame, fold, checkpoint: str | None):
     ``stream`` — the one start of every fold in this module.  The
     ``availableNow`` trigger drains a fixed file set deterministically;
     the checkpoint, when given, makes a restarted stream resume and
-    replay its last uncommitted batch."""
-    writer = stream.writeStream.foreachBatch(fold).trigger(availableNow=True)
+    replay its last uncommitted batch.  Each micro-batch runs inside a
+    ``materialized()`` scope: whatever the fold materializes (its own
+    shared frames, the CC rounds of a labels fold) is released when the
+    batch ends, so a long-running stream holds no cache between
+    batches."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        with materialized():
+            fold(batch_df, batch_id)
+
+    writer = stream.writeStream.foreachBatch(run).trigger(availableNow=True)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
     return writer.start()
@@ -429,8 +439,8 @@ def declare_upsert_layout(spark, target_dir: str, n_buckets: int = 32) -> None:
     existing = _bucket_markers(spark, target_dir)
     if existing and existing != [n_buckets]:
         raise ValueError(
-            f"upsert target {target_dir} already declares n_buckets "
-            f"{existing}; rebucketing requires a full reload"
+            f"bucketed target {target_dir} already declares n_buckets "
+            f"{existing}, not {n_buckets}; re-bucketing requires a rebuild"
         )
     fs, marker = _hadoop_fs(
         spark, target_dir.rstrip("/") + f"/_N_BUCKETS_{n_buckets}"
@@ -457,22 +467,14 @@ def _pin_bucket_count(spark, target_dir: str, n_buckets: int) -> None:
     prefixed paths are only hidden from Spark's file index when they
     don't look like partition paths."""
     existing = _bucket_markers(spark, target_dir)
-    if existing and existing != [n_buckets]:
+    if not existing and _read_parquet_or_none(spark, target_dir) is not None:
         raise ValueError(
-            f"bucketed target {target_dir} is declared with n_buckets "
-            f"{existing}, not {n_buckets}; re-bucketing requires a rebuild"
+            f"bucketed target {target_dir} carries no _N_BUCKETS_* "
+            "layout marker: it was seeded externally without "
+            "declare_upsert_layout()"
         )
-    if not existing:
-        if _read_parquet_or_none(spark, target_dir) is not None:
-            raise ValueError(
-                f"bucketed target {target_dir} carries no _N_BUCKETS_* "
-                "layout marker: it was seeded externally without "
-                "declare_upsert_layout()"
-            )
-        fs, marker = _hadoop_fs(
-            spark, target_dir.rstrip("/") + f"/_N_BUCKETS_{n_buckets}"
-        )
-        fs.createNewFile(marker)
+    if existing != [n_buckets]:
+        declare_upsert_layout(spark, target_dir, n_buckets)
 
 
 def _labels_layout_of(spark, labels_dir: str) -> str | None:
@@ -608,10 +610,10 @@ def streaming_minhash_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        delta = dd.minhash_signatures(batch_df).persist()
+        delta = materialize(dd.minhash_signatures(batch_df), "share")
         # banded once, shared by the touched-pbucket collect and the index
         # append; lazy, so a flat index never computes it
-        bands = dd.minhash_band_rows(delta, n_buckets).persist()
+        bands = materialize(dd.minhash_band_rows(delta, n_buckets), "share")
         hist = _history(spark, index_dir, batch_id, bands.select("pbucket"))
         # an existing index's layout wins over the parameter (writes
         # must follow reads or partition discovery would see
@@ -638,7 +640,7 @@ def streaming_minhash_dedup(
             index_bands=index_bands,
         )
         if labels_dir is not None:
-            pairs = pairs.persist()
+            pairs = materialize(pairs, "share")
         _write_batch(pairs, pairs_dir, batch_id)
         if use_banded:
             _write_batch(bands, index_dir, batch_id, by="pbucket")
@@ -653,9 +655,6 @@ def streaming_minhash_dedup(
                 )
             else:
                 _fold_labels_gen(spark, labels_dir, pairs, batch_id)
-            pairs.unpersist()
-        bands.unpersist()
-        delta.unpersist()
 
     return _start(docs, process, checkpoint)
 
@@ -720,7 +719,6 @@ def streaming_winnow_dedup(
     df_dir: str | None = None,
     broadcast_delta: bool = True,
     n_buckets: int = 64,
-    bucketed: bool = True,
 ):
     """Streaming MOSS/winnowing near-duplicate detection over a document
     stream — the Structured-Streaming composition of the incremental
@@ -768,19 +766,17 @@ def streaming_winnow_dedup(
     flat by ``scale_probe.py --streaming``).  Pass False for a
     one-shot large backfill.
 
-    Index layout (round 10): new streams partition both the
-    fingerprint index AND the df partials by ``bucket = fp %
-    n_buckets`` inside each ``batch_id=N``, and each fold partition-
-    prunes both scans to the delta's ≤ ``n_buckets`` touched buckets
-    (only rows whose fp occurs in the delta can ever join or feed the
-    cap) — per-batch index bytes read drop to roughly touched/total
-    buckets.  Unlike the minhash banded layout this one has NO read
-    amplification (same rows, just partitioned); the only cost is ≤
-    ``n_buckets`` files per batch write, so ``bucketed=False`` exists
-    mainly for parity.  An EXISTING flat index/df table is detected by
-    schema and served unchanged, each directory following its own
-    layout (the parameter applies to new directories only) — mixed
-    layouts within one directory are never produced.
+    Index layout (round 10): both the fingerprint index AND the df
+    partials are partitioned by ``bucket = fp % n_buckets`` inside each
+    ``batch_id=N``, and each fold partition-prunes both scans to the
+    delta's ≤ ``n_buckets`` touched buckets (only rows whose fp occurs
+    in the delta can ever join or feed the cap) — per-batch index bytes
+    read drop to roughly touched/total buckets.  Unlike the minhash
+    banded layout this one has NO read amplification (same rows, just
+    partitioned); the only cost is ≤ ``n_buckets`` files per batch
+    write.  A directory without the ``bucket`` partition column (the
+    flat layout of streams older than round 10) raises: rewrite it
+    bucketed, or start fresh.
     """
     from firmable_company_data_pipeline_spark.operators import dedup as dd
 
@@ -789,33 +785,14 @@ def streaming_winnow_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        delta = dd.winnow_fingerprint_rows(batch_df).persist()
+        delta = materialize(dd.winnow_fingerprint_rows(batch_df), "share")
         # only index/df rows whose fp occurs in the delta can join or
         # feed the cap: both reads prune to the delta's buckets
         fp_bucket = F.pmod(F.col("fp"), F.lit(n_buckets))
         touched = delta.select(fp_bucket.alias("bucket"))
-        hist = _history(spark, index_dir, batch_id, touched)
-        # an existing index's layout wins over the parameter (writes
-        # follow reads per directory)
-        use_bucketed = bucketed if hist is None else "bucket" in hist.columns
-        if use_bucketed:
-            _pin_bucket_count(spark, index_dir, n_buckets)
-        if hist is not None:
-            index = hist.select("id", "n_fp", "fp")
-        else:
-            index = spark.createDataFrame([], delta.schema)
         index_df = None
-        df_bucketed = use_bucketed
         if max_df is not None:
-            hist_df = _history(spark, df_dir, batch_id, touched)
-            # the df table follows ITS OWN existing layout (a legacy
-            # flat table next to a freshly-bucketed index stays flat
-            # until compacted — never mixed within one directory)
-            df_bucketed = (
-                use_bucketed if hist_df is None else "bucket" in hist_df.columns
-            )
-            if df_bucketed:
-                _pin_bucket_count(spark, df_dir, n_buckets)
+            hist_df = _bucketed_history(spark, df_dir, batch_id, touched, n_buckets)
             if hist_df is not None:
                 index_df = hist_df.select("fp", "df")
             elif any(
@@ -840,6 +817,11 @@ def streaming_winnow_dedup(
                 )
             else:
                 index_df = dd.winnow_df_table(delta).limit(0)
+        hist = _bucketed_history(spark, index_dir, batch_id, touched, n_buckets)
+        if hist is not None:
+            index = hist.select("id", "n_fp", "fp")
+        else:
+            index = spark.createDataFrame([], delta.schema)
         pairs = dd.winnow_delta_pairs(
             index,
             delta,
@@ -855,22 +837,39 @@ def streaming_winnow_dedup(
         # replay overwrites both — never "index without df", the state
         # the guard above must treat as a lost df table.
         if max_df is not None:
-            partial = dd.winnow_df_table(delta)
-            if df_bucketed:
-                partial = partial.withColumn("bucket", fp_bucket)
             _write_batch(
-                partial, df_dir, batch_id, by="bucket" if df_bucketed else None
+                dd.winnow_df_table(delta).withColumn("bucket", fp_bucket),
+                df_dir, batch_id, by="bucket",
             )
-        if use_bucketed:
-            _write_batch(
-                delta.withColumn("bucket", fp_bucket), index_dir, batch_id,
-                by="bucket",
-            )
-        else:
-            _write_batch(delta, index_dir, batch_id)
-        delta.unpersist()
+        _write_batch(
+            delta.withColumn("bucket", fp_bucket), index_dir, batch_id, by="bucket"
+        )
 
     return _start(docs, process, checkpoint)
+
+
+def _bucketed_history(
+    spark: SparkSession, target_dir: str, batch_id: int, touched: DataFrame,
+    n_buckets: int,
+) -> DataFrame | None:
+    """``_history`` of a winnow index or df table, which must be laid
+    out by ``bucket``; a flat history raises rather than being read
+    whole and appended to in a second layout.  A directory holding only
+    the replaying batch's own partition (a first batch that crashed
+    after its write) has no history: the batch overwrites that
+    partition in the declared layout."""
+    if _batch_partition_ids(spark, target_dir) == [batch_id]:
+        declare_upsert_layout(spark, target_dir, n_buckets)
+        return None
+    _pin_bucket_count(spark, target_dir, n_buckets)
+    hist = _history(spark, target_dir, batch_id, touched)
+    if hist is not None and "bucket" not in hist.columns:
+        raise ValueError(
+            f"streaming_winnow_dedup: {target_dir} has no bucket partition "
+            "column (a flat layout); rewrite it partitioned by "
+            f"bucket = fp % {n_buckets}, or start a fresh directory"
+        )
+    return hist
 
 
 def streaming_block_dedup(
@@ -922,22 +921,20 @@ def streaming_block_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        blocks = block_rows(batch_df, block_tokens=block_tokens).persist()
+        blocks = materialize(block_rows(batch_df, block_tokens=block_tokens), "share")
         bucket = F.pmod(F.xxhash64("block_text"), F.lit(n_buckets)).alias("bucket")
         index = _history(spark, index_dir, batch_id, blocks.select(bucket))
         if index is None:
             index = spark.createDataFrame([], "block_text string")
-        # persisted: the output plan and the index-append plan both read
-        # the fold's flags — without the cache each would rescan the
-        # index and redo the first-occurrence agg
+        # the output plan and the index-append plan both read the fold's
+        # flags — unshared, each would rescan the index and redo the
+        # first-occurrence agg
         flagged = block_delta_flags(
             index, batch_df, block_tokens=block_tokens, delta_blocks=blocks
-        ).persist()
+        ).transform(materialize, "share")
         _write_batch(_reassemble_blocks(flagged, "_keep"), out_dir, batch_id)
         new_blocks = flagged.filter("_keep").select("block_text", bucket)
         _write_batch(new_blocks, index_dir, batch_id, by="bucket")
-        flagged.unpersist()
-        blocks.unpersist()
 
     return _start(docs, process, checkpoint)
 
@@ -1070,7 +1067,7 @@ def _fold_labels_bucketed(
     new_labels = (
         dd.incremental_components(prev_l, fold_pairs)
         .withColumn("lbucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)))
-        .persist()
+        .transform(materialize, "share")
     )
     if prev is None:
         changed = new_labels
@@ -1084,7 +1081,6 @@ def _fold_labels_bucketed(
     if marker:
         tb |= set(marker["buckets"])
     if not tb:
-        new_labels.unpersist()
         return
     _fs_mkdirs(spark, labels_dir)
     _fs_write_text(
@@ -1102,7 +1098,6 @@ def _fold_labels_bucketed(
         .parquet(labels_dir)
     )
     _fs_delete(spark, marker_p)
-    new_labels.unpersist()
 
 
 def _repair_label_manifest(
@@ -1403,7 +1398,7 @@ def streaming_asof_enrich(
         )
         universe = (
             rights if prev is None else prev.unionByName(rights)
-        ).persist()  # consumed twice: the enrich join + the state fold
+        ).transform(materialize, "share")  # the enrich join + the state fold
         lefts = batch_df.filter(F.col("event_type") == left_type).select(
             F.col("event_id").alias("purchase_id"), F.col(key_col), F.col("ts")
         )
@@ -1435,7 +1430,6 @@ def streaming_asof_enrich(
         # anything older is unreachable by construction.
         for i in prior[:-1]:
             _rmtree_any(spark, state_dir + f"/batch={i}")
-        universe.unpersist()
 
     return _start(events, fold, checkpoint)
 
@@ -1768,11 +1762,13 @@ def streaming_scd2_dimension(
             ).limit(0)
         # the input dim carries open rows ONLY, so scd2_apply's
         # closed_history branch is empty and the valid_to split below
-        # recovers exactly (newly closed, next open set).  persist: the
+        # recovers exactly (newly closed, next open set).  Shared: the
         # fold runs THREE actions over this lineage (the non-empty
-        # probe, the closed write, the open staging write) — unpersisted
+        # probe, the closed write, the open staging write) — unshared
         # each would re-read open/ and re-run the merge (review r8)
-        merged = scd2_apply(open_rows, latest, keys, as_of_col=as_of_col).persist()
+        merged = materialize(
+            scd2_apply(open_rows, latest, keys, as_of_col=as_of_col), "share"
+        )
         newly_closed = merged.filter(F.col("valid_to").isNotNull())
         # closed rows append once, batch-keyed: replay overwrites its
         # own dir; skip-when-empty keeps no-op redeliveries clobber-free
@@ -1787,7 +1783,6 @@ def streaming_scd2_dimension(
         # (same class as the advice-r7 glob probes)
         fs, jtmp = _hadoop_fs(spark, tmp)
         fs.delete(jtmp, True)
-        merged.unpersist()
 
     return _start(changes, fold, checkpoint)
 

@@ -848,6 +848,32 @@ def test_streaming_winnow_refuses_index_without_df_table(spark, sf_dir, tmp_path
     shutil.rmtree(str(tmp_path / "ckpt"), ignore_errors=True)
 
 
+def test_streaming_winnow_refuses_flat_history(spark, sf_dir, tmp_path):
+    """The winnow fold serves only the bucketed layout: an index whose
+    history has no ``bucket`` partition column fails loudly instead of
+    being read whole and appended to in a second layout."""
+    from firmable_company_data_pipeline_spark.operators import dedup as dd
+
+    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
+        "doc_id", "text"
+    )
+    index_dir = str(tmp_path / "fp_index")
+    dd.winnow_fingerprint_rows(docs.limit(20)).write.parquet(
+        index_dir + "/batch_id=-1"
+    )
+    jobs.declare_upsert_layout(spark, index_dir, 64)
+    src = str(tmp_path / "src")
+    docs.filter(F.col("doc_id") < 5).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    q = jobs.streaming_winnow_dedup(
+        stream, index_dir, str(tmp_path / "pairs"),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(Exception, match="no bucket partition column"):
+        q.awaitTermination(120)
+        raise AssertionError("stream should have failed")  # pragma: no cover
+
+
 def test_streaming_winnow_first_batch_crash_autorecovers(spark, sf_dir, tmp_path):
     """Advice r9: a first batch that crashed AFTER the index-partition
     write but BEFORE the df-partition write (the pre-reorder layout)
