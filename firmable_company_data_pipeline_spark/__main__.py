@@ -75,14 +75,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--abr-limit", type=int, default=5)
     ap.add_argument("--online", action="store_true", help="real ranged-GET WARC fetch")
     ap.add_argument("--enable-llm", action="store_true")
-    ap.add_argument(
-        "--source",
-        choices=("mapinpandas", "ccfetch"),
-        default="mapinpandas",
-        help="CC extraction arm: the composable mapInPandas pipeline "
-        "(default) or the ccfetch Spark 4 Python DataSource twin "
-        "(fetch+parse fused into the scan; identical staging output)",
-    )
     args = ap.parse_args(argv)
 
     if not args.demo and not (args.cc_index and args.abr_xml):
@@ -90,7 +82,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from firmable_company_data_pipeline_spark import get_spark
     from firmable_company_data_pipeline_spark.pipeline.run import run_pipeline_observed
-    from firmable_company_data_pipeline_spark.session import materialize
+    from firmable_company_data_pipeline_spark.session import materialize, materialized
     from firmable_company_data_pipeline_spark.sources.commoncrawl import (
         HttpFetchClient,
         StubFetchClient,
@@ -98,26 +90,20 @@ def main(argv: list[str] | None = None) -> int:
     from firmable_company_data_pipeline_spark.sources.io import write_overwrite
 
     spark = get_spark("firmable-pipeline")
-    with tempfile.TemporaryDirectory() as tmp:
+    # the scope releases the cascade's shared inputs and the shown frame
+    with tempfile.TemporaryDirectory() as tmp, materialized():
         if args.demo:
             cc_index, abr_xml = _demo_inputs(Path(tmp))
         else:
             cc_index, abr_xml = args.cc_index, args.abr_xml
-        # ccfetch takes a client KIND (the DataSource option); the
-        # mapinpandas arm takes an injectable client object.
-        if args.source == "ccfetch":
-            client = "http" if args.online else "stub"
-        else:
-            client = HttpFetchClient() if args.online else StubFetchClient()
         matched, obs = run_pipeline_observed(
             spark,
             cc_index,
             abr_xml,
             commoncrawl_limit=args.cc_limit,
             abr_limit=args.abr_limit,
-            fetch_client=client,
+            fetch_client=HttpFetchClient() if args.online else StubFetchClient(),
             enable_llm=args.enable_llm,
-            source=args.source,
         )
         if args.out:
             write_overwrite(matched, args.out)

@@ -219,11 +219,11 @@ def ngram_jaccard_pairs(
     # leaf regressed the ngram-pair consumers (dup_cluster_size_histogram
     # 2.52 s -> 3.21 s, curation_report 3.37 s -> 3.82 s; verdict r13 #4).
     ex = materialize(ex, "share")
-    a = ex.select(
-        F.col("id").alias("id_a"), F.col("n_sh").alias("na"), F.col("shingle")
+    a = ex.alias("a").select(
+        F.col("id").alias("id_a"), F.col("n_sh").alias("na"), F.col("a.shingle")
     )
-    b = ex.select(
-        F.col("id").alias("id_b"), F.col("n_sh").alias("nb"), F.col("shingle")
+    b = ex.alias("b").select(
+        F.col("id").alias("id_b"), F.col("n_sh").alias("nb"), F.col("b.shingle")
     )
     # Size filter (PPJoin-family): jaccard(A,B) >= t forces
     # min(|A|,|B|)/max(|A|,|B|) >= t (common <= min and the denominator
@@ -238,12 +238,12 @@ def ngram_jaccard_pairs(
     pairs = (
         a.join(
             b,
-            (a["shingle"] == b["shingle"])
+            (F.col("a.shingle") == F.col("b.shingle"))
             & (F.col("id_a") < F.col("id_b"))
             & (F.col("na") >= size_t * F.col("nb"))
             & (F.col("nb") >= size_t * F.col("na")),
         )
-        .drop(b["shingle"])
+        .drop(F.col("b.shingle"))
         .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("common"))
         .withColumn(
@@ -1178,11 +1178,11 @@ def _winnow_pairs_join(ex: DataFrame, min_shared: int, min_containment: float) -
     :func:`winnow_overlap_pairs` and :func:`winnow_match_spans` (one
     definition so the pair gate the span listing applies can never
     drift from the pair operator's own scoring)."""
-    a = ex.select(F.col("id").alias("id_a"), F.col("n_fp").alias("na"), "fp")
-    b = ex.select(F.col("id").alias("id_b"), F.col("n_fp").alias("nb"), "fp")
+    a = ex.alias("a").select(F.col("id").alias("id_a"), F.col("n_fp").alias("na"), "a.fp")
+    b = ex.alias("b").select(F.col("id").alias("id_b"), F.col("n_fp").alias("nb"), "b.fp")
     return (
-        a.join(b, (a["fp"] == b["fp"]) & (F.col("id_a") < F.col("id_b")))
-        .drop(b["fp"])
+        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("id_a") < F.col("id_b")))
+        .drop(F.col("b.fp"))
         .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)

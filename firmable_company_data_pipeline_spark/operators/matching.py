@@ -20,8 +20,7 @@ Scale design (100 TB):
 - The fuzzy join is an **equi-join on the block key** followed by scoring
   and a per-left-row top-1 window — Catalyst plans a shuffled hash join on
   the block key; AQE's skew-join splitting handles hot blocks (CBD
-  postcodes). An optional ``salt`` explodes the *right* side R ways and
-  salts the left uniformly, bounding any single task.
+  postcodes).
 - Unlike the reference's 50k-row chunking (lines 276-295), the top-1 is
   **global** over all candidates — chunk-local arg-max was a documented
   lossy quirk (SURVEY §3.3), deliberately fixed.
@@ -54,7 +53,6 @@ def rule_based_match(
     abr: DataFrame,
     cc_key: str = "abn",
     abr_key: str = "abn",
-    broadcast_abr: bool = False,
 ) -> DataFrame:
     """Stage 1 — exact ABN equi-join with trim-at-join semantics (J1).
 
@@ -66,7 +64,7 @@ def rule_based_match(
     """
     cc_a, abr_a = cc.alias("cc"), abr.alias("abr")
     joined = cc_a.join(
-        F.broadcast(abr_a) if broadcast_abr else abr_a,
+        abr_a,
         F.trim(F.col(f"cc.{cc_key}")) == F.trim(F.col(f"abr.{abr_key}")),
         "inner",
     )
@@ -111,7 +109,6 @@ def similarity_join(
     scorer: str | Callable[[Column, Column], Column] = "native",
     left_id: str | None = None,
     right_id: str | None = None,
-    salt: int = 0,
 ) -> DataFrame:
     """Blocked fuzzy similarity join with global per-left-row top-1 (J4/A6/O3).
 
@@ -128,10 +125,6 @@ def similarity_join(
     ``scorer``: "native" (token-sort levenshtein ratio — JVM expression),
     "rapidfuzz" (exact token_sort_ratio parity via Arrow pandas UDF), or a
     custom ``(Column, Column) -> Column``.
-
-    ``salt``: when > 0, replicate the right side ``salt`` ways and spread
-    left rows uniformly across replicas of their block — bounds the task
-    size of pathologically hot blocks beyond what AQE splitting can do.
     """
     lkey, rkey = (block_key, block_key) if isinstance(block_key, str) else block_key
     left_id = left_id or left_text
@@ -148,17 +141,7 @@ def similarity_join(
         lprep = left.withColumn("_ts", token_sort(F.col(left_text)))
         rprep = right.withColumn("_ts", token_sort(F.col(right_text)))
 
-    if salt > 0:
-        la = lprep.withColumn(
-            "_salt", (F.crc32(F.col(left_id).cast("string")) % salt).cast("int")
-        ).alias("l")
-        ra = rprep.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-        ).alias("r")
-        cond = (lcol(lkey) == rcol(rkey)) & (lcol("_salt") == rcol("_salt"))
-    else:
-        la, ra = lprep.alias("l"), rprep.alias("r")
-        cond = lcol(lkey) == rcol(rkey)
+    la, ra = lprep.alias("l"), rprep.alias("r")
 
     if scorer == "native":
         # Early-abandon ratio: exact value for every pair ≥ threshold,
@@ -170,7 +153,7 @@ def similarity_join(
         score = scorer(lcol(left_text), rcol(right_text))
 
     scored = (
-        la.join(ra, cond, "inner")
+        la.join(ra, lcol(lkey) == rcol(rkey), "inner")
         .withColumn("match_score", F.round(score, 4))
         .filter(F.col("match_score") >= threshold)
     )
@@ -185,8 +168,8 @@ def similarity_join(
     top1 = scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
 
     out_cols = (
-        [lcol(c).alias(c) for c in left.columns if c != "_salt"]
-        + [rcol(c).alias(f"best_{c}") for c in right.columns if c != "_salt"]
+        [lcol(c).alias(c) for c in left.columns]
+        + [rcol(c).alias(f"best_{c}") for c in right.columns]
         + [
             F.col("match_score"),
             F.when(F.col("match_score") >= high_confidence, "high")
@@ -233,7 +216,6 @@ def fuzzy_match(
     abr: DataFrame,
     threshold: float = 80.0,
     scorer: str | Callable = "native",
-    salt: int = 0,
 ) -> DataFrame:
     """Stage 2 — fuzzy match on the dim-entity schema (J4 with the
     reference's column contract), emitting the same output shape as
@@ -260,7 +242,6 @@ def fuzzy_match(
         scorer=scorer,
         left_id="domain",
         right_id="r_abn",
-        salt=salt,
     )
     return out.select(
         F.col("domain"),

@@ -79,9 +79,9 @@ def skew_report(df: DataFrame, key: str, top_k: int = 10) -> DataFrame:
     """Heavy-hitter report for a prospective join/partition key: the
     ``top_k`` hottest key values with row counts and share of the table.
 
-    This is the pre-flight check for the salting / AQE-skew decisions the
-    matching cascade exposes (``similarity_join(salt=...)``): a key whose
-    top value holds >1/shuffle-partitions of the rows WILL straggle.
+    This is the pre-flight check for the salting / AQE-skew decisions
+    (``operators.joins.salted_join``, AQE skew-join splitting): a key
+    whose top value holds >1/shuffle-partitions of the rows WILL straggle.
 
     Plan: one partial-agg shuffle on the key (map-side combine does the
     heavy lifting — the shuffle carries one row per distinct key per map

@@ -26,59 +26,17 @@ def run_commoncrawl_extraction(
     index_path: str,
     limit: int | None = None,
     client=None,
-    source: str = "mapinpandas",
 ) -> DataFrame:
     """Index scan → partition-parallel fetch → parse (S3→S5→S6).
 
     ``limit`` mirrors the reference's smoke-run default
-    (run_pipeline.py:7: 5 records).
-
-    ``source`` selects the extraction arm (round 13; verdict r12 #7):
-
-    * ``"mapinpandas"`` (default) — the composable three-stage frame
-      pipeline (``read_cc_index`` → ``fetch_warc_html`` →
-      ``parse_pages``); accepts an injectable ``client`` OBJECT.
-    * ``"ccfetch"`` — the Spark 4 Python DataSource twin
-      (``sources/datasource.py``): byte-range index splits planned by
-      the source itself, fetch+parse fused into the scan.  ``client``
-      here is a KIND string (``"stub"``/``"http"``/None→stub) — a
-      client object cannot cross the DataSource option boundary, so
-      passing one raises instead of silently using the wrong arm.
-      Arm equality is pinned end-to-end by
-      tests/test_sources_pipeline.py.
+    (run_pipeline.py:7: 5 records) and applies to the index scan,
+    before the fetch.  ``client`` is an injectable fetch client object
+    (``StubFetchClient`` when None).
     """
     # match_cascade leaves its inputs persisted; without the refresh a
     # later pass over a file rewritten in place is served the old rows
     spark.catalog.refreshByPath(index_path)
-    if source == "ccfetch":
-        from firmable_company_data_pipeline_spark.sources.commoncrawl import (
-            derive_staging_fields,
-        )
-        from firmable_company_data_pipeline_spark.sources.datasource import (
-            register_cc_datasource,
-        )
-
-        if client is not None and not isinstance(client, str):
-            raise ValueError(
-                "source='ccfetch' takes client KINDS ('stub'/'http'), not a"
-                " client object — use source='mapinpandas' to inject one"
-            )
-        register_cc_datasource(spark)
-        ds = (
-            spark.read.format("ccfetch")
-            .option("path", index_path)
-            .option("client", client or "stub")
-            .load()
-        )
-        # limit applies to the PARSED rows here (the source plans its
-        # own index splits); the mapinpandas arm limits the index scan
-        # before the fetch — same rows on any fixture small enough for
-        # a smoke limit, documented asymmetry beyond it.
-        if limit:
-            ds = ds.limit(limit)
-        return derive_staging_fields(ds)
-    if source != "mapinpandas":
-        raise ValueError(f"unknown extraction source {source!r}")
     idx = read_cc_index(spark, index_path)
     if limit:
         idx = idx.limit(limit)
@@ -106,29 +64,26 @@ def run_pipeline(
     abr_limit: int | None = None,
     fetch_client=None,
     enable_llm: bool = False,
-    source: str = "mapinpandas",
 ) -> DataFrame:
     """extract_cc → extract_abr → clean both → match (run_pipeline.py:7-22).
 
     Returns the final matched dimension as a lazy DataFrame; callers pick
-    the sink (``sources.io``).  ``source`` selects the CC extraction arm
-    (see ``run_commoncrawl_extraction``).
+    the sink (``sources.io``).
     """
     return _pipeline(
         spark, cc_index_path, abr_xml_path, commoncrawl_limit, abr_limit,
-        fetch_client, enable_llm, source, observe=lambda name, df: df,
+        fetch_client, enable_llm, observe=lambda name, df: df,
     )
 
 
 def _pipeline(
     spark, cc_index_path, abr_xml_path, commoncrawl_limit, abr_limit,
-    fetch_client, enable_llm, source, observe,
+    fetch_client, enable_llm, observe,
 ) -> DataFrame:
     """The one extract → clean → match body; ``observe(name, frame)``
     wraps each cleaned source (``cleaned_cc``, ``cleaned_abr``)."""
     cc_raw = run_commoncrawl_extraction(
-        spark, cc_index_path, limit=commoncrawl_limit, client=fetch_client,
-        source=source,
+        spark, cc_index_path, limit=commoncrawl_limit, client=fetch_client
     )
     abr_raw = parse_abr_xml(spark, abr_xml_path, limit=abr_limit)
     cc_clean = observe("cleaned_cc", clean_commoncrawl_data(cc_raw))

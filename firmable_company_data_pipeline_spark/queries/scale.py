@@ -2,7 +2,7 @@
 operators you reach for BEFORE and INSTEAD OF expensive plans at 100 TB.
 
 * skew_report — heavy-hitter pre-flight for join/partition keys (feeds
-  the `similarity_join(salt=...)` / AQE-skew decisions).
+  the `salted_join` / AQE-skew decisions).
 * computed-key range binning — the rewrite that replaces a non-equi
   range join (BroadcastNestedLoop at best) with a pure projection.
 * HLL / t-digest sketches — approx distinct and approx quantiles,

@@ -321,14 +321,6 @@ def parse_pages(pages: DataFrame) -> DataFrame:
             )
 
     parsed = pages.mapInPandas(run, _PARSED_SCHEMA)
-    return derive_staging_fields(parsed)
-
-
-def derive_staging_fields(parsed: DataFrame) -> DataFrame:
-    """(url, title, text, structured_data) → the CC staging frame: every
-    derived field is a native Column expression (F1-F8), shared by the
-    mapInPandas pipeline and the ``ccfetch`` DataSource arm so both
-    produce the identical schema from the identical raw parse."""
     text = lib.clean_text(F.col("text"))
     domain = lib.extract_domain(F.col("url"))
     return parsed.select(

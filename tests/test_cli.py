@@ -6,15 +6,26 @@ from __future__ import annotations
 from firmable_company_data_pipeline_spark.__main__ import main
 
 
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_cli_demo_runs_end_to_end(spark, capsys, tmp_path):
+    # the session is shared with other tests: count what main() adds
+    before = _persistent_rdds(spark)
     rc = main(["--demo", "--out", str(tmp_path / "matched.parquet")])
     assert rc == 0
     out = capsys.readouterr().out
     assert "matched rows: 3" in out
     assert "observed[cleaned_cc]" in out
+    assert _persistent_rdds(spark) - before == set()
     back = spark.read.parquet(str(tmp_path / "matched.parquet"))
     assert back.count() == 3
     assert {r["match_method"] for r in back.collect()} == {"rule_based_abn"}
+    # the printing path materializes the matched frame too
+    assert main(["--demo", "--enable-llm"]) == 0
+    assert "matched rows: 3" in capsys.readouterr().out
+    assert _persistent_rdds(spark) - before == set()
 
 
 def test_headline_membership_rule():

@@ -154,24 +154,6 @@ def test_full_cascade(abr_df, cc_df):
         assert p.entity_name == ENTITIES[idx][0]
 
 
-def test_similarity_join_salted_equals_unsalted(spark, abr_df, cc_df):
-    left = cc_df.filter(F.col("domain").startswith("fuzzy-"))
-    right = abr_df.select(
-        "abn", "entity_name", F.col("postcode").alias("r_postcode")
-    )
-    base = similarity_join(
-        left, right, "company_name", "entity_name",
-        block_key=("postcode", "r_postcode"), left_id="domain",
-    )
-    salted = similarity_join(
-        left, right, "company_name", "entity_name",
-        block_key=("postcode", "r_postcode"), left_id="domain", salt=4,
-    )
-    b = {(r.domain, r.best_abn, r.match_score) for r in base.collect()}
-    s = {(r.domain, r.best_abn, r.match_score) for r in salted.collect()}
-    assert b == s and len(b) == len(ENTITIES)
-
-
 def test_phonetic_key_cases(spark):
     from firmable_company_data_pipeline_spark.functions.similarity import (
         phonetic_key,

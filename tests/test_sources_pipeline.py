@@ -174,40 +174,50 @@ def test_run_pipeline_end_to_end(spark, cc_index_path, abr_xml_path):
     }
 
 
-def test_run_pipeline_ccfetch_arm_matches_default(spark, cc_index_path, abr_xml_path):
-    """PIPELINE-level arm equality (round 13; the round-12 pin was
-    frame-level only): run_pipeline(source='ccfetch') produces the
-    identical matched dimension to the default mapInPandas arm — the
-    DataSource twin is a drop-in extraction replacement end-to-end."""
-    import pyspark.sql.functions as F
+def test_run_pipeline_reads_schemed_paths(spark, cc_index_path, abr_xml_path):
+    """``file://`` URIs for the index and the XML give the rows plain
+    paths give: the one extraction path reads through Spark's file
+    systems, so any scheme Spark reads (``s3a://``, ``hdfs://``) works."""
+    import pathlib
 
-    def norm(df):
-        drop = [c for c in ("creation_dt",) if c in df.columns]  # now()
-        return {
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in df.drop(*drop).collect()
-        }
+    def rows(idx, xml):
+        df = run_pipeline(spark, idx, xml, fetch_client=StubFetchClient())
+        return sorted(tuple(r) for r in df.drop("creation_dt").collect())
 
-    want = norm(
-        run_pipeline(
-            spark, cc_index_path, abr_xml_path, fetch_client=StubFetchClient()
-        )
-    )
-    got = norm(
-        run_pipeline(spark, cc_index_path, abr_xml_path, source="ccfetch")
-    )
-    assert got == want and len(got) == len(SLUGS)
-    # a client OBJECT cannot cross the DataSource boundary — loud refusal
-    import pytest as _pytest
+    idx_uri, xml_uri = (pathlib.Path(p).as_uri() for p in (cc_index_path, abr_xml_path))
+    assert idx_uri.startswith("file://") and xml_uri.startswith("file://")
+    want = rows(cc_index_path, abr_xml_path)
+    assert rows(idx_uri, xml_uri) == want
+    assert len(want) == len(SLUGS)
 
-    from firmable_company_data_pipeline_spark.pipeline.run import (
-        run_commoncrawl_extraction,
-    )
 
-    with _pytest.raises(ValueError, match="ccfetch"):
-        run_commoncrawl_extraction(
-            spark, cc_index_path, client=StubFetchClient(), source="ccfetch"
-        )
+def test_no_python_datasource():
+    """The Common Crawl extraction has one path, ``read_cc_index`` →
+    ``fetch_warc_html`` → ``parse_pages``: a second one built as a Python
+    DataSource fails here."""
+    import ast
+    import pathlib
+
+    import firmable_company_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            mods = []
+            if isinstance(node, ast.Import):
+                mods = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                mods = [node.module or ""]
+            register = (
+                isinstance(node, ast.Attribute)
+                and node.attr == "register"
+                and isinstance(node.value, ast.Attribute)
+                and node.value.attr == "dataSource"
+            )
+            if register or any(m.startswith("pyspark.sql.datasource") for m in mods):
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert hits == []
 
 
 def _executed_operators(df) -> list[str]:
@@ -532,155 +542,3 @@ def test_strip_html_bs4_arm_matches_reference_shape():
     assert title == "T & Co"  # strip=True + entity decode
     assert "visible text" in text
     assert json.loads(sd) == [{"a": 1}, {"b": 2}]
-
-
-# ---------------------------------------------------------------------------
-# ccfetch custom DataSource (round 12): the Spark 4 Python DataSource
-# arm must produce EXACTLY the pandas pipeline's staging frame.
-def test_ccfetch_datasource_matches_pipeline(spark, cc_index_path):
-    from firmable_company_data_pipeline_spark.sources.commoncrawl import (
-        derive_staging_fields,
-        fetch_warc_html,
-        parse_pages,
-    )
-    from firmable_company_data_pipeline_spark.sources.datasource import (
-        register_cc_datasource,
-    )
-
-    register_cc_datasource(spark)
-    ds = (
-        spark.read.format("ccfetch")
-        .option("path", cc_index_path)
-        .option("partitions", "3")
-        .load()
-    )
-    got = derive_staging_fields(ds)
-    want = parse_pages(fetch_warc_html(read_cc_index(spark, cc_index_path)))
-    def norm(rows):
-        return {
-            tuple(tuple(v) if isinstance(v, list) else v for v in r)
-            for r in rows
-        }
-
-    g = norm(got.collect())
-    w = norm(want.collect())
-    assert g == w and len(g) == len(SLUGS)  # P8 guard drops the bad record
-
-
-def test_ccfetch_partition_planning_owns_each_line_once(spark, cc_index_path):
-    """Byte-range splits with line-ownership resolution: however many
-    partitions are requested (including more than there are lines), each
-    index record is read exactly once."""
-    from firmable_company_data_pipeline_spark.sources.datasource import (
-        register_cc_datasource,
-    )
-
-    register_cc_datasource(spark)
-    for n in (1, 2, 7, 64):
-        ds = (
-            spark.read.format("ccfetch")
-            .option("path", cc_index_path)
-            .option("partitions", str(n))
-            .load()
-        )
-        urls = [r.url for r in ds.select("url").collect()]
-        assert len(urls) == len(set(urls)) == len(SLUGS), f"partitions={n}"
-
-
-def test_ccfetch_boundary_aligned_lines_read_exactly_once(spark, tmp_path):
-    """Fixed-width records whose length divides the file size land
-    every partition boundary ON a line start — the case where the old
-    ownership rule dropped the boundary line from both readers
-    (review r12)."""
-    from firmable_company_data_pipeline_spark.sources.datasource import (
-        register_cc_datasource,
-    )
-
-    recs = []
-    for i in range(4):
-        r = json.dumps(
-            {
-                "url": f"https://www.x{i}.com.au/",
-                "filename": f"seg/{i}.warc.gz",
-                "offset": str(i),
-                "length": "500",
-            }
-        )
-        recs.append(r)
-    width = max(len(r) for r in recs) + 1
-    # pad inside the JSON (trailing spaces after the closing brace are
-    # stripped by the reader's line.strip) -> pad the filename instead
-    recs = [
-        json.dumps(
-            {
-                "url": f"https://www.x{i}.com.au/",
-                "filename": f"seg/{i}.warc.gz".ljust(30, "_"),
-                "offset": str(i).rjust(6, "0"),
-                "length": "500",
-            }
-        )
-        for i in range(4)
-    ]
-    assert len({len(r) for r in recs}) == 1  # truly fixed width
-    path = str(tmp_path / "fixed.json")
-    with open(path, "w") as fh:
-        fh.write("\n".join(recs) + "\n")
-
-    register_cc_datasource(spark)
-    for n in (1, 2, 4, 8):
-        got = (
-            spark.read.format("ccfetch")
-            .option("path", path)
-            .option("partitions", str(n))
-            .load()
-            .select("url")
-            .collect()
-        )
-        urls = [r.url for r in got]
-        assert sorted(urls) == sorted(
-            f"https://www.x{i}.com.au/" for i in range(4)
-        ), f"partitions={n}: {urls}"
-
-
-def test_ccfetch_survives_foreign_cwd_workers(tmp_path):
-    """The reader executes on Python workers: from a driver running in
-    a FOREIGN cwd (no package on the workers' path), the by-value
-    registration must ship the fetch client + parser inside the pickle
-    (review r12 — lazy in-read imports ModuleNotFoundError'd here)."""
-    import subprocess
-    import sys as _sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    idx = tmp_path / "idx.json"
-    with open(idx, "w") as fh:
-        for i in range(5):
-            fh.write(
-                json.dumps(
-                    {
-                        "url": f"https://www.a{i}.com.au/",
-                        "filename": f"s/{i}.warc.gz",
-                        "offset": str(i),
-                        "length": "500",
-                    }
-                )
-                + "\n"
-            )
-    script = (
-        "import sys; sys.path.insert(0, %r)\n"
-        "from pyspark.sql import SparkSession\n"
-        "s = SparkSession.builder.master('local[2]').getOrCreate()\n"
-        "from firmable_company_data_pipeline_spark.sources.datasource import register_cc_datasource\n"
-        "register_cc_datasource(s)\n"
-        "out = s.read.format('ccfetch').option('path', %r).option('partitions', '3').load()\n"
-        "print('CCFETCH_ROWS', out.count())\n" % (repo, str(idx))
-    )
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    r = subprocess.run(
-        [_sys.executable, "-c", script],
-        cwd=str(tmp_path),
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=240,
-    )
-    assert "CCFETCH_ROWS 5" in r.stdout, r.stderr[-2000:]
