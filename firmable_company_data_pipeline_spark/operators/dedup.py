@@ -32,7 +32,9 @@ the DuckDB oracles reproduce results exactly (no Murmur3).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from firmable_company_data_pipeline_spark.functions.textstats import (
@@ -182,6 +184,79 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
+def _pair_join(
+    left: DataFrame,
+    right: DataFrame,
+    on: list[str],
+    carry: list[str],
+    delta: bool = False,
+    broadcast_right: bool = False,
+) -> DataFrame:
+    """The candidate-pair join of every near-dup family here: rows of
+    (id, *on, *carry) meet on the blocking key ``on`` (a shingle, a
+    winnow fingerprint, an LSH (band, bucket), a Hamming (band, key)).
+    Output: the ``on`` columns, ``id_a``/``id_b`` and each ``carry``
+    column suffixed ``_a``/``_b``.  Cost is Σ per-key df², never N².
+
+    Orientation, so each unordered pair forms once per shared key:
+
+    * self-join (``left`` and ``right`` the same rows): ``id_a < id_b``;
+    * ``delta=True``: ``left`` is index ∪ delta with a boolean ``_new``
+      tag, ``right`` the delta alone.  An index×delta pair has exactly
+      one orientation (index ids never appear on the right); a
+      delta×delta pair is kept only as ``id_a < id_b`` — one predicate,
+      ``id_a != id_b AND (id_a < id_b OR NOT _new_a)``.  Callers
+      normalize with least/greatest.
+
+    ``broadcast_right`` hints the right side to broadcast: the join is
+    then a map-side pass over the left, which is how the streaming folds
+    scan a growing index without shuffling it."""
+    tag = ["_new"] if delta else []
+    a = left.select(
+        F.col("id").alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in carry + tag], *on
+    )
+    b = right.select(F.col("id").alias("id_b"), *[F.col(c).alias(f"{c}_b") for c in carry], *on)
+    pairs = a.join(F.broadcast(b) if broadcast_right else b, on)
+    if delta:
+        return pairs.filter(F.col("id_a") != F.col("id_b")).filter(
+            (F.col("id_a") < F.col("id_b")) | ~F.col("_new_a")
+        )
+    return pairs.filter(F.col("id_a") < F.col("id_b"))
+
+
+def _earlier_band_match(n_bands: int, band_eq: Callable[[int], str]) -> Column:
+    """First-band-wins: a pair sharing several band keys meets once per
+    shared band; instead of a distinct() (a full shuffle of the
+    candidate stream) keep it only at its FIRST matching band.  True
+    when some band before the row's ``band`` is already equal —
+    ``band_eq(j)`` is the SQL test of band j on the ``_a``/``_b`` carry
+    columns — a pure predicate evaluated map-side, so callers filter on
+    its negation."""
+    arms = " ".join(
+        f"WHEN band = {i} THEN ({' OR '.join(band_eq(j) for j in range(i))})"
+        for i in range(1, n_bands)
+    )
+    return F.expr(f"CASE {arms} ELSE false END")
+
+
+def _df_cap(ex: DataFrame, key: str, max_df: int | None) -> DataFrame:
+    """Drop rows whose ``key`` occurs in more than ``max_df`` rows of
+    ``ex`` (None keeps all) — the CCNet-style hot-key cap of a pairing
+    index.  A hot key's df² is the one superlinear term of the pair
+    join; callers count ``ex`` at one row per (doc, key), so the count
+    is the key's document frequency over whatever corpus ``ex`` holds
+    (:func:`winnow_delta_pairs` reaches the same decisions from
+    additive per-batch counts instead).  Does not materialize: the
+    caller picks ``share`` or ``iterate``."""
+    if max_df is None:
+        return ex
+    return (
+        ex.withColumn("_df", F.count("*").over(Window.partitionBy(key)))
+        .filter(F.col("_df") <= max_df)
+        .drop("_df")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -203,57 +278,37 @@ def ngram_jaccard_pairs(
     and downward-biased otherwise: a recall/cost knob (CCNet-style),
     default off for oracle-exact semantics.
     """
-    from pyspark.sql import Window
-
     sets = shingle_sets(df, text_col, id_col, n)
     # Set size is free from the array — no count-over-window shuffle.
     ex = sets.select(
         "id", F.size("shset").alias("n_sh"), F.explode("shset").alias("shingle")
     )
-    if max_df is not None:
-        ex = ex.withColumn(
-            "_df", F.count("*").over(Window.partitionBy("shingle"))
-        ).filter(F.col("_df") <= max_df).drop("_df")
     # Shared, not checkpointed: the inverted-index join reads this table
     # as both sides and picks broadcast from its size; the checkpoint
     # leaf regressed the ngram-pair consumers (dup_cluster_size_histogram
     # 2.52 s -> 3.21 s, curation_report 3.37 s -> 3.82 s; verdict r13 #4).
-    ex = materialize(ex, "share")
-    a = ex.alias("a").select(
-        F.col("id").alias("id_a"), F.col("n_sh").alias("na"), F.col("a.shingle")
-    )
-    b = ex.alias("b").select(
-        F.col("id").alias("id_b"), F.col("n_sh").alias("nb"), F.col("b.shingle")
-    )
+    ex = materialize(_df_cap(ex, "shingle", max_df), "share")
     # Size filter (PPJoin-family): jaccard(A,B) >= t forces
     # min(|A|,|B|)/max(|A|,|B|) >= t (common <= min and the denominator
-    # >= max), so size-mismatched pairs are dropped INSIDE the join —
-    # evaluated per candidate row, before any pair ever reaches the
-    # (id_a, id_b) aggregation.  On Zipf-ish corpora this removes the
-    # bulk of the df² blowup of hot shingles (short docs pair with
-    # everything).  The bound is slackened by 1e-6 because the OUTPUT
-    # filter compares the ROUNDED jaccard (round(j,6) >= t admits true
-    # j >= t - 5e-7); with the slack no emitted pair can be pruned.
+    # >= max), so size-mismatched pairs are dropped INSIDE the join
+    # (Catalyst pushes the filter into the join condition) — evaluated
+    # per candidate row, before any pair ever reaches the (id_a, id_b)
+    # aggregation.  On Zipf-ish corpora this removes the bulk of the df²
+    # blowup of hot shingles (short docs pair with everything).  The
+    # bound is slackened by 1e-6 because the OUTPUT filter compares the
+    # ROUNDED jaccard (round(j,6) >= t admits true j >= t - 5e-7); with
+    # the slack no emitted pair can be pruned.
     size_t = threshold - 1e-6
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("id_a") < F.col("id_b"))
-            & (F.col("na") >= size_t * F.col("nb"))
-            & (F.col("nb") >= size_t * F.col("na")),
-        )
-        .drop(F.col("b.shingle"))
-        .groupBy("id_a", "id_b", "na", "nb")
+    na, nb = F.col("n_sh_a"), F.col("n_sh_b")
+    return (
+        _pair_join(ex, ex, ["shingle"], ["n_sh"])
+        .filter((na >= size_t * nb) & (nb >= size_t * na))
+        .groupBy("id_a", "id_b", "n_sh_a", "n_sh_b")
         .agg(F.count(F.lit(1)).alias("common"))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("common") / (F.col("na") + F.col("nb") - F.col("common")), 6),
-        )
+        .withColumn("jaccard", F.round(F.col("common") / (na + nb - F.col("common")), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return pairs
 
 
 def minhash_signature(text: Column, n: int = 3) -> Column:
@@ -338,23 +393,13 @@ def _lsh_bands(sig: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
     return sig.selectExpr("id", "sig", *extra, f"inline(array({band_structs}))")
 
 
-# First-band-wins dedup: a pair sharing several band buckets appears
-# once per shared band; instead of a distinct() (a full shuffle of the
-# candidate-pair stream) keep the pair only at its FIRST matching band
-# — "no earlier band's signature slices are equal" is a pure predicate
-# on (sig_a, sig_b, band), evaluated map-side at zero shuffle cost.
-def _lsh_earlier_band_match() -> Column:
-    def _band_eq(i: int) -> str:
-        return (
-            f"slice(sig_a, {i * LSH_ROWS + 1}, {LSH_ROWS})"
-            f" = slice(sig_b, {i * LSH_ROWS + 1}, {LSH_ROWS})"
-        )
-
-    arms = " ".join(
-        f"WHEN band = {i} THEN ({' OR '.join(_band_eq(j) for j in range(i))})"
-        for i in range(1, LSH_BANDS)
+def _lsh_band_eq(i: int) -> str:
+    """SQL: LSH band ``i`` of the two signatures is equal (the
+    ``band_eq`` of :func:`_earlier_band_match`)."""
+    return (
+        f"slice(sig_a, {i * LSH_ROWS + 1}, {LSH_ROWS})"
+        f" = slice(sig_b, {i * LSH_ROWS + 1}, {LSH_ROWS})"
     )
-    return F.expr(f"CASE {arms} ELSE false END")
 
 
 _EST_JACCARD = (
@@ -388,16 +433,9 @@ def minhash_lsh_pairs(
     # minhash_recall_report 2.71 s -> 3.11 s (verdict r13 #4).
     sig = materialize(minhash_signatures(df, text_col, id_col, n), "share")
     bands = _lsh_bands(sig)
-    left = bands.select(
-        F.col("id").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
-    )
-    right = bands.select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
     cand = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(~_lsh_earlier_band_match())
+        _pair_join(bands, bands, ["band", "bucket"], ["sig"])
+        .filter(~_earlier_band_match(LSH_BANDS, _lsh_band_eq))
         .select("id_a", "id_b", "sig_a", "sig_b")
     )
     return cand.select(
@@ -445,11 +483,8 @@ def minhash_delta_pairs(
     — identical contract to :func:`minhash_lsh_pairs`, so running it
     over every historical batch reproduces the batch operator's output.
 
-    Orientation bookkeeping: the left side is index ∪ delta, the right
-    side delta only.  An index×delta pair has exactly one orientation
-    (index ids never appear on the right); a delta×delta pair is kept
-    only in its ``id_a < id_b`` orientation.  The ``_new`` tag makes
-    that one predicate: ``id_a < id_b OR left-is-index``.
+    Orientation: :func:`_pair_join`'s delta mode — the left side is
+    index ∪ delta tagged ``_new``, the right side delta only.
 
     ``broadcast_delta=True`` (the streaming micro-batch path) hints the
     delta band table to broadcast: the bucket join then becomes a
@@ -475,23 +510,12 @@ def minhash_delta_pairs(
             "id", "sig", F.lit(False).alias("_new")
         ).unionByName(delta_tagged)
         banded = _lsh_bands(tagged, extra=("_new",))
-    left = banded.select(
-        F.col("id").alias("id_a"),
-        F.col("sig").alias("sig_a"),
-        F.col("_new").alias("_new_a"),
-        "band",
-        "bucket",
-    )
-    right = _lsh_bands(delta_sigs).select(
-        F.col("id").alias("id_b"), F.col("sig").alias("sig_b"), "band", "bucket"
-    )
-    if broadcast_delta:
-        right = F.broadcast(right)
     cand = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .filter((F.col("id_a") < F.col("id_b")) | ~F.col("_new_a"))
-        .filter(~_lsh_earlier_band_match())
+        _pair_join(
+            banded, _lsh_bands(delta_sigs), ["band", "bucket"], ["sig"],
+            delta=True, broadcast_right=broadcast_delta,
+        )
+        .filter(~_earlier_band_match(LSH_BANDS, _lsh_band_eq))
         .select("id_a", "id_b", "sig_a", "sig_b")
     )
     return (
@@ -551,8 +575,9 @@ def simhash_pairs(
 ) -> DataFrame:
     """SimHash near-dup pairs, blocked on the four 15-bit bands of the
     60-bit fingerprint (pigeonhole: hamming ≤ 3 ⇒ at least one band
-    identical, so recall is exact for the threshold ≤ 3), verified with
-    bit_count(xor).  Output (id_a, id_b, hamming).
+    identical, so recall is exact for the threshold ≤ 3; a larger
+    ``max_hamming`` raises ValueError), verified with bit_count(xor)
+    (:func:`_hamming_band_pairs`).  Output (id_a, id_b, hamming).
 
     Scale note: 15-bit bands give 32768 buckets per band.  With a
     roughly uniform fingerprint distribution the within-bucket pairing
@@ -624,35 +649,39 @@ def simhash_pairs(
         .unionByName(no_shingles)
         .transform(materialize, "iterate")
     )
-    band_structs = ", ".join(
-        f"struct({i} AS band,"
-        f" (shiftright(fp, {SIMHASH_BAND_BITS * i}) & {SIMHASH_BAND_MASK}L) AS key)"
-        for i in range(SIMHASH_BANDS)
-    )
-    bands = fp.selectExpr("id", "fp", f"inline(array({band_structs}))")
-    left = bands.select(F.col("id").alias("id_a"), F.col("fp").alias("fp_a"), "band", "key")
-    right = bands.select(F.col("id").alias("id_b"), F.col("fp").alias("fp_b"), "band", "key")
+    return _hamming_band_pairs(fp, SIMHASH_BITS, SIMHASH_BANDS, max_hamming)
 
-    # First-band-wins (see minhash_lsh_pairs): drop a multi-band-matching
-    # pair everywhere but its first shared band via a map-side predicate on
-    # the two fingerprints, instead of shuffling candidates into distinct().
-    def _band_slice(col: str, i: int) -> str:
-        return f"(shiftright({col}, {SIMHASH_BAND_BITS * i}) & {SIMHASH_BAND_MASK}L)"
 
-    arms = " ".join(
-        "WHEN band = {i} THEN ({cond})".format(
-            i=i,
-            cond=" OR ".join(
-                f"{_band_slice('fp_a', j)} = {_band_slice('fp_b', j)}" for j in range(i)
-            ),
+def _hamming_band_pairs(
+    fps: DataFrame, bits: int, n_bands: int, max_hamming: int
+) -> DataFrame:
+    """(id_a, id_b, hamming) for every pair of ``bits``-bit fingerprints
+    in (id, fp) rows within ``max_hamming`` bits — the SimHash and
+    perceptual-hash verify join.  The fingerprint splits into
+    ``n_bands`` equal bit-bands; ONE :func:`_pair_join` on (band, key)
+    forms the candidates, first-band-wins keeps each pair once, and one
+    ``bit_count(xor)`` verifies it.
+
+    Exact only while ``max_hamming < n_bands`` (pigeonhole: fewer
+    differing bits than bands leaves some band intact).  At
+    ``max_hamming >= n_bands`` a pair with one differing bit in every
+    band shares no band and would be dropped silently, so that call
+    raises instead."""
+    if max_hamming >= n_bands:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs more than {n_bands} bands for"
+            " exact banded recall (pigeonhole); lower max_hamming"
         )
-        for i in range(1, SIMHASH_BANDS)
-    )
-    earlier_match = F.expr(f"CASE {arms} ELSE false END")
+    width = -(-bits // n_bands)
+
+    def band(col: str, i: int) -> str:
+        return f"(shiftright({col}, {width * i}) & {(1 << width) - 1}L)"
+
+    structs = ", ".join(f"struct({i} AS band, {band('fp', i)} AS key)" for i in range(n_bands))
+    bands = fps.selectExpr("id", "fp", f"inline(array({structs}))")
     return (
-        left.join(right, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(~earlier_match)
+        _pair_join(bands, bands, ["band", "key"], ["fp"])
+        .filter(~_earlier_band_match(n_bands, lambda j: f"{band('fp_a', j)} = {band('fp_b', j)}"))
         .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -942,8 +971,6 @@ def _winnow_selection(
             pos_ok.isNull(), _unrolled_gram_hash(F.col("t"), F.col("pos"), k)
         ).alias("h"),
     )
-    from pyspark.sql import Window
-
     frame = (
         Window.partitionBy("id").orderBy("pos").rowsBetween(Window.currentRow, w - 1)
     )
@@ -989,26 +1016,6 @@ def _fp_set_rows(fps: DataFrame) -> DataFrame:
     return sets.select(
         "id", F.size("fpset").alias("n_fp"), F.explode("fpset").alias("fp")
     )
-
-
-def _winnow_df_cap(ex: DataFrame, max_df: int | None) -> DataFrame:
-    """Drop fingerprints whose document frequency exceeds ``max_df``
-    (None keeps all) from the pairing index (hot-fingerprint =
-    cross-document boilerplate; its df² is the plan's one superlinear
-    term), materialized: every batch caller reads the capped rows from
-    both sides of a join.  The df is computed over whatever corpus
-    ``ex`` represents — the BATCH path's cap (the incremental path
-    derives the same cap decisions from additive per-fp counts instead,
-    see :func:`winnow_delta_pairs`)."""
-    from pyspark.sql import Window
-
-    if max_df is not None:
-        ex = (
-            ex.withColumn("_df", F.count("*").over(Window.partitionBy("fp")))
-            .filter(F.col("_df") <= max_df)
-            .drop("_df")
-        )
-    return materialize(ex, "iterate")
 
 
 def winnow_df_table(index_fps: DataFrame) -> DataFrame:
@@ -1073,10 +1080,9 @@ def winnow_delta_pairs(
     back to shuffles (of the index too — the same documented trade-off
     as the MinHash arm).
 
-    Orientation bookkeeping mirrors the MinHash delta arm: the left
-    side is index ∪ delta, the right side delta only; an index×delta
-    pair has one orientation, a delta×delta pair is kept only as
-    ``id_a < id_b`` — then least/greatest normalizes the output.
+    Orientation: :func:`_pair_join`'s delta mode (left index ∪ delta
+    tagged ``_new``, right delta only), then least/greatest normalizes
+    the output.
 
     Persisting is the CALLER's job: ``delta_fps`` is read up to three
     times (cap counts, cap filter, pair join) and should be persisted
@@ -1084,9 +1090,7 @@ def winnow_delta_pairs(
     ``index_df`` is None) and in production is parquet, so each read
     is an independent pruned scan, not a recompute."""
     _b = F.broadcast if broadcast_delta else (lambda d: d)
-    right = delta_fps.select(
-        F.col("id").alias("id_b"), F.col("n_fp").alias("nb"), "fp"
-    )
+    right = delta_fps
     if max_df is not None:
         delta_cnt = delta_fps.groupBy("fp").agg(F.count(F.lit(1)).alias("_ddf"))
         if index_df is None:
@@ -1110,24 +1114,16 @@ def winnow_delta_pairs(
     tagged = index_fps.select(
         "id", "n_fp", "fp", F.lit(False).alias("_new")
     ).unionByName(delta_fps.select("id", "n_fp", "fp", F.lit(True).alias("_new")))
-    left = tagged.select(
-        F.col("id").alias("id_a"),
-        F.col("n_fp").alias("na"),
-        "fp",
-        F.col("_new").alias("_new_a"),
-    )
     return (
-        left.join(_b(right), "fp")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .filter((F.col("id_a") < F.col("id_b")) | ~F.col("_new_a"))
-        .groupBy("id_a", "id_b", "na", "nb")
+        _pair_join(tagged, right, ["fp"], ["n_fp"], delta=True, broadcast_right=broadcast_delta)
+        .groupBy("id_a", "id_b", "n_fp_a", "n_fp_b")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
         .select(
             F.least("id_a", "id_b").alias("id_a"),
             F.greatest("id_a", "id_b").alias("id_b"),
             "shared",
-            F.round(F.col("shared") / F.least("na", "nb"), 6).alias("containment"),
+            F.round(F.col("shared") / F.least("n_fp_a", "n_fp_b"), 6).alias("containment"),
         )
         .filter(F.col("containment") >= min_containment)
     )
@@ -1150,10 +1146,10 @@ def winnow_overlap_pairs(
     fingerprint hashes (a fingerprint shared at several positions
     counts once, as in MOSS match scoring).
 
-    Same inverted-index shape as :func:`ngram_jaccard_pairs`: explode
-    the per-document distinct fingerprint set, equi-join on the
-    fingerprint hash, count per pair — never a cross product; cost is
-    Σ per-fingerprint df².  Winnowing keeps the index sparse by
+    The inverted-index join is :func:`_pair_join`, shared with the
+    n-gram, MinHash and Hamming families: explode the per-document
+    distinct fingerprint set, equi-join on the fingerprint hash, count
+    per pair — never a cross product; cost is Σ per-fingerprint df².  Winnowing keeps the index sparse by
     construction (only ~2/(w+1) of k-grams survive selection, and
     12-char grams are far rarer than word shingles).
 
@@ -1168,7 +1164,10 @@ def winnow_overlap_pairs(
     exact for pairs whose overlap is rare-fingerprint-borne and
     downward-biased for boilerplate-borne pairs — a precision-oriented
     cost knob, deterministic and identically mirrored in the oracle."""
-    ex = _winnow_df_cap(winnow_fingerprint_rows(df, text_col, id_col, k, w), max_df)
+    # Checkpointed: the capped index is read as both sides of the join
+    # (hot fingerprint = cross-document boilerplate).
+    rows = winnow_fingerprint_rows(df, text_col, id_col, k, w)
+    ex = materialize(_df_cap(rows, "fp", max_df), "iterate")
     return _winnow_pairs_join(ex, min_shared, min_containment)
 
 
@@ -1178,19 +1177,16 @@ def _winnow_pairs_join(ex: DataFrame, min_shared: int, min_containment: float) -
     :func:`winnow_overlap_pairs` and :func:`winnow_match_spans` (one
     definition so the pair gate the span listing applies can never
     drift from the pair operator's own scoring)."""
-    a = ex.alias("a").select(F.col("id").alias("id_a"), F.col("n_fp").alias("na"), "a.fp")
-    b = ex.alias("b").select(F.col("id").alias("id_b"), F.col("n_fp").alias("nb"), "b.fp")
     return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("id_a") < F.col("id_b")))
-        .drop(F.col("b.fp"))
-        .groupBy("id_a", "id_b", "na", "nb")
+        _pair_join(ex, ex, ["fp"], ["n_fp"])
+        .groupBy("id_a", "id_b", "n_fp_a", "n_fp_b")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
         .select(
             "id_a",
             "id_b",
             "shared",
-            F.round(F.col("shared") / F.least("na", "nb"), 6).alias("containment"),
+            F.round(F.col("shared") / F.least("n_fp_a", "n_fp_b"), 6).alias("containment"),
         )
         # Filter on the ROUNDED value so both engines apply the same
         # boundary (the oracle's HAVING compares the same round(.,6)).
@@ -1248,7 +1244,7 @@ def _winnow_evidence(
     index rows and ``capped`` the positioned (id, pos, fp) fingerprints
     restricted to that same capped set.  One gram scan feeds both."""
     fps_pos = materialize(winnow_fingerprints(df, text_col, id_col, k, w), "iterate")
-    ex = _winnow_df_cap(_fp_set_rows(fps_pos), max_df)
+    ex = materialize(_df_cap(_fp_set_rows(fps_pos), "fp", max_df), "iterate")
     capped = (
         fps_pos.join(ex.select("id", "fp"), ["id", "fp"], "left_semi")
         if max_df is not None
@@ -1287,8 +1283,6 @@ def _coalesce_runs(coords: DataFrame, k: int) -> DataFrame:
     running sum to number islands, one hash aggregation per island;
     callers that use only a subset of the aggregates get the rest
     pruned by Catalyst."""
-    from pyspark.sql import Window
-
     coords = coords.withColumn("diag", F.col("pos_a") - F.col("pos_b"))
     ordered = Window.partitionBy("id_a", "id_b", "diag").orderBy("pos_a")
     brk = F.when(
@@ -1649,7 +1643,8 @@ def winnow_contamination(
     family (``max_df`` evaluated over the full corpus), then one
     inverted-index equi-join filtered to train-left/eval-right and one
     pair-key aggregation."""
-    rows = _winnow_df_cap(winnow_fingerprint_rows(df, text_col, id_col, k, w), max_df)
+    rows = winnow_fingerprint_rows(df, text_col, id_col, k, w)
+    rows = materialize(_df_cap(rows, "fp", max_df), "iterate")
     is_eval = (F.col("id") % eval_mod) == 0
     return fp_containment_flags(
         rows.filter(~is_eval), rows.filter(is_eval), min_shared, min_containment

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from firmable_company_data_pipeline_spark.operators.dedup import _hamming_band_pairs
 from firmable_company_data_pipeline_spark.session import materialize
 
 HASH_MOD = 1_000_000_007
@@ -278,7 +279,7 @@ def sample_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
 # — the PLAN SHAPE (Arrow-batch hash → banded self-join → bit_count
 # verify) is identical.
 PHASH_BITS = 64
-PHASH_BANDS = 4  # pigeonhole: ≥ max_hamming+1 bands → recall 1 at the cap
+PHASH_BANDS = 4  # pigeonhole: ≥ max_hamming+1 bands → recall 1 at the cap (else raises)
 
 
 def extract_phash(
@@ -336,36 +337,21 @@ def phash_dup_pairs(
 ) -> DataFrame:
     """Near-duplicate media pairs by perceptual-hash Hamming distance.
 
-    Banded blocking (the SimHash pattern): the hash splits into
-    ``PHASH_BANDS`` bit-bands; ≤ ``max_hamming`` < bands errors leave at
-    least one band intact (pigeonhole), so the union of per-band
-    equi-joins has recall 1 — candidate volume is Σ per-bucket² per
-    band, never N².  Verification is one ``bit_count(xor)`` per
-    candidate.  Output: (id_a, id_b, hamming) with id_a < id_b.
+    Banded blocking, the SimHash join (``dedup._hamming_band_pairs``):
+    the hash splits into ``PHASH_BANDS`` bit-bands; ≤ ``max_hamming`` <
+    bands errors leave at least one band intact (pigeonhole), so one
+    (band, key) equi-join has recall 1 — candidate volume is Σ
+    per-bucket² per band, never N² — and first-band-wins keeps each pair
+    once.  ``max_hamming >= PHASH_BANDS`` raises ValueError.
+    Verification is one ``bit_count(xor)`` per candidate.  Output:
+    (id_a, id_b, hamming) with id_a < id_b.
 
-    The hash table feeds all ``PHASH_BANDS`` self-joins: shared so the
-    Arrow decode stage runs once, not 2×bands times.
+    The hash table is read as both join sides: shared so the Arrow
+    decode stage runs once.
     """
-    bits_per = -(-PHASH_BITS // PHASH_BANDS)
     ph = materialize(extract_phash(media, decoder), "share")
-    mask = (1 << bits_per) - 1
-    cands = None
-    for b in range(PHASH_BANDS):
-        band = lambda c: F.shiftright(c, b * bits_per).bitwiseAND(F.lit(mask))  # noqa: B023
-        l = ph.select(F.col("media_id").alias("id_a"), F.col("phash").alias("ha")).withColumn(
-            "_band", band(F.col("ha"))
-        )
-        r = ph.select(F.col("media_id").alias("id_b"), F.col("phash").alias("hb")).withColumn(
-            "_band", band(F.col("hb"))
-        )
-        c = l.join(r, "_band").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b", "ha", "hb")
-        cands = c if cands is None else cands.unionByName(c)
-    return (
-        cands.distinct()
-        .withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    fps = ph.select(F.col("media_id").alias("id"), F.col("phash").alias("fp"))
+    return _hamming_band_pairs(fps, PHASH_BITS, PHASH_BANDS, max_hamming)
 
 
 def frame_sample_plan(

@@ -1798,8 +1798,9 @@ FROM e GROUP BY bin
 
 # --------------------------------------------------------------------------
 # media_phash_dups — perceptual-hash near-dup pairs over the binary media
-# table (the SimHash pattern at the media layer: Arrow-batch hash, banded
-# self-join, bit_count verify).  Oracle recomputes the 64-bit block hash
+# table (the SimHash join at the media layer: Arrow-batch hash, then
+# dedup._hamming_band_pairs — one (band, key) _pair_join, first-band-wins,
+# bit_count verify).  Oracle recomputes the 64-bit block hash
 # from the source text (payload bytes == ASCII codepoints) and applies
 # the Hamming predicate naively — banding changes candidate COST, not the
 # pair set.  Chunk sums are exact integer-valued doubles (< 2^53) in both

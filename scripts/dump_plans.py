@@ -4,6 +4,15 @@ with the scale commentary inline, so the plan-shape claims in README/
 ARCHITECTURE are inspectable without running Spark.
 
 Usage: python scripts/dump_plans.py [sf_dir]   (default sf0.01)
+
+Tree mode, for checking that a refactor leaves plans unchanged:
+
+    python scripts/dump_plans.py SF_DIR --trees QUERY [QUERY ...]
+
+prints, for each query, the physical operator tree (node names and tree
+shape only; expressions, attribute ids and node ids are dropped) of every
+frame passed to ``session.materialize`` while the query builds, then of
+the final plan.  Run it on two checkouts and ``diff`` the outputs.
 """
 
 from __future__ import annotations
@@ -11,6 +20,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -258,8 +268,57 @@ SHOWCASE = [
     ),
 ]
 
+# One physical-plan tree line: the drawing prefix (which carries the
+# shape), an optional whole-stage-codegen marker, then the node name
+# ("Scan" keeps its source kind: parquet, ExistingRDD, ...).
+_TREE_LINE = re.compile(r"^(?P<pre>[ :|+\-]*)(?:\*\(\d+\) )?(?P<name>Scan \w+|[A-Za-z]\w*)")
+
+
+def operator_tree(df) -> str:
+    """Node names of ``df``'s physical plan, one per line, indented as in
+    ``treeString`` — everything that identifies a node instance (ids,
+    expressions, statistics) is stripped, so two builds of the same plan
+    print the same text."""
+    plan = df._jdf.queryExecution().executedPlan().treeString()
+    lines = (_TREE_LINE.match(line) for line in plan.splitlines())
+    return "\n".join(m["pre"] + m["name"] for m in lines if m)
+
+
+def dump_trees(sf_dir: str, names: list[str]) -> None:
+    """Print the build-phase and final operator trees of ``names``."""
+    # Wrap materialize before any package module binds it by import.
+    import firmable_company_data_pipeline_spark.session as session
+
+    captured: list[tuple[str, str]] = []
+    plain = session.materialize
+
+    def recording(df, why, **kw):
+        captured.append((why, operator_tree(df)))
+        return plain(df, why, **kw)
+
+    session.materialize = recording
+
+    import __spark_entry__ as entrymod
+    from firmable_company_data_pipeline_spark import get_spark
+
+    spark = get_spark("plan-trees")
+    qs = entrymod.queries()
+    for name in names:
+        spark.catalog.clearCache()
+        captured.clear()
+        with session.materialized():
+            final = operator_tree(qs[name](spark, sf_dir))
+        print(f"## {name}")
+        for i, (why, tree) in enumerate(captured, 1):
+            print(f"-- materialize {i} ({why})\n{tree}")
+        print(f"-- final\n{final}\n")
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    if "--trees" in sys.argv:
+        dump_trees(sf_dir, sys.argv[sys.argv.index("--trees") + 1 :])
+        return
 
     import __spark_entry__ as entrymod
     from firmable_company_data_pipeline_spark import get_spark

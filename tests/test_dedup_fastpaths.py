@@ -10,6 +10,7 @@ surface as an oracle mismatch at driver time.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from firmable_company_data_pipeline_spark.functions.similarity import (
@@ -101,6 +102,55 @@ def test_simhash_pairs_path_matches_column_fp(spark):
     got = {(r["id_a"], r["id_b"]) for r in pair_fps.collect()}
     assert ("d1", "d7") in got  # exact dup
     assert ("d4", "d5") in got  # both empty-shingle docs, fp 0 vs 0
+
+
+def test_hamming_band_pairs_exact_below_pigeonhole_cap(spark):
+    """Planted 60-bit fingerprints in 4 bands of 15: a pair differing by
+    one bit in each of three bands still shares the fourth band and is
+    found at max_hamming=3; identical fingerprints (equal on all four
+    bands) come out once.  At max_hamming=4 a pair with one differing
+    bit per band would share no band, so the call refuses."""
+    b0, b1, b2, b3 = 1, 1 << 15, 1 << 30, 1 << 45
+    fps = spark.createDataFrame(
+        [(1, 0), (2, b0 | b1 | b2), (3, 0), (4, b0 | b1 | b2 | b3)], "id long, fp long"
+    )
+    got = sorted(
+        tuple(r) for r in dd._hamming_band_pairs(fps, 60, 4, max_hamming=3).collect()
+    )
+    assert got == [(1, 2, 3), (1, 3, 0), (2, 3, 3), (2, 4, 1)]
+    with pytest.raises(ValueError, match="pigeonhole"):
+        dd._hamming_band_pairs(fps, 60, 4, max_hamming=4)
+
+
+def test_pair_operators_share_one_join_skeleton():
+    """Every near-dup pair operator forms its candidates through
+    ``_pair_join``, drops repeat bands through ``_earlier_band_match``
+    and caps hot keys through ``_df_cap``: the orientation predicate,
+    the first-band-wins CASE and the ``_df`` cap column are written
+    nowhere else in the two modules (``embedding_cosine_pairs`` is a
+    keyless theta join and keeps its own predicate).  A family that
+    hand-writes the join again fails here."""
+    import ast
+    import inspect
+
+    from firmable_company_data_pipeline_spark.operators import multimodal as mm
+
+    def owners(needle):
+        found = set()
+        for mod in (dd, mm):
+            src = inspect.getsource(mod)
+            funcs = [n for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)]
+            for i, line in enumerate(src.splitlines(), 1):
+                if needle in line:
+                    found.add(
+                        next((f.name for f in funcs if f.lineno <= i <= f.end_lineno), None)
+                    )
+        return found
+
+    assert owners('F.col("id_a") < F.col("id_b")') == {"_pair_join", "embedding_cosine_pairs"}
+    assert owners("CASE ") == {"_earlier_band_match"}
+    assert owners("WHEN band") == {"_earlier_band_match"}
+    assert owners('"_df"') == {"_df_cap"}
 
 
 def test_bounded_ratio_matches_plain_above_threshold(spark):

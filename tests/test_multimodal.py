@@ -168,6 +168,9 @@ def test_phash_banding_has_full_recall_at_cap(spark):
     import itertools
 
     payloads = [(i, bytes((j * i + 7) % 251 for j in range(200))) for i in range(1, 9)]
+    # media 9 repeats media 1: equal on all four bands, so first-band-wins
+    # must still emit the pair exactly once
+    payloads.append((9, payloads[0][1]))
     media = _media_df(spark, payloads)
     hashes = {r["media_id"]: r["phash"] for r in mm.extract_phash(media).collect()}
     want = {
@@ -177,8 +180,10 @@ def test_phash_banding_has_full_recall_at_cap(spark):
         # Python xor to 64 bits so the popcount matches bit_count(long)
         if bin((hashes[a] ^ hashes[b]) & ((1 << 64) - 1)).count("1") <= 2
     }
-    got = {(r["id_a"], r["id_b"]) for r in mm.phash_dup_pairs(media, max_hamming=2).collect()}
-    assert got == want
+    rows = [(r["id_a"], r["id_b"]) for r in mm.phash_dup_pairs(media, max_hamming=2).collect()]
+    assert set(rows) == want
+    assert (1, 9) in want
+    assert len(rows) == len(set(rows))  # one row per pair
 
 
 def test_frame_sample_plan_arithmetic(spark):

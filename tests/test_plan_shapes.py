@@ -259,6 +259,11 @@ def test_shingle_pipeline_exchange_budget(plans):
     p = plans("dedup_winnow")
     assert n_exchanges("dedup_winnow") <= 4
     assert "CartesianProduct" not in p and "Python" not in p
+    # pHash: one (band, key) join with first-band-wins — no per-band
+    # union and no distinct() exchange; the one exchange is spread()'s
+    # fan-out under the shared hash table.
+    assert "Union" not in plans("media_phash_dups")
+    assert n_exchanges("media_phash_dups") == 1
 
 
 def test_training_ops_stay_jvm_side(plans):
