@@ -111,6 +111,15 @@ def timed_query_run(spark, fn, sf_dir, passes=1):
     return None, err
 
 
+def default_raw_out(cores: int) -> str:
+    """The default ``--raw-out`` path, keyed by the core count the run
+    uses: a ``local[32]`` and a ``local[8]`` sweep each keep their own
+    per-query map."""
+    return os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "plans", f"bench_raw_c{cores}.json"
+    )
+
+
 def main():
     import argparse
 
@@ -126,18 +135,13 @@ def main():
     )
     ap.add_argument(
         "--raw-out",
-        default=os.environ.get(
-            "SPARK_GRAFT_BENCH_RAW_OUT",
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                "plans",
-                "bench_raw_latest.json",
-            ),
-        ),
+        default=os.environ.get("SPARK_GRAFT_BENCH_RAW_OUT"),
         help="also write the FULL payload (all per-query seconds) to this "
         "file (verdict r13 #7: the driver keeps only a truncated stdout "
         "tail, which cost round 13 two-thirds of its per-query evidence). "
         "Additions-only: the one-line stdout JSON contract is unchanged. "
+        "Default plans/bench_raw_c<N>.json, N the session's core count, "
+        "so sweeps at different core counts keep separate maps. "
         "Set to '' to disable.",
     )
     args = ap.parse_args()
@@ -149,6 +153,8 @@ def main():
     from firmable_company_data_pipeline_spark import get_spark
 
     spark = get_spark("firmable-bench")
+    if args.raw_out is None:
+        args.raw_out = default_raw_out(spark.sparkContext.defaultParallelism)
     qs = entrymod.queries()
     names = headline(qs)
 

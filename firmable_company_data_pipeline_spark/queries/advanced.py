@@ -360,7 +360,8 @@ GROUP BY event_type
 # engine's pure-SQL surface, no DataFrame composition.
 _HIERARCHY_SQL = """
 WITH RECURSIVE walk(custkey, node, depth) AS (
-  SELECT c_custkey, c_custkey, 0 FROM customer_v
+  SELECT c_custkey AS custkey, c_custkey AS node, 0 AS depth
+  FROM customer_v
   UNION ALL
   SELECT custkey, node div 10, depth + 1
   FROM walk WHERE node >= 10
@@ -386,7 +387,8 @@ def customer_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CUSTOMER_HIERARCHY_ROLLUP_SQL = """
 WITH RECURSIVE walk(custkey, node, depth) AS (
-  SELECT c_custkey, c_custkey, 0 FROM customer
+  SELECT c_custkey AS custkey, c_custkey AS node, 0 AS depth
+  FROM customer
   UNION ALL
   SELECT custkey, node // 10, depth + 1
   FROM walk WHERE node >= 10

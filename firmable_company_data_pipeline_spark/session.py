@@ -37,10 +37,10 @@ def hadoop_fs(spark: SparkSession, path: str):
 
 
 def fs_read_text(spark: SparkSession, path: str) -> str | None:
-    """Contents of a small driver-protocol file (manifest, crash
-    marker), or None when absent.  Plain paths read via ``open`` (posix
-    behavior unchanged); scheme'd paths via the Hadoop FS API, so a
-    marker on s3a/hdfs is read from the same store Spark writes."""
+    """Contents of a small driver-protocol file (a manifest), or None
+    when absent.  Plain paths read via ``open``; scheme'd paths via the
+    Hadoop FS API, so a manifest on s3a/hdfs is read from the same store
+    Spark writes."""
     if not is_schemed_path(path):
         try:
             with open(path) as fh:
@@ -60,26 +60,18 @@ def fs_read_text(spark: SparkSession, path: str) -> str | None:
         stream.close()
 
 
-def fs_write_text(
-    spark: SparkSession, path: str, text: str, direct: bool = False
-) -> None:
+def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     """Publish a small driver-protocol file (the r12 Hadoop-FS port of
     the ``_latest.json`` protocol surface — verdict r11 #4).
 
     Plain paths: write ``path + '.tmp'`` then ``os.replace`` — the
-    atomic posix publish, byte-identical to the previous behavior.
+    atomic posix publish.
 
-    Scheme'd paths, ``direct=False``: tmp write, delete any existing
-    target, ``FileSystem.rename`` — atomic on HDFS and LocalFileSystem;
-    on rename-less stores (S3A) the window between delete and rename
-    can leave the file ABSENT, which readers see as a loud
-    FileNotFound, never a partial read.
-
-    Scheme'd paths, ``direct=True``: a single ``create(overwrite)``
-    write.  A crash mid-write leaves a PARTIAL file that fails json
-    parsing loudly — choose this where a silently MISSING file would
-    be worse than a loudly corrupt one (the labels-fold crash marker:
-    losing it would skip repair silently)."""
+    Scheme'd paths: tmp write, delete any existing target,
+    ``FileSystem.rename`` — atomic on HDFS and LocalFileSystem; on
+    rename-less stores (S3A) the window between delete and rename can
+    leave the file ABSENT, which readers see as a loud FileNotFound,
+    never a partial read."""
     if not is_schemed_path(path):
         tmp = path + ".tmp"
         with open(tmp, "w") as fh:
@@ -87,13 +79,6 @@ def fs_write_text(
         os.replace(tmp, path)
         return
     fs, jdst = hadoop_fs(spark, path)
-    if direct:
-        out = fs.create(jdst, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-        return
     _, jtmp = hadoop_fs(spark, path + ".tmp")
     out = fs.create(jtmp, True)
     try:
@@ -116,15 +101,6 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
             return False
     fs, jpath = hadoop_fs(spark, path)
     return bool(fs.delete(jpath, False))
-
-
-def fs_mkdirs(spark: SparkSession, path: str) -> None:
-    """``makedirs(exist_ok=True)`` on whatever store holds ``path``."""
-    if not is_schemed_path(path):
-        os.makedirs(path, exist_ok=True)
-        return
-    fs, jpath = hadoop_fs(spark, path)
-    fs.mkdirs(jpath)
 
 
 def default_parallelism() -> int:

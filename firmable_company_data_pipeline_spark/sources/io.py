@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from firmable_company_data_pipeline_spark.session import materialize, materialized
+from firmable_company_data_pipeline_spark.session import (
+    hadoop_fs,
+    materialize,
+    materialized,
+)
 
 
 def read_jdbc(
@@ -101,17 +105,11 @@ def write_jdbc(
 # loads never faced.
 
 
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
 def dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(total_bytes, n_data_files) of a table directory via the Hadoop
     FileSystem API — works for any supported scheme (file://, s3a://,
     hdfs://), not just the local disk."""
-    fs, jpath, _ = _fs_for(spark, path)
+    fs, jpath = hadoop_fs(spark, path)
     summary = fs.getContentSummary(jpath)
     n_files = 0
     it = fs.listFiles(jpath, True)
@@ -161,9 +159,9 @@ def compact_parquet(
     tmp = path.rstrip("/") + "__compacting"
     shaped.write.mode("overwrite").parquet(tmp)
 
-    fs, jpath, jvm = _fs_for(spark, path)
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    old = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__pre_compact")
+    fs, jpath = hadoop_fs(spark, path)
+    _, jtmp = hadoop_fs(spark, tmp)
+    _, old = hadoop_fs(spark, path.rstrip("/") + "__pre_compact")
     if fs.exists(old):
         fs.delete(old, True)
     if not fs.rename(jpath, old):
@@ -191,9 +189,9 @@ def recover_compaction(spark: SparkSession, path: str) -> str | None:
     and the backup exists after it).  Returns a short description of the
     action taken, or None if nothing needed repair.
     """
-    fs, jpath, jvm = _fs_for(spark, path)
-    pre = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__pre_compact")
-    tmp = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compacting")
+    fs, jpath = hadoop_fs(spark, path)
+    _, pre = hadoop_fs(spark, path.rstrip("/") + "__pre_compact")
+    _, tmp = hadoop_fs(spark, path.rstrip("/") + "__compacting")
     action = None
     if not fs.exists(jpath) and fs.exists(pre):
         if not fs.rename(pre, jpath):
@@ -225,7 +223,7 @@ def incremental_append(
 
     Returns the number of rows appended.
     """
-    fs, jpath, _ = _fs_for(spark, sink_path)
+    fs, jpath = hadoop_fs(spark, sink_path)
     if fs.exists(jpath):
         hwm = spark.read.parquet(sink_path).agg({watermark_col: "max"}).first()[0]
     else:

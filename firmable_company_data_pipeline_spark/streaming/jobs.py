@@ -32,24 +32,14 @@ from firmable_company_data_pipeline_spark.streaming import windows as W
 # one definition in session.py (r12 review: this module and session
 # each carried a verbatim copy that would drift independently)
 from firmable_company_data_pipeline_spark.session import (
-    hadoop_fs as _hadoop_fs,
-)
-from firmable_company_data_pipeline_spark.session import (
     fs_delete as _fs_delete,
-)
-from firmable_company_data_pipeline_spark.session import (
-    fs_mkdirs as _fs_mkdirs,
-)
-from firmable_company_data_pipeline_spark.session import (
     fs_read_text as _fs_read_text,
-)
-from firmable_company_data_pipeline_spark.session import (
     fs_write_text as _fs_write_text,
-)
-from firmable_company_data_pipeline_spark.session import (
+    hadoop_fs as _hadoop_fs,
     is_schemed_path as _is_schemed_path,
+    materialize,
+    materialized,
 )
-from firmable_company_data_pipeline_spark.session import materialize, materialized
 
 
 def _rmtree_any(spark: SparkSession, path: str) -> None:
@@ -451,8 +441,8 @@ def declare_upsert_layout(spark, target_dir: str, n_buckets: int = 32) -> None:
 def _pin_bucket_count(spark, target_dir: str, n_buckets: int) -> None:
     """Pin a bucketed directory's bucket count with a ``_N_BUCKETS_*``
     marker: every bucketed layout this module maintains
-    (upsert target, winnow index + df partials, banded minhash index,
-    bucketed labels) prunes reads or routes writes by ``value % n`` —
+    (upsert target, winnow index + df partials, banded minhash index)
+    prunes reads or routes writes by ``value % n`` —
     a restart with a different ``n`` would prune against partitions
     laid out under the old modulus and silently drop index rows
     (missed pairs, undercounted df caps) or strand stale rows.
@@ -477,31 +467,6 @@ def _pin_bucket_count(spark, target_dir: str, n_buckets: int) -> None:
         declare_upsert_layout(spark, target_dir, n_buckets)
 
 
-def _labels_layout_of(spark, labels_dir: str) -> str | None:
-    """Detect an existing labels target's layout — ``"gen"`` (manifest
-    or ``gen=*`` generations), ``"bucketed"`` (``lbucket=*``
-    partitions), or None for an absent/empty target.  An existing
-    target's layout always wins over the job parameter (review r10 —
-    the index layouts' rule): trusting the parameter would let a
-    restart without ``labels_layout="bucketed"`` run the gen path over
-    a bucketed target, see no generations, and silently rebuild the
-    labeling from one batch's pairs (and mix both layouts in one
-    directory)."""
-    fs, base = _hadoop_fs(spark, labels_dir.rstrip("/"))
-    if not fs.exists(base):
-        return None
-    for pat, layout in (
-        ("/_latest.json", "gen"),
-        ("/gen=*", "gen"),
-        ("/lbucket=*", "bucketed"),
-    ):
-        _, p = _hadoop_fs(spark, labels_dir.rstrip("/") + pat)
-        st = fs.globStatus(p)
-        if st is not None and len(st) > 0:
-            return layout
-    return None
-
-
 def read_upsert_target(spark, target_dir: str) -> DataFrame:
     """Logical view of a :func:`foreach_batch_upsert` target (the
     ``_bucket`` partition key is layout, not data)."""
@@ -517,32 +482,27 @@ def streaming_minhash_dedup(
     labels_dir: str | None = None,
     broadcast_delta: bool = True,
     n_buckets: int = 64,
-    banded: bool = True,
-    labels_layout: str = "gen",
-    n_label_buckets: int = 64,
 ):
     """Streaming near-duplicate detection over a document stream — the
     Structured-Streaming composition of the incremental index operator
     (``operators/dedup.py`` ``minhash_delta_pairs``).
 
-    Index layout (round 10): new streams write the BANDED
-    ``minhash_band_rows`` layout — one row per (doc, LSH band),
-    partitioned by ``pbucket = hash(band, bucket) % n_buckets`` inside
-    each ``batch_id=N`` — and each fold partition-prunes its index
-    scan to the delta's ≤ ``n_buckets`` touched pbuckets (the ≤
-    ``n_buckets``-value driver-side collect, the block index's O(1)-
-    rows contract).  The trade is LSH_BANDS× index storage for a
-    per-batch index read of roughly touched/total buckets of the
-    bytes — a win in the TRICKLE regime (a delta whose ~LSH_BANDS×
-    |delta| band keys hash into a strict subset of the buckets); a
-    WIDE delta touches every bucket and then scans LSH_BANDS× the flat
-    layout's bytes, so pass ``banded=False`` at stream creation to pin
-    the flat (id, sig) layout for wide-batch ingest.  An EXISTING
-    index's layout always wins over the parameter (detected by schema;
-    reads and appends follow it) — migrate by rewriting the index in
-    the other layout and ``compact_batch_index``-ing, or start fresh;
-    mixing layouts in one directory is never produced (parquet
-    partition discovery would reject it).
+    Index layout: the BANDED ``minhash_band_rows`` layout — one row per
+    (doc, LSH band), partitioned by ``pbucket = hash(band, bucket) %
+    n_buckets`` inside each ``batch_id=N`` — and each fold
+    partition-prunes its index scan to the delta's ≤ ``n_buckets``
+    touched pbuckets (the ≤ ``n_buckets``-value driver-side collect, the
+    block index's O(1)-rows contract).  The trade is LSH_BANDS× index
+    storage for a per-batch index read of roughly touched/total buckets
+    of the bytes: a win in the TRICKLE regime (a delta whose
+    ~LSH_BANDS× |delta| band keys hash into a strict subset of the
+    buckets); a WIDE delta touches every bucket and then scans every
+    band row of the index.  The bucket count is pinned by a
+    ``_N_BUCKETS_*`` marker (:func:`_pin_bucket_count`).  An index
+    whose history has no ``pbucket`` partition column (the flat
+    (id, sig) layout of older streams) raises, as the winnow fold
+    refuses a flat fingerprint index: rewrite it with
+    ``minhash_band_rows`` partitioned by ``pbucket``, or start fresh.
 
     ``broadcast_delta`` (default True) assumes micro-batches are
     bounded — the LSH bucket join then streams the signature index
@@ -557,10 +517,10 @@ def streaming_minhash_dedup(
 
     1. computes MinHash signatures for the BATCH only (the shingle scan
        never re-reads history),
-    2. LSH-pairs them against the persistent signature index —
+    2. LSH-pairs them against the persistent band index —
        delta×index ∪ delta×delta, never index×index,
     3. writes discovered pairs to ``pairs_dir/batch_id=N`` and the new
-       signatures to ``index_dir/batch_id=N``.
+       band rows to ``index_dir/batch_id=N``.
 
     Replay-safe through the fold skeleton (``_history`` excludes the
     batch's own partition, ``_write_batch`` overwrites it; with
@@ -573,61 +533,48 @@ def streaming_minhash_dedup(
     migration and the index is queryable mid-stream by any other
     session.
 
-    ``labels_dir`` (round 6, optional) additionally maintains the
-    CLUSTER LABELING incrementally: each batch folds its delta pairs
-    into the previous generation's (doc_id, cluster_id) table via
+    ``labels_dir`` (optional) additionally maintains the CLUSTER
+    LABELING incrementally: each batch folds its delta pairs into the
+    previous generation's (doc_id, cluster_id) table via
     ``operators/dedup.incremental_components`` — the previous labeling
     is a connectivity-preserving star forest, so the fold equals a
     batch re-cluster of every pair ever seen, while touching only the
-    delta pairs plus the previous clusters they intersect (delta-local
-    since round 7: untouched clusters are anti-joined around the CC
-    fold, so a micro-batch's cost scales with the batch, not the corpus;
-    the previous generation is parquet, so the fold's two passes over it
-    are two cheap pruned scans).  Generations are batch-keyed
-    (``gen=<batch_id>``, overwrite): a batch reads the newest
-    generation BELOW its own id — so a checkpoint replay that left a
-    half-written own-generation behind regenerates it from the same
-    input — and prunes generations older than the one it read (the
-    read generation itself is kept so the NEXT replay still finds its
-    input).  ``read_dedup_labels`` serves the newest generation.
+    delta pairs plus the previous clusters they intersect (untouched
+    clusters are anti-joined around the CC fold, so a micro-batch's
+    compute scales with the batch, not the corpus).  Generations are
+    batch-keyed (``gen=<batch_id>``, overwrite): a batch reads the
+    newest generation BELOW its own id — so a checkpoint replay that
+    left a half-written own-generation behind regenerates it from the
+    same input — and prunes generations older than the one it read
+    (the read generation itself is kept so the NEXT replay still finds
+    its input).  ``read_dedup_labels`` serves the generation the
+    ``_latest.json`` manifest names, published atomically after the
+    write.
 
-    Write amplification: with the default ``labels_layout="gen"`` each
-    generation materializes the FULL labeling (the newest generation
-    alone is the complete answer — no read-side chain merge), so the
-    fold's COMPUTE is delta-local while its WRITE is corpus-sized —
-    the price of the atomically-published generation protocol.
-    ``labels_layout="bucketed"`` (round 10) closes that seam: labels
-    live in ONE ``lbucket = hash(doc_id) % n_label_buckets``-
-    partitioned target and each fold dynamic-overwrites only the
-    buckets holding a CHANGED label — per-batch write cost
-    O(changed + their buckets), with a marker protocol that makes the
-    non-atomic multi-bucket overwrite crash-repairable (see
-    ``_fold_labels_bucketed``).  A Delta/Iceberg MERGE is the
-    production endpoint of the same shape.  ``read_dedup_labels``
-    serves either layout.
+    Write amplification: each generation materializes the FULL labeling
+    (the newest generation alone is the complete answer — no read-side
+    chain merge), so the fold's COMPUTE is delta-local while its WRITE
+    is corpus-sized — the price of the atomically-published snapshot
+    (ARCHITECTURE §9).  A ``labels_dir`` holding ``lbucket=*``
+    partitions or an ``_N_BUCKETS_*`` marker (the bucketed labels
+    layout of older streams) raises rather than being mixed with
+    generations.
     """
     from firmable_company_data_pipeline_spark.operators import dedup as dd
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         delta = materialize(dd.minhash_signatures(batch_df), "share")
-        # banded once, shared by the touched-pbucket collect and the index
-        # append; lazy, so a flat index never computes it
+        # banded once, shared by the touched-pbucket collect and the
+        # index append
         bands = materialize(dd.minhash_band_rows(delta, n_buckets), "share")
-        hist = _history(spark, index_dir, batch_id, bands.select("pbucket"))
-        # an existing index's layout wins over the parameter (writes
-        # must follow reads or partition discovery would see
-        # conflicting directory depths)
-        use_banded = banded if hist is None else "pbucket" in hist.columns
-        index = index_bands = None
-        if use_banded:
-            _pin_bucket_count(spark, index_dir, n_buckets)
-            if hist is not None:
-                index_bands = hist.select("id", "sig", "band", "bucket")
-        elif hist is not None:
-            index = hist.select("id", "sig")
-        if index is None and index_bands is None:
-            index = spark.createDataFrame([], delta.schema)
+        hist = _bucketed_history(
+            spark, index_dir, batch_id, bands.select("pbucket"), n_buckets
+        )
+        if hist is None:
+            index, index_bands = spark.createDataFrame([], delta.schema), None
+        else:
+            index, index_bands = None, hist.select("id", "sig", "band", "bucket")
         # broadcast_delta (caller-controlled, see docstring): bounded
         # micro-batches stream the index map-side — history is scanned,
         # never re-shuffled per batch (measured by scale_probe
@@ -642,19 +589,9 @@ def streaming_minhash_dedup(
         if labels_dir is not None:
             pairs = materialize(pairs, "share")
         _write_batch(pairs, pairs_dir, batch_id)
-        if use_banded:
-            _write_batch(bands, index_dir, batch_id, by="pbucket")
-        else:
-            _write_batch(delta, index_dir, batch_id)
+        _write_batch(bands, index_dir, batch_id, by="pbucket")
         if labels_dir is not None:
-            if (
-                _labels_layout_of(spark, labels_dir) or labels_layout
-            ) == "bucketed":
-                _fold_labels_bucketed(
-                    spark, labels_dir, pairs, batch_id, n_label_buckets
-                )
-            else:
-                _fold_labels_gen(spark, labels_dir, pairs, batch_id)
+            _fold_labels_gen(spark, labels_dir, pairs, batch_id)
 
     return _start(docs, process, checkpoint)
 
@@ -852,22 +789,25 @@ def _bucketed_history(
     spark: SparkSession, target_dir: str, batch_id: int, touched: DataFrame,
     n_buckets: int,
 ) -> DataFrame | None:
-    """``_history`` of a winnow index or df table, which must be laid
-    out by ``bucket``; a flat history raises rather than being read
-    whole and appended to in a second layout.  A directory holding only
-    the replaying batch's own partition (a first batch that crashed
-    after its write) has no history: the batch overwrites that
-    partition in the declared layout."""
+    """``_history`` of an index that must be laid out by the partition
+    column ``touched`` names — ``bucket`` for the winnow index and df
+    table, ``pbucket`` for the banded MinHash index.  A flat history
+    raises rather than being read whole and appended to in a second
+    layout.  A directory holding only the replaying batch's own
+    partition (a first batch that crashed after its write) has no
+    history: the batch overwrites that partition in the declared
+    layout."""
     if _batch_partition_ids(spark, target_dir) == [batch_id]:
         declare_upsert_layout(spark, target_dir, n_buckets)
         return None
     _pin_bucket_count(spark, target_dir, n_buckets)
     hist = _history(spark, target_dir, batch_id, touched)
-    if hist is not None and "bucket" not in hist.columns:
+    col = touched.columns[0]
+    if hist is not None and col not in hist.columns:
         raise ValueError(
-            f"streaming_winnow_dedup: {target_dir} has no bucket partition "
-            "column (a flat layout); rewrite it partitioned by "
-            f"bucket = fp % {n_buckets}, or start a fresh directory"
+            f"{target_dir} has no {col} partition column (a flat layout); "
+            f"rewrite it partitioned by {col} with n_buckets={n_buckets}, "
+            "or start a fresh directory"
         )
     return hist
 
@@ -981,125 +921,6 @@ def streaming_frozen_score(
     return _start(docs, process, checkpoint)
 
 
-_LABELS_FOLD_MARKER = "_fold_marker.json"
-
-
-def _fold_labels_bucketed(
-    spark, labels_dir: str, pairs: DataFrame, batch_id: int, n_buckets: int
-) -> None:
-    """Fold a batch's delta pairs into a BUCKETED labels target —
-    ``lbucket = pmod(xxhash64(doc_id), n_buckets)`` partitions rewritten
-    via dynamic partition overwrite, only for buckets holding a CHANGED
-    label.  This closes the gen-layout's write amplification (each
-    generation materialized the FULL corpus-sized labeling even though
-    the fold's compute was delta-local): per-batch WRITE cost is now
-    O(changed rows + their buckets), the ``foreach_batch_upsert``
-    locality pattern applied to the labeling.
-
-    Crash protocol (a multi-bucket dynamic overwrite is not atomic —
-    a crash mid-commit can leave the labeling MIXED: some buckets
-    post-fold, some pre-fold):
-
-    1. compute the new full labeling (lazy; untouched clusters pass
-       through from the current files map-side) and its changed-bucket
-       list (≤ ``n_buckets`` ids driver-side);
-    2. publish ``_fold_marker.json`` naming those buckets (atomic
-       ``os.replace``) BEFORE the overwrite;
-    3. dynamic-overwrite exactly those bucket partitions with the new
-       labeling restricted to them;
-    4. remove the marker.
-
-    On any later fold that finds a marker (crash between 2 and 4 — of
-    this batch or a dead run), the labeling may be mixed, which can
-    strand rows: delta-locality pulls in only clusters named by a
-    delta endpoint's CURRENT label, and a stale row's old label may no
-    longer be any endpoint's label.  But every stale label points at a
-    center doc whose OWN row was relabeled — i.e. lives in a marker
-    bucket — so re-folding every cluster that the marker buckets' rows
-    name (by doc_id or cluster_id) repairs all possible staleness.
-    Those clusters are forced into the fold as their own STAR EDGES
-    (``(doc_id, cluster_id)`` pairs — true connectivity facts, so in
-    the healthy case they change nothing).  Replay after a COMPLETED
-    fold is a no-op by construction: re-folding the same pairs is
-    idempotent, the changed set is empty, and nothing is written."""
-    import json as _json
-
-    from firmable_company_data_pipeline_spark.operators import dedup as dd
-
-    # the crash marker goes through session.fs_* (verdict r11 #4 — the
-    # Hadoop-FS port of the protocol surface): plain paths keep the
-    # atomic posix tmp+os.replace publish, scheme'd paths
-    # (s3a/hdfs/file:) write through the Hadoop FileSystem API so the
-    # marker lives in the SAME store as the labeling it repairs — the
-    # r10/r11 refusal branch replaced by working writes.  The marker
-    # publish uses direct=True on scheme'd stores: a crash mid-write
-    # leaves a partial marker the next fold fails on LOUDLY (json
-    # parse), whereas a delete+rename window could lose the marker and
-    # silently skip repair.
-    _pin_bucket_count(spark, labels_dir, n_buckets)
-    prev = _read_parquet_or_none(spark, labels_dir)
-    marker_p = labels_dir.rstrip("/") + "/" + _LABELS_FOLD_MARKER
-    marker_txt = _fs_read_text(spark, marker_p)
-    marker = _json.loads(marker_txt) if marker_txt is not None else None
-    fold_pairs = pairs.select("id_a", "id_b")
-    if prev is None:
-        prev_l = fold_pairs.select(
-            F.col("id_a").alias("doc_id"), F.col("id_a").alias("cluster_id")
-        ).limit(0)
-    else:
-        prev_l = prev.select("doc_id", "cluster_id")
-        if marker:
-            sus_rows = prev.filter(F.col("lbucket").isin(marker["buckets"]))
-            sus_ids = (
-                sus_rows.select(F.col("doc_id").alias("sid"))
-                .unionByName(sus_rows.select(F.col("cluster_id").alias("sid")))
-                .distinct()
-            )
-            recovery = (
-                prev.join(sus_ids, prev["cluster_id"] == F.col("sid"))
-                .filter(F.col("doc_id") != F.col("cluster_id"))
-                .select(
-                    F.col("doc_id").alias("id_a"),
-                    F.col("cluster_id").alias("id_b"),
-                )
-            )
-            fold_pairs = fold_pairs.unionByName(recovery)
-    new_labels = (
-        dd.incremental_components(prev_l, fold_pairs)
-        .withColumn("lbucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)))
-        .transform(materialize, "share")
-    )
-    if prev is None:
-        changed = new_labels
-    else:
-        changed = new_labels.join(
-            prev.select("doc_id", F.col("cluster_id").alias("_old")),
-            "doc_id",
-            "left",
-        ).filter(~F.col("cluster_id").eqNullSafe(F.col("_old")))
-    tb = {r[0] for r in changed.select("lbucket").distinct().collect()}
-    if marker:
-        tb |= set(marker["buckets"])
-    if not tb:
-        return
-    _fs_mkdirs(spark, labels_dir)
-    _fs_write_text(
-        spark,
-        marker_p,
-        _json.dumps({"batch_id": batch_id, "buckets": sorted(tb)}),
-        direct=True,
-    )
-    (
-        new_labels.filter(F.col("lbucket").isin(sorted(tb)))
-        .repartition("lbucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("lbucket")
-        .parquet(labels_dir)
-    )
-    _fs_delete(spark, marker_p)
-
-
 def _repair_label_manifest(
     labels_dir: str,
     batch_id: int,
@@ -1143,9 +964,12 @@ def _repair_label_manifest(
 
 def _label_gens(labels_dir: str, spark: SparkSession | None = None) -> list[int]:
     """``gen=N`` generation ids under ``labels_dir`` — plain paths via
-    ``os.listdir`` (unchanged), scheme'd paths via Hadoop listStatus
-    (a driver-local listdir reads a populated HDFS/S3 target as empty,
-    the advice-r7 probe class; ``spark`` required there)."""
+    ``os.listdir``, scheme'd paths via Hadoop listStatus (a driver-local
+    listdir reads a populated HDFS/S3 target as empty, the advice-r7
+    probe class; ``spark`` required there).  The same listing refuses a
+    bucketed labeling (``lbucket=*`` partitions or an ``_N_BUCKETS_*``
+    marker), which the fold would otherwise mix silently with its
+    generations."""
     if not _is_schemed_path(labels_dir):
         if not os.path.exists(labels_dir):
             return []
@@ -1155,6 +979,13 @@ def _label_gens(labels_dir: str, spark: SparkSession | None = None) -> list[int]
         if not fs.exists(jdir):
             return []
         names = [st.getPath().getName() for st in fs.listStatus(jdir)]
+    foreign = [d for d in names if d.startswith(("lbucket=", "_N_BUCKETS_"))]
+    if foreign:
+        raise ValueError(
+            f"labels target {labels_dir} holds a bucketed labeling "
+            f"({foreign[0]}), not gen=N generations; rebuild the labels "
+            "in a fresh directory"
+        )
     out = []
     for d in names:
         if d.startswith("gen="):
@@ -1168,29 +999,19 @@ def _label_gens(labels_dir: str, spark: SparkSession | None = None) -> list[int]
 def read_dedup_labels(spark, labels_dir: str) -> DataFrame:
     """Newest cluster-labeling generation maintained by
     ``streaming_minhash_dedup(labels_dir=...)``, resolved through the
-    atomically-renamed ``_latest.json`` manifest — a half-written
+    atomically-published ``_latest.json`` manifest — a half-written
     generation (crash mid-write) is never served because the manifest
-    flips only after the write completes.
+    flips only after the write completes.  No manifest raises
+    FileNotFoundError.
 
     Mid-stream caveat: the returned DataFrame is lazy and pins the
     resolved generation's files; the stream retains that generation for
     one further micro-batch (the prune keeps read-gen + current), so
-    collect within a micro-batch interval or snapshot the frame.
-
-    ``labels_layout="bucketed"`` targets (round 10) are detected by
-    their ``lbucket=*`` partitions and served directly (the partition
-    column is layout, not data); a pending ``_fold_marker.json`` means
-    a fold crashed mid-overwrite — the view may mix pre- and post-fold
-    buckets until the next fold repairs it, stated rather than hidden."""
+    collect within a micro-batch interval or snapshot the frame."""
     import json as _json
 
     txt = _fs_read_text(spark, os.path.join(labels_dir, "_latest.json"))
     if txt is None:
-        # bucketed-layout detection through Spark's own filesystem (the
-        # _batch_partition_ids rule — a driver-local listdir would read
-        # an HDFS/S3 target as absent)
-        if _labels_layout_of(spark, labels_dir) == "bucketed":
-            return spark.read.parquet(labels_dir).drop("lbucket")
         raise FileNotFoundError(f"no label manifest under {labels_dir}")
     gen = _json.loads(txt)["gen"]
     return spark.read.parquet(os.path.join(labels_dir, f"gen={gen}"))
@@ -1486,13 +1307,16 @@ def _batch_rollup(batch_df: DataFrame) -> DataFrame:
     )
 
 
-# NOTE on filesystem scope: the MANIFEST helpers below (and the label-
-# generation manifest further down) speak the driver-local file protocol
-# (os.listdir / open) — the dependency-free stand-in for what a
-# Delta/Iceberg log provides.  On a remote FS (HDFS/S3) swap them for
-# the Hadoop FileSystem API (`_hadoop_fs` above, already used by the
-# data-plane probes and the centroid freeze marker); the DATA reads/
-# writes all go through Spark and are FS-correct as-is.
+# NOTE on filesystem scope: the compaction helpers below
+# (read_rollup, compact_rollup, compact_batch_index) speak the
+# driver-local file protocol (os.listdir / open / os.replace) — the
+# dependency-free stand-in for what a Delta/Iceberg log provides — and
+# raise ValueError on a scheme'd path (_require_driver_local) instead of
+# reading a remote target as absent.  A Hadoop FileSystem port would
+# need an atomic replace: FileSystem.rename onto an existing file does
+# not overwrite (it returns False on the local filesystem), so it cannot
+# stand in for os.replace.  The DATA reads/writes all go through Spark
+# and are FS-correct as-is.
 # Compaction manifest: names the live base dir and the highest batch id
 # folded into it.  Readers treat batch dirs with id <= "through" as
 # superseded, which is what makes BOTH crash windows safe (the new base
@@ -1502,6 +1326,17 @@ def _batch_rollup(batch_df: DataFrame) -> DataFrame:
 # 100 TB this layout is what a Delta/Iceberg snapshot+manifest gives you
 # for free; this is the dependency-free stand-in with the same contract.
 _COMPACT_MANIFEST = "_compacted.json"
+
+
+def _require_driver_local(path: str, helper: str) -> None:
+    """Refuse a scheme'd ``path`` for a driver-local helper (the NOTE
+    above ``_COMPACT_MANIFEST``)."""
+    if _is_schemed_path(path):
+        raise ValueError(
+            f"{helper}: {path!r} is a scheme'd path, but {helper} uses "
+            "driver-local file I/O (os/shutil) and needs a plain path on "
+            "the driver's filesystem"
+        )
 
 
 def _read_compact_manifest(target_dir: str) -> dict | None:
@@ -1540,7 +1375,9 @@ def _rollup_batch_dirs(target_dir: str) -> list[tuple[int, str]]:
 def read_rollup(spark, target_dir: str) -> DataFrame:
     """Merged view of a ``streaming_rollup_refresh`` target: the
     manifest's compacted base (if any) plus every batch partial NOT yet
-    folded into it, re-aggregated with the rollup's combiners."""
+    folded into it, re-aggregated with the rollup's combiners.  Plain
+    driver-local paths only."""
+    _require_driver_local(target_dir, "read_rollup")
     manifest = _read_compact_manifest(target_dir)
     through = manifest["through"] if manifest else None
     paths = [os.path.join(target_dir, manifest["base"])] if manifest else []
@@ -1603,10 +1440,12 @@ def compact_batch_index(spark, index_dir: str, partition_by: tuple | None = None
     index), so compaction never silently flattens a bucketed layout
     (the folds' partition-pruned reads would then face a mixed-depth
     directory once new batches appended).  Pass an explicit tuple
-    (``()`` to force flat) to override."""
+    (``()`` to force flat) to override.  Plain driver-local paths
+    only."""
     import json
     import shutil
 
+    _require_driver_local(index_dir, "compact_batch_index")
     if not os.path.isdir(index_dir):
         return  # stream never started; nothing to compact
     marker_p = os.path.join(index_dir, _COMPACT_DELETE)
@@ -1654,10 +1493,11 @@ def compact_rollup(spark, target_dir: str) -> None:
     that the next compaction removes), and the superseded partials are
     deleted only AFTER the rename (a crash between rename and delete
     changes nothing the reader sees).  Run under the same single-writer
-    contract as the refresh itself."""
+    contract as the refresh itself.  Plain driver-local paths only."""
     import json
     import shutil
 
+    _require_driver_local(target_dir, "compact_rollup")
     manifest = _read_compact_manifest(target_dir)
     through = manifest["through"] if manifest else None
     fresh = [

@@ -466,8 +466,8 @@ def probe_minhash_fold(spark, work: str, docs_path: str, tag: str) -> float:
     for d in (index_dir, pairs_dir, src, ckpt):
         shutil.rmtree(d, ignore_errors=True)
     hist = spark.read.parquet(os.path.join(docs_path, "documents.parquet"))
-    # seed in the round-10 banded/bucketed layout so the fold measures
-    # the partition-pruned path (pbucket = hash(band, bucket) % 64)
+    # seed in the fold's banded index layout, so the fold measures its
+    # partition-pruned path (pbucket = hash(band, bucket) % 64)
     dd.minhash_band_rows(dd.minhash_signatures(hist)).write.partitionBy(
         "pbucket"
     ).parquet(os.path.join(index_dir, "batch_id=9999"))
@@ -615,6 +615,7 @@ def probe_ivf_fold(spark, work: str, emb_path: str, tag: str) -> float:
         default_centroids,
         ivf_assign,
     )
+    from firmable_company_data_pipeline_spark.session import hadoop_fs
     from firmable_company_data_pipeline_spark.streaming import jobs
 
     index_dir = os.path.join(work, f"ivf_index_{tag}")
@@ -628,7 +629,7 @@ def probe_ivf_fold(spark, work: str, emb_path: str, tag: str) -> float:
     )
     cents = default_centroids(emb, n_cells=8)
     cents.coalesce(1).write.parquet(cents_dir)
-    fs, marker = jobs._hadoop_fs(spark, cents_dir + "/_CENTROIDS_FROZEN")
+    fs, marker = hadoop_fs(spark, cents_dir + "/_CENTROIDS_FROZEN")
     fs.createNewFile(marker)
     ivf_assign(emb, spark.read.parquet(cents_dir)).write.parquet(
         os.path.join(index_dir, "batch_id=9999")

@@ -28,10 +28,7 @@ def test_cli_demo_runs_end_to_end(spark, capsys, tmp_path):
     assert _persistent_rdds(spark) - before == set()
 
 
-def test_headline_membership_rule():
-    """The benched list is the registry minus the scalar/point-lookup
-    and dominated-variant exclusions.  Every exclusion must name a
-    registered query, so a stale one fails here."""
+def _load_bench():
     import importlib.util
     import os as _os
     import sys as _sys
@@ -41,6 +38,14 @@ def test_headline_membership_rule():
     bench = importlib.util.module_from_spec(spec)
     _sys.modules["bench_mod"] = bench
     spec.loader.exec_module(bench)
+    return bench
+
+
+def test_headline_membership_rule():
+    """The benched list is the registry minus the scalar/point-lookup
+    and dominated-variant exclusions.  Every exclusion must name a
+    registered query, so a stale one fails here."""
+    bench = _load_bench()
     from firmable_company_data_pipeline_spark.queries import registry
 
     queries, _ = registry()
@@ -50,3 +55,13 @@ def test_headline_membership_rule():
     headline = bench.headline(queries)
     assert len(headline) == len(set(headline)), "duplicates in the headline"
     assert set(headline) == set(queries) - excluded
+
+
+def test_bench_raw_out_default_is_keyed_by_cores():
+    """Sweeps at different core counts keep separate per-query maps:
+    the default raw-out file names the run's core count."""
+    import os as _os
+
+    bench = _load_bench()
+    assert _os.path.basename(bench.default_raw_out(8)) == "bench_raw_c8.json"
+    assert bench.default_raw_out(32) != bench.default_raw_out(8)

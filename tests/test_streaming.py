@@ -555,200 +555,6 @@ def test_bucketed_index_folds_prune_partitions(spark, sf_dir, tmp_path):
     assert touched / total <= 3 * len(pbks) / 64
 
 
-def test_streaming_minhash_bucketed_labels_match_batch(spark, sf_dir, tmp_path):
-    """labels_layout='bucketed': the incrementally folded labeling still
-    equals a batch re-cluster of the full pair set, but the second
-    fold's WRITE is bucket-local — buckets holding no changed label
-    keep byte-identical files across the fold (the write-amplification
-    seam the gen layout documented, closed)."""
-    import glob as _glob
-    import time as _time
-
-    from firmable_company_data_pipeline_spark.operators import dedup as dd
-
-    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
-        "doc_id", "text"
-    )
-    cut = docs.approxQuantile("doc_id", [0.95], 0.0)[0]
-    src = str(tmp_path / "docs_src")
-    labels_dir = str(tmp_path / "blabels")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run_stream(declare_layout):
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        # the SECOND run deliberately omits labels_layout: the existing
-        # target's layout must win over the "gen" default (review r10 —
-        # a restart without the kwarg would otherwise rebuild the
-        # labeling from one batch's pairs and mix layouts)
-        kw = {"labels_layout": "bucketed"} if declare_layout else {}
-        q = jobs.streaming_minhash_dedup(
-            stream, str(tmp_path / "bidx"), str(tmp_path / "bpairs"),
-            checkpoint=ckpt, threshold=0.0,
-            labels_dir=labels_dir, n_label_buckets=64, **kw,
-        )
-        _drain(q)
-
-    def bucket_files():
-        return {
-            d: sorted(
-                (os.path.basename(f), os.path.getsize(f))
-                for f in _glob.glob(f"{d}/*.parquet")
-            )
-            for d in _glob.glob(f"{labels_dir}/lbucket=*")
-        }
-
-    import os
-
-    docs.filter(F.col("doc_id") <= cut).coalesce(1).write.mode("append").parquet(src)
-    run_stream(declare_layout=True)
-    assert jobs._labels_layout_of(spark, labels_dir) == "bucketed"
-    first = _rows(
-        jobs.read_dedup_labels(spark, labels_dir), ["doc_id", "cluster_id"]
-    )
-    want_first = _rows(
-        dd.connected_components(
-            dd.minhash_lsh_pairs(docs.filter(F.col("doc_id") <= cut), threshold=0.0)
-        ),
-        ["doc_id", "cluster_id"],
-    )
-    assert first == want_first and first
-    before = bucket_files()
-
-    docs.filter(F.col("doc_id") > cut).coalesce(1).write.mode("append").parquet(src)
-    run_stream(declare_layout=False)
-    got = _rows(jobs.read_dedup_labels(spark, labels_dir), ["doc_id", "cluster_id"])
-    want = _rows(
-        dd.connected_components(dd.minhash_lsh_pairs(docs, threshold=0.0)),
-        ["doc_id", "cluster_id"],
-    )
-    assert got == want and got
-    after = bucket_files()
-    untouched = [d for d in before if after.get(d) == before[d]]
-    touched = [d for d in after if after[d] != before.get(d)]
-    # the ~5% delta must leave most buckets byte-identical AND rewrite some
-    assert touched and untouched
-    assert len(untouched) > len(before) // 2, (len(untouched), len(before))
-    # no crash marker left behind
-    assert not os.path.exists(f"{labels_dir}/{jobs._LABELS_FOLD_MARKER}")
-
-
-def test_bucketed_labels_fold_crash_repair(spark, tmp_path):
-    """The marker protocol repairs a crash mid-overwrite: with one
-    touched bucket manually rolled back to its pre-fold content (the
-    MIXED state a non-atomic multi-bucket overwrite can leave) and the
-    marker still present, replaying the fold reaches the batch-CC
-    answer — the marker buckets' star edges pull every possibly-stale
-    cluster back into the fold.  A replay after a COMPLETED fold is a
-    no-op (idempotent, nothing written)."""
-    import glob as _glob
-    import json
-    import os
-    import shutil
-
-    labels_dir = str(tmp_path / "labels")
-    pairs1 = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
-    jobs._fold_labels_bucketed(spark, labels_dir, pairs1, 0, 8)
-    got1 = _rows(
-        spark.read.parquet(labels_dir).select("doc_id", "cluster_id"),
-        ["doc_id", "cluster_id"],
-    )
-    assert got1 == {(1, 1), (2, 1), (3, 3), (4, 3)}
-
-    pre = str(tmp_path / "pre_fold2")
-    shutil.copytree(labels_dir, pre)
-    # fold 2 bridges the two clusters: every doc relabels to 1
-    pairs2 = spark.createDataFrame([(2, 3)], "id_a long, id_b long")
-    jobs._fold_labels_bucketed(spark, labels_dir, pairs2, 1, 8)
-    want = {(1, 1), (2, 1), (3, 1), (4, 1)}
-    assert _rows(
-        spark.read.parquet(labels_dir).select("doc_id", "cluster_id"),
-        ["doc_id", "cluster_id"],
-    ) == want
-
-    # completed-fold replay: idempotent no-op, no marker afterwards
-    jobs._fold_labels_bucketed(spark, labels_dir, pairs2, 1, 8)
-    assert _rows(
-        spark.read.parquet(labels_dir).select("doc_id", "cluster_id"),
-        ["doc_id", "cluster_id"],
-    ) == want
-    assert not os.path.exists(os.path.join(labels_dir, jobs._LABELS_FOLD_MARKER))
-
-    # fabricate the crash: roll EVERY touched bucket whose content
-    # changed back to its pre-fold-2 state one at a time and verify the
-    # replay repairs each mixed state
-    def files(d):
-        return {
-            os.path.basename(p): os.path.getsize(p)
-            for p in _glob.glob(f"{d}/*.parquet")
-        }
-
-    changed_buckets = [
-        os.path.basename(d)
-        for d in _glob.glob(f"{labels_dir}/lbucket=*")
-        if os.path.isdir(os.path.join(pre, os.path.basename(d)))
-        and files(d) != files(os.path.join(pre, os.path.basename(d)))
-    ]
-    assert changed_buckets, "fold 2 must rewrite at least one pre-existing bucket"
-    all_touched = sorted(
-        int(os.path.basename(d).split("=", 1)[1])
-        for d in _glob.glob(f"{labels_dir}/lbucket=*")
-    )
-    for cb in changed_buckets:
-        shutil.rmtree(os.path.join(labels_dir, cb))
-        shutil.copytree(os.path.join(pre, cb), os.path.join(labels_dir, cb))
-        with open(os.path.join(labels_dir, jobs._LABELS_FOLD_MARKER), "w") as fh:
-            json.dump({"batch_id": 1, "buckets": all_touched}, fh)
-        jobs._fold_labels_bucketed(spark, labels_dir, pairs2, 1, 8)
-        assert _rows(
-            spark.read.parquet(labels_dir).select("doc_id", "cluster_id"),
-            ["doc_id", "cluster_id"],
-        ) == want, cb
-        assert not os.path.exists(
-            os.path.join(labels_dir, jobs._LABELS_FOLD_MARKER)
-        )
-
-
-def test_minhash_banded_false_pins_flat_layout(spark, sf_dir, tmp_path):
-    """banded=False at stream creation keeps the flat (id, sig) index
-    (the wide-batch regime where the banded layout would read
-    LSH_BANDS× the bytes), with pair output unchanged."""
-    import time as _time
-
-    from firmable_company_data_pipeline_spark.operators import dedup as dd
-
-    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
-        "doc_id", "text"
-    )
-    src = str(tmp_path / "docs_src")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("append").parquet(src)
-    _time.sleep(0.3)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    index_dir = str(tmp_path / "flat_index")
-    pairs_dir = str(tmp_path / "flat_pairs")
-    q = jobs.streaming_minhash_dedup(
-        stream, index_dir, pairs_dir,
-        checkpoint=str(tmp_path / "ckpt"), threshold=0.0, banded=False,
-    )
-    _drain(q)
-    idx = spark.read.parquet(index_dir)
-    assert "pbucket" not in idx.columns and "sig" in idx.columns
-    assert idx.count() == idx.select("id").distinct().count()
-    streamed = _rows(spark.read.parquet(pairs_dir), ["id_a", "id_b", "est_jaccard"])
-    batch = _rows(
-        dd.minhash_lsh_pairs(docs, threshold=0.0), ["id_a", "id_b", "est_jaccard"]
-    )
-    assert streamed == batch
-
-
 def test_compact_batch_index_mid_stream(spark, sf_dir, tmp_path):
     """Compacting the winnow fingerprint index + df table between two
     stream runs must leave the continued stream's pair output identical
@@ -874,6 +680,64 @@ def test_streaming_winnow_refuses_flat_history(spark, sf_dir, tmp_path):
         raise AssertionError("stream should have failed")  # pragma: no cover
 
 
+def test_streaming_minhash_refuses_flat_history(spark, sf_dir, tmp_path):
+    """The MinHash fold serves only the banded layout: a declared index
+    whose history has no ``pbucket`` partition column (the flat
+    (id, sig) layout) fails loudly instead of being read whole and
+    appended to in a second layout."""
+    from firmable_company_data_pipeline_spark.operators import dedup as dd
+
+    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
+        "doc_id", "text"
+    )
+    index_dir = str(tmp_path / "sig_index")
+    dd.minhash_signatures(docs.limit(20)).write.parquet(index_dir + "/batch_id=-1")
+    jobs.declare_upsert_layout(spark, index_dir, 64)
+    src = str(tmp_path / "src")
+    docs.filter(F.col("doc_id") < 5).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    q = jobs.streaming_minhash_dedup(
+        stream, index_dir, str(tmp_path / "pairs"),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(Exception, match="no pbucket partition column"):
+        q.awaitTermination(120)
+        raise AssertionError("stream should have failed")  # pragma: no cover
+
+
+def test_streaming_minhash_labels_refuse_bucketed_layout(spark, sf_dir, tmp_path):
+    """The labels fold maintains only ``gen=N`` generations: a labels_dir
+    holding an ``lbucket=*`` partition fails the fold instead of being
+    mixed with generations, and an ``_N_BUCKETS_*`` marker is refused by
+    the same generation listing."""
+    import os
+
+    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
+        "doc_id", "text"
+    )
+    labels_dir = str(tmp_path / "labels")
+    spark.createDataFrame([(1, 1)], "doc_id long, cluster_id long").write.parquet(
+        labels_dir + "/lbucket=0"
+    )
+    src = str(tmp_path / "src")
+    docs.filter(F.col("doc_id") < 20).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    q = jobs.streaming_minhash_dedup(
+        stream, str(tmp_path / "idx"), str(tmp_path / "pairs"),
+        checkpoint=str(tmp_path / "ckpt"), threshold=0.0, labels_dir=labels_dir,
+    )
+    with pytest.raises(Exception, match="bucketed labeling"):
+        q.awaitTermination(120)
+        raise AssertionError("stream should have failed")  # pragma: no cover
+    assert sorted(os.listdir(labels_dir)) == ["lbucket=0"]
+
+    marked = tmp_path / "marked"
+    marked.mkdir()
+    (marked / "_N_BUCKETS_64").touch()
+    with pytest.raises(ValueError, match="bucketed labeling"):
+        jobs._label_gens(str(marked))
+
+
 def test_streaming_winnow_first_batch_crash_autorecovers(spark, sf_dir, tmp_path):
     """Advice r9: a first batch that crashed AFTER the index-partition
     write but BEFORE the df-partition write (the pre-reorder layout)
@@ -997,6 +861,22 @@ def test_compact_batch_index_resumes_after_crash(spark, tmp_path):
     assert _os.path.exists(_os.path.join(d, "batch_id=-1"))
     got = _rows(spark.read.parquet(d), ["id", "v"])
     assert got == {(i, i * 10) for i in range(9)}
+
+
+def test_compaction_helpers_refuse_schemed_paths(spark, tmp_path):
+    """compact_batch_index, read_rollup and compact_rollup use
+    driver-local os/shutil I/O: on a ``file://`` path each raises
+    instead of reading the target as absent, and the index is left as
+    it was."""
+    import os
+
+    local = str(tmp_path / "idx")
+    for b in (0, 1):
+        spark.range(3).write.parquet(os.path.join(local, f"batch_id={b}"))
+    for helper in (jobs.compact_batch_index, jobs.read_rollup, jobs.compact_rollup):
+        with pytest.raises(ValueError, match="driver-local"):
+            helper(spark, "file://" + local)
+    assert sorted(os.listdir(local)) == ["batch_id=0", "batch_id=1"]
 
 
 def test_streaming_cms_refresh_matches_batch(spark, sf_dir, tmp_path):
@@ -1723,40 +1603,6 @@ def test_pin_bucket_count_refuses_undeclared_seed(spark, tmp_path):
     fresh = str(tmp_path / "fresh_idx")
     jobs._pin_bucket_count(spark, fresh, 16)
     assert jobs._bucket_markers(spark, fresh) == [16]
-
-
-def test_bucketed_labels_fold_schemed_dir(spark, tmp_path):
-    """Verdict r11 #4: the crash-repair marker protocol now runs
-    through the Hadoop FS API, so a scheme'd labels_dir WORKS instead
-    of being refused — fold, repair and marker cleanup all on the
-    file:-addressed store (the cheapest scheme posix I/O cannot
-    address), with results identical to the posix path."""
-    import json
-    import os
-
-    local = str(tmp_path / "labels_schemed")
-    labels_dir = "file://" + local
-    pairs1 = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
-    jobs._fold_labels_bucketed(spark, labels_dir, pairs1, 0, 8)
-    # marker cleaned up at the REAL location; labels readable
-    assert not os.path.exists(os.path.join(local, jobs._LABELS_FOLD_MARKER))
-    got = {
-        (r["doc_id"], r["cluster_id"])
-        for r in spark.read.parquet(labels_dir).select("doc_id", "cluster_id").collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 3), (4, 3)}
-    # a pending marker (crash simulation) triggers the repair path and
-    # is removed by the next completed fold
-    with open(os.path.join(local, jobs._LABELS_FOLD_MARKER), "w") as fh:
-        json.dump({"batch_id": 0, "buckets": [0]}, fh)
-    pairs2 = spark.createDataFrame([(2, 5)], "id_a long, id_b long")
-    jobs._fold_labels_bucketed(spark, labels_dir, pairs2, 1, 8)
-    assert not os.path.exists(os.path.join(local, jobs._LABELS_FOLD_MARKER))
-    got = {
-        (r["doc_id"], r["cluster_id"])
-        for r in spark.read.parquet(labels_dir).select("doc_id", "cluster_id").collect()
-    }
-    assert got == {(1, 1), (2, 1), (5, 1), (3, 3), (4, 3)}
 
 
 def test_streaming_corpus_screen_matches_composed_batch(spark, sf_dir, tmp_path):
