@@ -5,6 +5,9 @@ quality scoring, token counting, document fingerprinting.
 Everything here is a pure Column expression — JVM-side, whole-stage
 codegen, no Python boundary — so the same logic is expressible in the
 DuckDB oracle SQL (list lambdas mirror Spark's higher-order functions).
+The one frame-level function is :func:`word_ngram_rows`, the row form
+of word-n-gram assembly beside the array form :func:`word_ngrams`:
+a generator step, still map-side.
 
 Determinism contract: the rolling hash is an explicit arithmetic fold
 ``h = (h*31 + codepoint) mod 1_000_000_007`` rather than Spark's
@@ -15,7 +18,9 @@ shuffle, no UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HASH_MOD = 1_000_000_007
@@ -39,6 +44,58 @@ STOPWORDS_EN = LANG_PROFILES["en"]
 def tokens(col: Column) -> Column:
     """Whitespace tokenization (lowercased), empty-safe."""
     return F.split(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")), " ")
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """``array<string>`` of every word n-gram OCCURRENCE of a token
+    array, in order, each joined by one space; empty when the array has
+    fewer than ``n`` tokens.  The in-expression form: for one order, and
+    for grams that feed :func:`char_fold_hash`.
+
+    Pass a projected attribute (``F.col("toks")``), not the
+    :func:`tokens` expression: the interpreted ``transform`` lambda
+    re-evaluates its input for every ``element_at``.
+    """
+    grams = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)]),
+    )
+    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
+
+
+def word_ngram_rows(df: DataFrame, toks: str, orders: Sequence[int]) -> DataFrame:
+    """One row per word n-gram OCCURRENCE of ``df``'s token-array column
+    ``toks``, for every order in ``orders`` in ONE pass: ``df``'s other
+    columns, then ``n`` (the order) and ``gram`` (as in
+    :func:`word_ngrams`).  The row-level form, for several orders.
+
+    ``posexplode`` the array (a generator: no shuffle) and assemble each
+    gram MAP-SIDE while the array is still in the row:
+    ``F.get(toks, pos + j)`` is codegen'd and NULL past the end, where
+    the interpreted ``transform`` of :func:`word_ngrams` is not.  One
+    order keeps the positions it fits; several ride one tagged explode.
+    """
+    keep = [c for c in df.columns if c != toks]
+    pos = F.col("_pos")
+    ex = df.select(*keep, toks, F.posexplode(toks).alias("_pos", "_tok"))
+
+    def fits(n: int) -> Column:
+        return pos <= F.size(toks) - n
+
+    def gram(n: int) -> Column:
+        return F.concat_ws(" ", F.col("_tok"), *[F.get(toks, pos + j) for j in range(1, n)])
+
+    if len(orders) == 1:
+        (n,) = orders
+        return ex.filter(fits(n)).select(*keep, F.lit(n).alias("n"), gram(n).alias("gram"))
+    tagged = F.array(
+        *[F.struct(F.lit(n).alias("n"), F.when(fits(n), gram(n)).alias("gram")) for n in orders]
+    )
+    return (
+        ex.select(*keep, F.explode(tagged).alias("_g"))
+        .select(*keep, "_g.n", "_g.gram")
+        .filter(F.col("gram").isNotNull())
+    )
 
 
 def token_count(col: Column) -> Column:

@@ -48,6 +48,8 @@ from firmable_company_data_pipeline_spark.functions.textstats import (
     HASH_MOD,
     char_fold_hash,
     tokens,
+    word_ngram_rows,
+    word_ngrams,
 )
 from firmable_company_data_pipeline_spark.functions.vectors import dot, norm2, to_double
 from firmable_company_data_pipeline_spark.session import materialize, spread
@@ -61,39 +63,6 @@ from firmable_company_data_pipeline_spark.session import materialize, spread
 DUP_WORD_MAX = 0.60
 TOP_BIGRAM_MAX = 0.35
 DUP_TRIGRAM_MAX = 0.50
-
-
-def _gram_rows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, kind, gram) — one row per token / bigram / trigram
-    OCCURRENCE (kind 1/2/3), computed entirely MAP-SIDE: the
-    bigram/trigram at position p reads the token array via ``F.get``
-    (NULL-safe out-of-bounds) while the array is still in the row, so
-    no window, no sort, no exchange happens before the gram strings are
-    projected out."""
-    toks = spread(df).select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
-    )
-    ex = toks.select("id", "toks", F.posexplode("toks").alias("pos", "tok"))
-    n1 = F.get("toks", F.col("pos") + 1)
-    n2 = F.get("toks", F.col("pos") + 2)
-    grams = F.array(
-        F.struct(F.lit(1).alias("kind"), F.col("tok").alias("gram")),
-        F.struct(
-            F.lit(2).alias("kind"),
-            F.when(n1.isNotNull(), F.concat_ws(" ", "tok", n1)).alias("gram"),
-        ),
-        F.struct(
-            F.lit(3).alias("kind"),
-            F.when(n2.isNotNull(), F.concat_ws(" ", F.col("tok"), n1, n2)).alias(
-                "gram"
-            ),
-        ),
-    )
-    return (
-        ex.select("id", F.explode(grams).alias("g"))
-        .select("id", F.col("g.kind").alias("kind"), F.col("g.gram").alias("gram"))
-        .filter(F.col("gram").isNotNull())
-    )
 
 
 def repetition_stats(
@@ -116,14 +85,17 @@ def repetition_stats(
     aggregates.  TWO exchanges end-to-end, no window, no joins, no
     count(DISTINCT) expansion, no per-doc quadratic array work.
     """
+    toks = spread(df).select(
+        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+    )
     counted = (
-        _gram_rows(df, text_col, id_col)
-        .groupBy("id", "kind", "gram")
+        word_ngram_rows(toks, "toks", (1, 2, 3))
+        .groupBy("id", "n", "gram")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    is_tok = F.col("kind") == 1
-    is_big = F.col("kind") == 2
-    is_tri = F.col("kind") == 3
+    is_tok = F.col("n") == 1
+    is_big = F.col("n") == 2
+    is_tri = F.col("n") == 3
     per_id = counted.groupBy("id").agg(
         F.sum(F.when(is_tok, F.col("c"))).alias("n_tok"),
         F.sum(F.when(is_tok, 1).otherwise(0)).alias("n_distinct_tok"),
@@ -330,34 +302,22 @@ def _dsir_tf(
     id_col: str,
     n_buckets: int,
     is_target: Column | None = None,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id[, _tgt], bucket, c) — per-document hashed-bigram bucket
-    counts, the shared front of the DSIR family: bigram OCCURRENCES
-    assembled map-side from the in-row token array, fold-hashed into
-    ``n_buckets``, one hash-agg with map-side combine."""
+    """(id[, _tgt], carry..., bucket, c) — per-document hashed-bigram
+    bucket counts, the shared front of the DSIR family: bigram
+    OCCURRENCES (:func:`word_ngrams`), fold-hashed into ``n_buckets``,
+    one hash-agg with map-side combine.  ``carry`` columns are per-doc
+    attributes threaded through the aggregation keys: id is unique per
+    doc, so they add no exchange."""
     cols = [F.col(id_col).alias("id")]
     if is_target is not None:
         cols.append(is_target.alias("_tgt"))
-    toks = spread(df).select(*cols, tokens(F.col(text_col)).alias("toks"))
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at("toks", i + 1), F.element_at("toks", i + 2)
-        ),
-    )
-    keys = ["id"] + (["_tgt"] if is_target is not None else [])
+    toks = spread(df).select(*cols, *carry, tokens(F.col(text_col)).alias("toks"))
+    keys = toks.columns[:-1]
     return (
-        toks.select(
-            *keys,
-            F.explode(
-                F.when(F.size("toks") >= 2, grams).otherwise(
-                    F.array().cast("array<string>")
-                )
-            ).alias("gram"),
-        )
-        .select(
-            *keys, (char_fold_hash(F.col("gram")) % n_buckets).alias("bucket")
-        )
+        toks.select(*keys, F.explode(word_ngrams(F.col("toks"), 2)).alias("gram"))
+        .select(*keys, (char_fold_hash(F.col("gram")) % n_buckets).alias("bucket"))
         .groupBy(*keys, "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -469,6 +429,9 @@ def dsir_importance(
     space, so buckets unseen in the target still score finitely.
     Output for every NON-target document: (doc_id, n_grams,
     logratio_sum, avg_logratio), rounded where floats surface.
+    ``carry_cols`` (per-doc attributes, e.g. the source) ride the tf
+    aggregation keys to the output, saving the corpus-sized join a
+    caller would otherwise pay to get them back.
 
     Scale shape: one (id, bucket) hash-agg over the corpus's bigram
     stream (map-side combined), ONE reuse of that table for the two
@@ -477,43 +440,10 @@ def dsir_importance(
     the 1-row totals, then a per-doc rollup — the per-doc join is
     map-side, so scoring 100 TB is two exchanges (the tf agg and the
     final per-doc agg)."""
-    # carry_cols: per-doc attributes (e.g. the source) threaded through
-    # the tf aggregation keys — id is unique per doc, so widening the
-    # groupBy with functionally-dependent columns adds no exchange and
-    # saves the corpus-sized join a caller would otherwise pay to get
-    # them back
-    carry = list(carry_cols)
-    toks = spread(df).select(
-        F.col(id_col).alias("id"),
-        is_target.alias("_tgt"),
-        *carry,
-        tokens(F.col(text_col)).alias("toks"),
-    )
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at("toks", i + 1), F.element_at("toks", i + 2)
-        ),
-    )
-    rows = toks.select(
-        "id",
-        "_tgt",
-        *carry,
-        F.explode(
-            F.when(F.size("toks") >= 2, grams).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("gram"),
-    ).select(
-        "id", "_tgt", *carry,
-        (char_fold_hash(F.col("gram")) % n_buckets).alias("bucket"),
-    )
     # per-(doc, bucket) feature counts — the one corpus-sized exchange;
     # the distribution build and the scoring join both read it
-    tf = (
-        rows.groupBy("id", "_tgt", *carry, "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .transform(materialize, "iterate")
+    tf = _dsir_tf(df, text_col, id_col, n_buckets, is_target, carry_cols).transform(
+        materialize, "iterate"
     )
     dist = tf.groupBy("bucket").agg(
         F.sum(F.when(F.col("_tgt"), F.col("c")).otherwise(F.lit(0))).alias("ct"),
@@ -535,7 +465,7 @@ def dsir_importance(
     return (
         tf.filter(~F.col("_tgt"))
         .join(broadcast(w), "bucket")
-        .groupBy("id", *carry)
+        .groupBy("id", *carry_cols)
         .agg(
             F.sum("c").alias("n_grams"),
             F.round(F.sum(F.col("c") * F.col("w")), 4).alias("logratio_sum"),
@@ -545,7 +475,7 @@ def dsir_importance(
         )
         .select(
             F.col("id").alias(id_col),
-            *carry,
+            *carry_cols,
             "n_grams",
             "logratio_sum",
             "avg_logratio",
@@ -807,28 +737,19 @@ def bigram_surprise(
     the context count (Σ over following words) and ``V`` the corpus
     vocabulary size.
 
-    Shape: the bigram list is built MAP-SIDE inside the tokenize
-    projection (zip of the token array with its own tail) — no window,
-    no per-position shuffle; occurrences then collapse to per-(doc,
-    bigram) counts exactly like the unigram operator.  Context counts
+    Shape: the bigram list is built MAP-SIDE over the projected token
+    array (:func:`word_ngrams`) — no window, no per-position shuffle;
+    occurrences then collapse to per-(doc, bigram) counts exactly like
+    the unigram operator.  Context counts
     and V derive from the bigram/token tables (hash-aggs over
     dictionary-sized inputs); V is a broadcast 1-row aggregate.  The
     per-doc mean is count-weighted over distinct (doc, bigram) rows —
     |distinct doc-bigrams| join work, not |occurrences|.
     """
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    bigrams = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(t, 1, n - 1),
-            F.slice(t, 2, n - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     tf = (
         spread(df)
-        .select(F.col(id_col).alias("id"), F.explode(bigrams).alias("bg"))
+        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+        .select("id", F.explode(word_ngrams(F.col("toks"), 2)).alias("bg"))
         .groupBy("id", "bg")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -893,8 +814,8 @@ def boilerplate_stats(
 
     Shape (three exchanges, no window, no skew-prone hot key):
 
-    1. map-side n-gram assembly (`F.get` over the in-row token array —
-       the ``_gram_rows`` trick), then one (source, doc, gram)
+    1. map-side n-gram assembly over the projected token array
+       (:func:`word_ngrams`), then one (source, doc, gram)
        hash-groupBy with partial combine;
     2. one (source, gram) hash-groupBy of that — doc-frequency —
        with partial combine;
@@ -908,21 +829,14 @@ def boilerplate_stats(
     of a single aggregation partition; the only data-sized shuffles are
     the two hash-aggs, both map-side-combined.
     """
-    toks = spread(df).select(
-        F.col(id_col).alias("id"),
-        F.col(source_col).alias("source"),
-        tokens(F.col(text_col)).alias("toks"),
-    )
-    ex = toks.select(
-        "id", "source", "toks", F.posexplode("toks").alias("pos", "tok")
-    )
-    parts = [F.col("tok")] + [F.get("toks", F.col("pos") + i) for i in range(1, n)]
-    gram = F.when(
-        parts[-1].isNotNull() if n > 1 else F.lit(True),
-        F.concat_ws(" ", *parts),
-    )
-    occ = ex.select("id", "source", gram.alias("gram")).filter(
-        F.col("gram").isNotNull()
+    occ = (
+        spread(df)
+        .select(
+            F.col(id_col).alias("id"),
+            F.col(source_col).alias("source"),
+            tokens(F.col(text_col)).alias("toks"),
+        )
+        .select("id", "source", F.explode(word_ngrams(F.col("toks"), n)).alias("gram"))
     )
     # pg feeds BOTH the doc-frequency branch and the per-doc rollup's
     # probe side.  Three narrow columns per (doc, gram); at 100 TB swap
@@ -1189,46 +1103,18 @@ def trigram_lm_table(
     batch, map-side joins).
 
     Scale shape: ONE corpus pass — unigrams, bigrams and trigrams are
-    assembled MAP-SIDE from the in-row token array (transform/zip_with
-    over slices, no window, no posexplode shuffle) into a single tagged
-    gram stream, then one hash-agg with map-side combine; the total is
-    a 1-row aggregate over the dictionary-sized result.  The table is
+    assembled MAP-SIDE from the in-row token array
+    (:func:`word_ngram_rows`, no window, no shuffle) into a single
+    tagged gram stream, then one hash-agg with map-side combine; the
+    total is a 1-row aggregate over the dictionary-sized result.  The table is
     Zipf-bounded (vocab + bigram + trigram vocabularies), not
     corpus-sized; production builds prune ``c < threshold`` rows before
     publishing — scoring below treats absent rows as unseen, so pruning
     only sharpens the backoff, never breaks it."""
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    empty = F.array().cast("array<struct<o:int,g:string>>")
-
-    def tag(order: int, g: Column) -> Column:
-        return F.struct(F.lit(order).alias("o"), g.alias("g"))
-
-    unis = F.transform(t, lambda x: tag(1, x))
-    bis = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(t, 1, n - 1),
-            F.slice(t, 2, n - 1),
-            lambda a, b: tag(2, F.concat_ws(" ", a, b)),
-        ),
-    ).otherwise(empty)
-    bc = F.zip_with(
-        F.slice(t, 2, n - 2),
-        F.slice(t, 3, n - 2),
-        lambda b, c: F.concat_ws(" ", b, c),
-    )
-    tris = F.when(
-        n >= 3,
-        F.zip_with(
-            F.slice(t, 1, n - 2), bc, lambda a, x: tag(3, F.concat_ws(" ", a, x))
-        ),
-    ).otherwise(empty)
+    toks = spread(df).select(tokens(F.col(text_col)).alias("toks"))
     grams = (
-        spread(df)
-        .select(F.explode(F.concat(unis, bis, tris)).alias("gr"))
-        .select(F.col("gr.o").alias("order"), F.col("gr.g").alias("gram"))
-        .groupBy("order", "gram")
+        word_ngram_rows(toks, "toks", (1, 2, 3))
+        .groupBy(F.col("n").alias("order"), "gram")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     total = grams.filter(F.col("order") == 1).agg(
@@ -1272,20 +1158,10 @@ def trigram_lm_score_docs(
     two exchanges at any corpus size.  If the trigram slice outgrows
     the broadcast threshold, drop the hint: the joins degrade to
     shuffle hash joins on the gram key and the contract is unchanged."""
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    bc = F.zip_with(
-        F.slice(t, 2, n - 2),
-        F.slice(t, 3, n - 2),
-        lambda b, c: F.concat_ws(" ", b, c),
-    )
-    tris = F.when(
-        n >= 3,
-        F.zip_with(F.slice(t, 1, n - 2), bc, lambda a, x: F.concat_ws(" ", a, x)),
-    ).otherwise(F.array().cast("array<string>"))
     tf = (
         spread(docs)
-        .select(F.col(id_col).alias("id"), F.explode(tris).alias("tg"))
+        .select(F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks"))
+        .select("id", F.explode(word_ngrams(F.col("toks"), 3)).alias("tg"))
         .groupBy("id", "tg")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1365,59 +1241,30 @@ def ngram_diversity(
     corpus-level diversity number a dataset card quotes.
 
     Scale shape: the :func:`trigram_lm_table` gram assembly — all three
-    orders built MAP-SIDE from the in-row token array into one tagged
-    stream — then one (source, order, gram) hash-agg with map-side
-    combine and a (source, order) rollup pivoted in-expression; two
+    orders built MAP-SIDE in one :func:`word_ngram_rows` pass — then one
+    (source, order, gram) hash-agg with map-side combine and a
+    (source, order) rollup pivoted in-expression; two
     exchanges at any corpus size, output bounded by sources."""
-    t = tokens(F.col(text_col))
-    n = F.size(t)
-    empty = F.array().cast("array<struct<o:int,g:string>>")
-
-    def tag(order: int, g: Column) -> Column:
-        return F.struct(F.lit(order).alias("o"), g.alias("g"))
-
-    unis = F.transform(t, lambda x: tag(1, x))
-    bis = F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(t, 1, n - 1),
-            F.slice(t, 2, n - 1),
-            lambda a, b: tag(2, F.concat_ws(" ", a, b)),
-        ),
-    ).otherwise(empty)
-    bc = F.zip_with(
-        F.slice(t, 2, n - 2),
-        F.slice(t, 3, n - 2),
-        lambda b, c: F.concat_ws(" ", b, c),
+    toks = spread(df).select(
+        F.col(source_col).alias("source"), tokens(F.col(text_col)).alias("toks")
     )
-    tris = F.when(
-        n >= 3,
-        F.zip_with(
-            F.slice(t, 1, n - 2), bc, lambda a, x: tag(3, F.concat_ws(" ", a, x))
-        ),
-    ).otherwise(empty)
     per = (
-        spread(df)
-        .select(
-            F.col(source_col).alias("source"),
-            F.explode(F.concat(unis, bis, tris)).alias("gr"),
-        )
-        .select("source", F.col("gr.o").alias("o"), F.col("gr.g").alias("g"))
-        .groupBy("source", "o", "g")
+        word_ngram_rows(toks, "toks", (1, 2, 3))
+        .groupBy("source", "n", "gram")
         .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("source", "o")
+        .groupBy("source", "n")
         .agg(F.count(F.lit(1)).alias("n_unique"), F.sum("c").alias("n_occ"))
     )
 
     def ratio(o: int) -> Column:
         return F.round(
-            F.sum(F.when(F.col("o") == o, F.col("n_unique")))
-            / F.sum(F.when(F.col("o") == o, F.col("n_occ"))),
+            F.sum(F.when(F.col("n") == o, F.col("n_unique")))
+            / F.sum(F.when(F.col("n") == o, F.col("n_occ"))),
             6,
         )
 
     return per.groupBy("source").agg(
-        F.sum(F.when(F.col("o") == 1, F.col("n_occ")))
+        F.sum(F.when(F.col("n") == 1, F.col("n_occ")))
         .cast("long")
         .alias("n_tokens"),
         ratio(1).alias("distinct_1"),

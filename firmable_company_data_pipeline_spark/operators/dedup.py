@@ -42,6 +42,8 @@ from firmable_company_data_pipeline_spark.functions.textstats import (
     char_fold_hash,
     doc_fingerprint,
     tokens,
+    word_ngram_rows,
+    word_ngrams,
 )
 from firmable_company_data_pipeline_spark.functions.vectors import (
     dot,
@@ -76,29 +78,13 @@ SIMHASH_BANDS = SIMHASH_BITS // SIMHASH_BAND_BITS
 SIMHASH_BAND_MASK = (1 << SIMHASH_BAND_BITS) - 1
 
 
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles from a (materialized) token array.
-
-    Prefer passing an attribute column: if ``toks`` is the raw split
-    expression, the interpreted HOF path re-evaluates it for every
-    element_at inside the lambda.
-    """
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(n)])
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def shingle_array(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of the whitespace-tokenized text.
 
     Docs shorter than ``n`` tokens yield an empty array (they can never
     near-dup-match; callers may union them back as singletons).
     """
-    return shingles_from_tokens(tokens(text), n)
+    return F.array_distinct(word_ngrams(tokens(text), n))
 
 
 def shingle_hashes(text: Column, n: int = 3) -> Column:
@@ -112,10 +98,9 @@ def shingle_sets(
     """(id, shset array<string>) — the distinct word-n-gram set per doc.
 
     This is the 100-TB shape for shingling, and it costs ONE shuffle
-    with NO sort: ``posexplode`` the token array (no shuffle —
-    generator), assemble each n-gram MAP-SIDE while the token array is
-    still in the row (``F.get(toks, pos+j)`` — codegen'd, NULL-safe),
-    then a hash-agg ``collect_set`` per id whose map-side partial
+    with NO sort: the row form ``word_ngram_rows`` assembles each
+    n-gram MAP-SIDE from the in-row token array (no shuffle), then a
+    hash-agg ``collect_set`` per id whose map-side partial
     combine dedups grams before the exchange — shuffle volume is
     distinct grams, not gram occurrences.  (Earlier formulations paid a
     window sort here — lead() over (id, pos) — and before that two
@@ -133,17 +118,10 @@ def shingle_sets(
     toks = spread(df).select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
     )
-    ex = toks.select(
-        "id", F.size("toks").alias("n_tok"), "toks", F.posexplode("toks").alias("pos", "tok")
-    )
-    gram = F.concat_ws(
-        " ", F.col("tok"), *[F.get("toks", F.col("pos") + j) for j in range(1, n)]
-    )
     return (
-        ex.filter(F.col("pos") <= F.col("n_tok") - n)
-        .select("id", gram.alias("shingle"))
+        word_ngram_rows(toks, "toks", (n,))
         .groupBy("id")
-        .agg(F.collect_set("shingle").alias("shset"))
+        .agg(F.collect_set("gram").alias("shset"))
     )
 
 
@@ -694,22 +672,13 @@ def token_windows(
     """(id, gram) — EVERY k-token window occurrence (not distinct-per-doc
     like shingles): substring-level dedup needs occurrence counts.
 
-    Same MAP-SIDE codegen'd assembly as :func:`shingle_sets`
-    (``F.get(toks, pos+j)`` against the in-row token array) — ZERO
-    exchanges; window rows leave this operator unshuffled."""
+    Same MAP-SIDE row form (``word_ngram_rows``) as
+    :func:`shingle_sets` — ZERO exchanges; window rows leave this
+    operator unshuffled."""
     toks = spread(df).select(
         F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
     )
-    ex = toks.select(
-        "id", F.size("toks").alias("n_tok"), "toks", F.posexplode("toks").alias("pos", "tok")
-    )
-    gram = F.concat_ws(
-        " ", F.col("tok"), *[F.get("toks", F.col("pos") + j) for j in range(1, k)]
-    )
-    return (
-        ex.filter(F.col("pos") <= F.col("n_tok") - k)
-        .select("id", gram.alias("gram"))
-    )
+    return word_ngram_rows(toks, "toks", (k,)).select("id", "gram")
 
 
 def substring_dup_spans(

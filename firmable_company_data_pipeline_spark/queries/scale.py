@@ -425,19 +425,10 @@ def cms_error_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from firmable_company_data_pipeline_spark.session import spread
 
     docs = spread(_t(spark, sf_dir, "documents")["documents"])
-    # Materialize the token array first so the bigram HOF doesn't
-    # re-evaluate the split per element (shingles_from_tokens contract).
+    # Project the token array first: word_ngrams' lambda would otherwise
+    # re-evaluate the split per element.
     toks = docs.select(ts.tokens(F.col("text")).alias("t"))
-    t = F.col("t")
-    grams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat_ws(
-                " ", F.element_at(t, i + 1), F.element_at(t, i + 2)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = ts.word_ngrams(F.col("t"), 2)
     # the occurrence stream feeds the sketch build and the exact counts
     occ = toks.select(F.explode(grams).alias("term")).select(
         "term", ts.char_fold_hash(F.col("term")).alias("h")

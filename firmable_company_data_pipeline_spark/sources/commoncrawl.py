@@ -16,9 +16,10 @@ Spark-first redesign:
   is testable without network (network IO is not correctness-checkable,
   SURVEY §7 Phase 4).
 - **Parse** — (title, visible text, JSON-LD blocks) in the same pandas
-  pass: the reference-faithful BeautifulSoup arm whenever ``bs4`` imports
-  (round 7), else a stdlib ``html.parser`` pull — the only remaining
-  deviation, confined to bs4-less environments like this sandbox.  Then
+  pass: one stdlib ``html.parser`` pull on every host, so the same WARC
+  input gives the same dimension wherever it runs.  It excludes
+  script/style text, which the reference's ``soup.get_text()`` keeps —
+  the one documented deviation.  Then
   **every derived field is a native expression** from the function
   library — domain, company name, ABN+checksum, emails, phones,
   postcode, snippet all stay JVM-side.
@@ -27,7 +28,7 @@ Spark-first redesign:
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,14 +152,15 @@ class _PageExtractor:
     """Event-driven HTML pull built on the stdlib ``html.parser``
     tokenizer: (title, visible text, JSON-LD blocks).
 
-    Replicates the observable outputs of the reference's bs4 parse_html
-    (extract/commoncrawl_scraper.py:183-209) — page text with
-    script/style content excluded, <title> text, and the list-normalized
-    JSON-LD payloads (U2, lines 187-195) — with real tokenizer fidelity:
-    attributes containing ``>``, comments, CDATA, entity references and
-    unclosed tags are all handled, which the earlier regex pull was not.
-    bs4 itself is unavailable in this environment (documented deviation);
-    ``html.parser`` is the same tokenizer bs4's default builder wraps.
+    The package's only HTML parse.  It mirrors the observable outputs of
+    the reference's bs4 parse_html (extract/commoncrawl_scraper.py:183-209)
+    — <title> text and the list-normalized JSON-LD payloads (U2, lines
+    187-195) — with real tokenizer fidelity: attributes containing
+    ``>``, comments, CDATA, entity references and unclosed tags are all
+    handled, which the earlier regex pull was not.  One deviation: page
+    text excludes script/style content, which the reference's
+    ``soup.get_text()`` keeps.  ``html.parser`` is the same tokenizer
+    bs4's default builder wraps, and bs4 is not needed.
     """
 
     def __init__(self) -> None:
@@ -235,63 +237,6 @@ def _strip_html(html: str) -> tuple[str | None, str, str | None]:
     )
 
 
-def _strip_html_bs4(html: str) -> tuple[str | None, str, str | None]:
-    """bs4-fidelity arm of the HTML parse (round 7): a faithful mirror of
-    the reference's BeautifulSoup extraction
-    (extract/commoncrawl_scraper.py:183-197) — ``soup.get_text()`` over
-    the WHOLE document (the reference does not decompose script/style,
-    so their text rides along), ``soup.title.get_text(strip=True)``, and
-    JSON-LD blocks via ``find_all("script", type="application/ld+json")``
-    with per-block ``json.loads`` (malformed blocks skipped,
-    list-normalized).  Same return shape as :func:`_strip_html` so
-    :func:`parse_pages` can select per worker.
-    """
-    import json as _json
-
-    from bs4 import BeautifulSoup
-
-    soup = BeautifulSoup(html, "html.parser")
-    text = " ".join(soup.get_text().split())
-    blobs: list = []
-    for script in soup.find_all("script", {"type": "application/ld+json"}):
-        try:
-            parsed = _json.loads(script.string)
-        except Exception:
-            continue
-        blobs.extend(parsed if isinstance(parsed, list) else [parsed])
-    title = soup.title.get_text(strip=True) if soup.title else None
-    return (title or None, text, _json.dumps(blobs) if blobs else None)
-
-
-_BS4_AVAILABLE: bool | None = None
-
-
-def _html_parser() -> Callable[[str], tuple[str | None, str, str | None]]:
-    """Select the HTML-parse arm ONCE, on the driver: the
-    reference-faithful bs4 extraction when ``bs4`` imports, else the
-    stdlib ``html.parser`` pull — the only remaining documented
-    deviation, and only in environments without bs4.
-
-    Driver-side (not per-worker like the PIL gate, review r7): the
-    chosen function is closed over and shipped to every executor, so a
-    cluster with heterogeneous Python environments parses every
-    partition the same way — an executor missing bs4 fails LOUDLY with
-    ImportError (a misconfiguration surfaced) instead of silently
-    producing partition-dependent text.  Note the arms intentionally
-    differ (the reference's ``soup.get_text()`` includes script/style
-    text; the stdlib arm excludes it), so installing bs4 changes output
-    toward reference fidelity — by design, and deterministically."""
-    global _BS4_AVAILABLE
-    if _BS4_AVAILABLE is None:
-        try:
-            import bs4  # noqa: F401
-
-            _BS4_AVAILABLE = True
-        except ImportError:
-            _BS4_AVAILABLE = False
-    return _strip_html_bs4 if _BS4_AVAILABLE else _strip_html
-
-
 def parse_pages(pages: DataFrame) -> DataFrame:
     """HTML → the CC staging schema (S6; stg.common_crawl_raw_companies,
     extract/commoncrawl_scraper.py:198-209).
@@ -300,10 +245,6 @@ def parse_pages(pages: DataFrame) -> DataFrame:
     derived field is then a native Column expression (F1-F8) so the bulk
     of the work compiles into whole-stage codegen.
     """
-
-    # arm chosen on the DRIVER and closed over — every executor uses the
-    # same parser regardless of its local environment (review r7)
-    strip = _html_parser()
 
     def run(batches: Iterator) -> Iterator:
         import pandas as pd
@@ -314,7 +255,7 @@ def parse_pages(pages: DataFrame) -> DataFrame:
                 if not html:
                     rows.append((url, None, "", None))
                     continue
-                title, text, sd = strip(html)
+                title, text, sd = _strip_html(html)
                 rows.append((url, title, text, sd))
             yield pd.DataFrame(
                 rows, columns=["url", "title", "text", "structured_data"]

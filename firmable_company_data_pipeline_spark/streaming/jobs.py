@@ -76,8 +76,8 @@ def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
 
 # The fold skeleton.  Every foreachBatch fold below is built from these
 # helpers and states only what differs: it starts through _start, reads
-# an index's history through _history, and writes each per-batch output
-# through _write_batch.  A new fold follows the same rule
+# an index's history through _bucketed_history, and writes each per-batch
+# output through _write_batch.  A new fold follows the same rule
 # (tests/test_streaming.py pins it by scanning this file).
 
 
@@ -131,37 +131,6 @@ def _write_batch(
         writer = writer.partitionBy(by)
     writer.parquet(path)
     return path
-
-
-def _history(
-    spark: SparkSession,
-    index_dir: str,
-    batch_id: int,
-    touched: DataFrame | None = None,
-) -> DataFrame | None:
-    """A batch-keyed index as a fold reads it: every partition except
-    the replaying batch's own, or None when the index does not exist.
-
-    Excluding the own partition is the replay half of idempotency: on a
-    checkpoint replay (crash after the index write, before the commit)
-    the batch's rows are already in the index, and reading them back as
-    history would pair the batch with itself — duplicate output rows.
-
-    ``touched`` is a one-column frame named after a partition column of
-    the index (``bucket``/``pbucket``).  When the index is laid out by
-    that column, the read is pruned to the frame's distinct values: at
-    most ``n_buckets`` of them, collected to the driver (the O(1)-rows
-    contract of the high-water-mark reads in sources/io.py).  A flat
-    index is read whole."""
-    raw = _read_parquet_or_none(spark, index_dir)
-    if raw is None:
-        return None
-    hist = raw.filter(F.col("batch_id") != batch_id)
-    col = touched.columns[0] if touched is not None else None
-    if col in raw.columns:
-        values = [r[0] for r in touched.distinct().collect()]
-        hist = hist.filter(F.col(col).isin(values))
-    return hist
 
 
 def _read_partials(spark: SparkSession, target_dir: str, empty_ddl: str) -> DataFrame:
@@ -441,8 +410,8 @@ def declare_upsert_layout(spark, target_dir: str, n_buckets: int = 32) -> None:
 def _pin_bucket_count(spark, target_dir: str, n_buckets: int) -> None:
     """Pin a bucketed directory's bucket count with a ``_N_BUCKETS_*``
     marker: every bucketed layout this module maintains
-    (upsert target, winnow index + df partials, banded minhash index)
-    prunes reads or routes writes by ``value % n`` —
+    (upsert target, winnow index + df partials, banded minhash index,
+    block index) prunes reads or routes writes by ``value % n`` —
     a restart with a different ``n`` would prune against partitions
     laid out under the old modulus and silently drop index rows
     (missed pairs, undercounted df caps) or strand stale rows.
@@ -522,8 +491,8 @@ def streaming_minhash_dedup(
     3. writes discovered pairs to ``pairs_dir/batch_id=N`` and the new
        band rows to ``index_dir/batch_id=N``.
 
-    Replay-safe through the fold skeleton (``_history`` excludes the
-    batch's own partition, ``_write_batch`` overwrites it; with
+    Replay-safe through the fold skeleton (``_bucketed_history``
+    excludes the batch's own partition, ``_write_batch`` overwrites it; with
     Delta/Iceberg this becomes a real transactional append).  Reading
     ``index_dir``/``pairs_dir`` with partition discovery unions all
     batches.
@@ -789,27 +758,42 @@ def _bucketed_history(
     spark: SparkSession, target_dir: str, batch_id: int, touched: DataFrame,
     n_buckets: int,
 ) -> DataFrame | None:
-    """``_history`` of an index that must be laid out by the partition
-    column ``touched`` names — ``bucket`` for the winnow index and df
-    table, ``pbucket`` for the banded MinHash index.  A flat history
-    raises rather than being read whole and appended to in a second
-    layout.  A directory holding only the replaying batch's own
-    partition (a first batch that crashed after its write) has no
-    history: the batch overwrites that partition in the declared
-    layout."""
+    """A batch-keyed index as a fold reads it: every partition except
+    the replaying batch's own, pruned to the buckets the delta touches,
+    or None when the index has no history.
+
+    Excluding the own partition is the replay half of idempotency: on a
+    checkpoint replay (crash after the index write, before the commit)
+    the batch's rows are already in the index, and reading them back as
+    history would pair the batch with itself — duplicate output rows.
+    A directory holding only that partition (a first batch that crashed
+    after its write) has no history: the batch overwrites it in the
+    declared layout.
+
+    ``touched`` is a one-column frame named after the index's partition
+    column — ``bucket`` for the winnow index and df table and the block
+    index, ``pbucket`` for the banded MinHash index.  The read is pruned
+    to the frame's distinct values: at most ``n_buckets`` of them,
+    collected to the driver (the O(1)-rows contract of the high-water-
+    mark reads in sources/io.py).  The bucket count is pinned
+    (:func:`_pin_bucket_count`), and a flat history raises rather than
+    being read whole and appended to in a second layout."""
     if _batch_partition_ids(spark, target_dir) == [batch_id]:
         declare_upsert_layout(spark, target_dir, n_buckets)
         return None
     _pin_bucket_count(spark, target_dir, n_buckets)
-    hist = _history(spark, target_dir, batch_id, touched)
+    raw = _read_parquet_or_none(spark, target_dir)
+    if raw is None:
+        return None
     col = touched.columns[0]
-    if hist is not None and col not in hist.columns:
+    if col not in raw.columns:
         raise ValueError(
             f"{target_dir} has no {col} partition column (a flat layout); "
             f"rewrite it partitioned by {col} with n_buckets={n_buckets}, "
             "or start a fresh directory"
         )
-    return hist
+    values = [r[0] for r in touched.distinct().collect()]
+    return raw.filter(F.col("batch_id") != batch_id).filter(F.col(col).isin(values))
 
 
 def streaming_block_dedup(
@@ -863,7 +847,9 @@ def streaming_block_dedup(
         spark = batch_df.sparkSession
         blocks = materialize(block_rows(batch_df, block_tokens=block_tokens), "share")
         bucket = F.pmod(F.xxhash64("block_text"), F.lit(n_buckets)).alias("bucket")
-        index = _history(spark, index_dir, batch_id, blocks.select(bucket))
+        index = _bucketed_history(
+            spark, index_dir, batch_id, blocks.select(bucket), n_buckets
+        )
         if index is None:
             index = spark.createDataFrame([], "block_text string")
         # the output plan and the index-append plan both read the fold's

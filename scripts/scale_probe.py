@@ -585,6 +585,7 @@ def probe_block_fold(spark, work: str, docs_path: str, tag: str) -> float:
     hist_blocks.write.partitionBy("bucket").parquet(
         os.path.join(index_dir, "batch_id=9999")
     )
+    jobs.declare_upsert_layout(spark, index_dir, n_buckets)
     spark.read.parquet(os.path.join(SRC, "documents.parquet")).filter(
         F.col("doc_id") < 500
     ).withColumn("doc_id", F.col("doc_id") + 10_000_000).coalesce(1).write.parquet(

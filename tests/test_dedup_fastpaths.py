@@ -51,6 +51,78 @@ def test_shingle_rows_matches_shingle_array(spark):
     assert not any(i == "d4" or i == "d5" for i, _ in fast)
 
 
+def test_word_ngram_rows_match_word_ngrams(spark):
+    """The row form over several orders in one pass yields, order by
+    order, the same gram occurrences as the array form, and so does
+    the row form over each order alone — over DOCS' empty text and
+    docs shorter than ``n``, a NULL text, and ``n=1``."""
+    from firmable_company_data_pipeline_spark.functions import textstats as ts
+
+    docs = spark.createDataFrame(DOCS + [("d8", None)], "doc_id string, text string")
+    toks = docs.select("doc_id", ts.tokens(F.col("text")).alias("toks"))
+    orders = (1, 2, 3, 4)
+
+    def arrays(n):
+        return sorted(
+            (r["doc_id"], n, r["gram"])
+            for r in toks.select(
+                "doc_id", F.explode(ts.word_ngrams(F.col("toks"), n)).alias("gram")
+            ).collect()
+        )
+
+    def rows(ns):
+        return sorted(tuple(r) for r in ts.word_ngram_rows(toks, "toks", ns).collect())
+
+    want = sorted(g for n in orders for g in arrays(n))
+    assert rows(orders) == want
+    for n in orders:
+        assert rows((n,)) == arrays(n)
+    assert ("d5", 1, "") in want  # empty text is one empty token
+    assert ("d3", 3, "quick brown fox") in want
+    assert not any(d in ("d4", "d8") for d, n, _ in want if n >= 3)
+    assert not any(d == "d8" for d, _, _ in want)
+
+
+def test_word_gram_assembly_lives_in_two_primitives():
+    """Word-n-gram assembly is written once per shape: ``word_ngrams``
+    (the array form) and ``word_ngram_rows`` (the row form) in
+    functions/textstats.py.  A ``posexplode`` of a token array,
+    ``F.get(toks, pos + j)``, ``zip_with`` over token slices or a
+    ``transform`` over ``sequence(0, size(toks) - n)`` anywhere else in
+    operators/ or queries/ fails here.  Exempt: the fixed segments of
+    ``segment_dedup_rewrite``, and the character and symbol pairs of
+    ``bpe_pair_counts`` and ``bpe_train``."""
+    import ast
+    import pathlib
+    import re
+
+    import firmable_company_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    patterns = [
+        r"posexplode\((?:F\.col\()?[\"']?(?:toks?|tokens|t)\b",
+        r"\bget\([^,]+,\s*[^,]*\bpos\b[^,]*\+",
+        r"zip_with\(\s*F\.slice\(",
+        r"sequence\(\s*F\.lit\(0\),\s*F\.size\([^)]*\)\s*-",
+    ]
+    paths = [*root.glob("operators/*.py"), *root.glob("queries/*.py")]
+    found = set()
+    for path in [*paths, root / "functions" / "textstats.py"]:
+        src = path.read_text()
+        funcs = [n for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)]
+        for pat in patterns:
+            for m in re.finditer(pat, src):
+                line = src.count("\n", 0, m.start()) + 1
+                owner = next((f.name for f in funcs if f.lineno <= line <= f.end_lineno), None)
+                found.add(f"{path.stem}.{owner}")
+    exempt = {
+        "dedup.segment_dedup_rewrite",
+        "retrieval.bpe_pair_counts",
+        "retrieval.bpe_train",
+    }
+    assert found - exempt == {"textstats.word_ngrams", "textstats.word_ngram_rows"}
+
+
 def test_grouped_minhash_matches_column_fold(spark):
     df = _docs(spark)
     rows = dd._shingle_hash_rows(dd.shingle_rows(df, "text", "doc_id", 3))

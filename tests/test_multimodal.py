@@ -186,6 +186,34 @@ def test_phash_banding_has_full_recall_at_cap(spark):
     assert len(rows) == len(set(rows))  # one row per pair
 
 
+def test_media_phash_dups_matches_oracle_where_pairs_exist(spark, sf_dir):
+    """``media_phash_dups`` returns no pair at sf0.001 or sf0.01, the
+    scales the contract gate runs, so the gate cannot see a wrong pair
+    set.  sf0.1 has pairs: compare the query there with its DuckDB
+    oracle through the gate's own comparison."""
+    import os
+
+    import duckdb
+
+    from firmable_company_data_pipeline_spark.queries.llmops import (
+        MEDIA_PHASH_DUPS_SQL,
+        media_phash_dups,
+    )
+    from scripts.check_contract import compare
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    docs = os.path.join(sf01, "documents.parquet")
+    if not os.path.exists(docs):
+        pytest.skip(f"no sf0.1 documents at {docs}")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+    res = con.execute(MEDIA_PHASH_DUPS_SQL)
+    duck_rows = res.fetchall()
+    pairs = media_phash_dups(spark, sf01)
+    assert len(duck_rows) > 0
+    assert compare("media_phash_dups", pairs, duck_rows, [d[0] for d in res.description]) is None
+
+
 def test_frame_sample_plan_arithmetic(spark):
     media = _media_df(spark, [(1, bytes(300)), (2, bytes(63)), (3, bytes(64))])
     rows = {

@@ -513,32 +513,3 @@ def test_strip_html_nested_script_and_malformed_jsonld():
     assert "fake" not in text  # nested closer inside script stays dead
     # the malformed block is skipped; the valid one survives intact
     assert json.loads(sd) == [{"desc": "<b>bold</b> text"}]
-
-
-def test_strip_html_bs4_arm_matches_reference_shape():
-    """Green only where bs4 exists (absent in this sandbox — same gate
-    pattern as the PIL/PyAV arms): the bs4 arm must mirror the
-    reference's parse_html observables — title, JSON-LD list
-    normalization with malformed blocks skipped, and get_text over the
-    whole soup."""
-    import json
-
-    import pytest
-
-    pytest.importorskip("bs4")
-    from firmable_company_data_pipeline_spark.sources.commoncrawl import (
-        _html_parser,
-        _strip_html_bs4,
-    )
-
-    assert _html_parser() is _strip_html_bs4  # gate selects the real arm
-    html = (
-        "<html><head><title> T &amp; Co </title>"
-        '<script type="application/ld+json">[{"a": 1}, {"b": 2}]</script>'
-        '<script type="application/ld+json">not json</script></head>'
-        "<body><p>visible text</p></body></html>"
-    )
-    title, text, sd = _strip_html_bs4(html)
-    assert title == "T & Co"  # strip=True + entity decode
-    assert "visible text" in text
-    assert json.loads(sd) == [{"a": 1}, {"b": 2}]

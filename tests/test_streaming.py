@@ -705,6 +705,58 @@ def test_streaming_minhash_refuses_flat_history(spark, sf_dir, tmp_path):
         raise AssertionError("stream should have failed")  # pragma: no cover
 
 
+def test_streaming_block_dedup_refuses_flat_history(spark, sf_dir, tmp_path):
+    """The block fold serves only the bucketed layout: a declared index
+    whose history has no ``bucket`` partition column fails loudly
+    instead of being read whole and appended to in a second layout."""
+    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
+        "doc_id", "text"
+    )
+    index_dir = str(tmp_path / "blk_index")
+    spark.createDataFrame([("a b c",)], "block_text string").write.parquet(
+        index_dir + "/batch_id=-1"
+    )
+    jobs.declare_upsert_layout(spark, index_dir, 64)
+    src = str(tmp_path / "src")
+    docs.filter(F.col("doc_id") < 5).coalesce(1).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    q = jobs.streaming_block_dedup(
+        stream, index_dir, str(tmp_path / "out"), checkpoint=str(tmp_path / "ckpt")
+    )
+    with pytest.raises(Exception, match="no bucket partition column"):
+        q.awaitTermination(120)
+        raise AssertionError("stream should have failed")  # pragma: no cover
+
+
+def test_streaming_block_dedup_pins_bucket_count(spark, sf_dir, tmp_path):
+    """The block index is laid out by ``xxhash64(block_text) % n_buckets``
+    and each batch prunes its read to the buckets it touches, so a
+    restart at another ``n_buckets`` would prune against the wrong
+    modulus, miss blocks already seen and keep duplicates.  The restart
+    must fail instead."""
+    docs = load_tables(spark, sf_dir, "documents")["documents"].select(
+        "doc_id", "text"
+    )
+    index_dir = str(tmp_path / "blk_index")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(n_buckets):
+        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+        return jobs.streaming_block_dedup(
+            stream, index_dir, str(tmp_path / "out"), checkpoint=ckpt,
+            n_buckets=n_buckets,
+        )
+
+    docs.filter(F.col("doc_id") < 20).coalesce(1).write.parquet(src)
+    _drain(run(64))
+    docs.filter(F.col("doc_id") >= 20).coalesce(1).write.mode("append").parquet(src)
+    q = run(32)
+    with pytest.raises(Exception, match="already declares n_buckets"):
+        q.awaitTermination(120)
+        raise AssertionError("stream should have failed")  # pragma: no cover
+
+
 def test_streaming_minhash_labels_refuse_bucketed_layout(spark, sf_dir, tmp_path):
     """The labels fold maintains only ``gen=N`` generations: a labels_dir
     holding an ``lbucket=*`` partition fails the fold instead of being
