@@ -1,7 +1,9 @@
 """Scalar function library (SURVEY.md §2.8, F1–F22).
 
 Every function is a Column-in → Column-out native Spark expression —
-JVM-side, whole-stage-codegen friendly, no Python in the hot path.
+JVM-side, no Python in the hot path. Inputs read in several places are
+bound once (``bind.let``): that lambda body is interpreted, not compiled
+by whole-stage codegen, and the per-row cost fell anyway (ARCHITECTURE §1).
 """
 
 from firmable_company_data_pipeline_spark.functions.text import (

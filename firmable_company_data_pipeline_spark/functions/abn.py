@@ -3,8 +3,8 @@
 Reference F4/F5/F12 (extract/commoncrawl_scraper.py:40-57,
 transform/data_cleaning.py:71-75).
 
-The mod-89 weighted checksum is pure digit arithmetic, expressed with
-``split`` + ``zip_with`` + ``aggregate`` so it stays JVM-side and is
+The mod-89 weighted checksum is eleven weighted ``substring`` terms over
+the input, bound once (``bind.let``), so it stays JVM-side and is
 trivially mirrored by the DuckDB oracle.
 """
 
@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from firmable_company_data_pipeline_spark.functions.bind import let
 
 # Weights per extract/commoncrawl_scraper.py:45; first digit gets -1 first.
 ABN_WEIGHTS = [10, 1, 3, 5, 7, 9, 11, 13, 15, 17, 19]
@@ -44,11 +46,12 @@ def abn_checksum_total(abn11: Column) -> Column:
 
 def validate_abn(abn: Column) -> Column:
     """Boolean: stripped input is 11 digits and checksum % 89 == 0 (F4)."""
-    stripped = _strip_abn(abn)
-    is_11_digits = stripped.rlike(r"^[0-9]{11}$")
-    return F.when(
-        abn.isNull() | ~is_11_digits, F.lit(False)
-    ).otherwise(abn_checksum_total(stripped) % 89 == 0)
+    return let(
+        _strip_abn(abn),
+        lambda stripped: F.when(
+            stripped.isNull() | ~stripped.rlike(r"^[0-9]{11}$"), F.lit(False)
+        ).otherwise(abn_checksum_total(stripped) % 89 == 0),
+    )
 
 
 def extract_abn(text: Column) -> Column:
@@ -59,12 +62,15 @@ def extract_abn(text: Column) -> Column:
     and keeps the first candidate that validates
     (extract/commoncrawl_scraper.py:50-57).
     """
-    cand1 = F.regexp_extract(text, r"(?i)ABN[:\s]*([0-9 ]{11,20})", 1)
-    cand1 = F.regexp_replace(cand1, r"\s+", "")
-    cand2 = F.regexp_extract(text, r"\b(\d{2}\s?\d{3}\s?\d{3}\s?\d{3})\b", 1)
-    cand2 = F.regexp_replace(cand2, r"\s+", "")
-    return (
-        F.when((cand1 != "") & validate_abn(cand1), cand1)
-        .when((cand2 != "") & validate_abn(cand2), cand2)
-        .otherwise(F.lit(None).cast("string"))
+    def kept(t: Column, pattern: str) -> Column:
+        cand = F.regexp_replace(F.regexp_extract(t, pattern, 1), r"\s+", "")
+        return let(cand, lambda c: F.when((c != "") & validate_abn(c), c))
+
+    # coalesce extracts the second candidate only when the first is not kept.
+    return let(
+        text,
+        lambda t: F.coalesce(
+            kept(t, r"(?i)ABN[:\s]*([0-9 ]{11,20})"),
+            kept(t, r"\b(\d{2}\s?\d{3}\s?\d{3}\s?\d{3})\b"),
+        ),
     )

@@ -103,6 +103,8 @@ def bounded_levenshtein_ratio(a: Column, b: Column, min_ratio: float) -> Column:
     # call_function: the Python levenshtein() wrapper only takes an int
     # threshold, but the underlying SQL function accepts a per-row column.
     d = F.call_function("levenshtein", a, b, limit)
+    # ``d`` stays in both branches: bound once (bind.let) the scorer runs
+    # interpreted, and match_fuzzy_blocked went 2.2-2.7 -> 6.4-6.7 s at sf0.1.
     return (
         F.when(max_len == 0, F.lit(100.0))
         .when(d >= 0, (F.lit(1.0) - d / max_len) * 100.0)

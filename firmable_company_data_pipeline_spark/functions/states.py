@@ -13,6 +13,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from firmable_company_data_pipeline_spark.functions.bind import let
+from firmable_company_data_pipeline_spark.functions.similarity import levenshtein_ratio
+
 # transform/data_cleaning.py:31-42 — insertion order preserved for ties.
 STATE_MAPPING: dict[str, str] = {
     "NSW": "NSW",
@@ -33,13 +36,13 @@ STATE_MAPPING: dict[str, str] = {
     "NORTHERN TERRITORY": "NT",
 }
 
-
-def _lev_ratio(a: Column, b: Column) -> Column:
-    """``(1 - levenshtein/max_len) * 100`` similarity, 0..100."""
-    max_len = F.greatest(F.length(a), F.length(b))
-    return F.when(max_len == 0, F.lit(100.0)).otherwise(
-        (F.lit(1.0) - F.levenshtein(a, b) / max_len) * 100.0
+# One literal array<struct<key, abbrev>> in map order, parsed JVM-side once.
+_STATE_TABLE_SQL = "array({})".format(
+    ", ".join(
+        f"named_struct('key', '{key}', 'abbrev', '{abbrev}')"
+        for key, abbrev in STATE_MAPPING.items()
     )
+)
 
 
 def standardize_state(state: Column, fuzzy_threshold: float = 85.0) -> Column:
@@ -48,42 +51,27 @@ def standardize_state(state: Column, fuzzy_threshold: float = 85.0) -> Column:
     Normalization per the reference: trim, upper, collapse ``[.\\s]+`` to a
     single space (transform/data_cleaning.py:48).
     """
-    cleaned = F.trim(F.regexp_replace(F.upper(F.trim(state)), r"[\.\s]+", " "))
-    # Second exact attempt with spaces removed: catches dotted abbreviations
-    # ("N.S.W." → "N S W" → "NSW") that the reference resolves via WRatio's
-    # sub-token handling — our deterministic native equivalent.
-    despaced = F.replace(cleaned, F.lit(" "), F.lit(""))
+    table = F.expr(_STATE_TABLE_SQL)
 
-    exact = None
-    for key, abbrev in STATE_MAPPING.items():
-        cond = (cleaned == key) | (despaced == key)
-        exact = F.when(cond, abbrev) if exact is None else exact.when(cond, abbrev)
-
-    # Fuzzy fallback: arg-max of levenshtein ratio over the 16 keys.
-    # greatest() over scored structs keeps it one expression, JVM-side.
-    scored = F.array(
-        *[
-            F.struct(
-                _lev_ratio(cleaned, F.lit(key)).alias("score"),
-                F.lit(idx).alias("ord"),
-                F.lit(abbrev).alias("abbrev"),
+    def resolve(cleaned: Column) -> Column:
+        # Exact: first key in map order equal to ``cleaned`` or to it despaced,
+        # which catches "N.S.W." → "N S W" → "NSW" (WRatio's sub-token match).
+        despaced = F.replace(cleaned, F.lit(" "), F.lit(""))
+        exact = F.get(F.filter(table, lambda e: e["key"].isin(cleaned, despaced)), 0)
+        # Fuzzy: max by (score, -ord): highest ratio, earlier map entry on ties.
+        best = F.array_max(
+            F.transform(
+                table,
+                lambda e, i: F.struct(
+                    levenshtein_ratio(cleaned, e["key"]).alias("score"),
+                    (-i).alias("neg_ord"),
+                    e["abbrev"].alias("abbrev"),
+                ),
             )
-            for idx, (key, abbrev) in enumerate(STATE_MAPPING.items())
-        ]
-    )
-    # Max by (score, -ord): highest score wins; earlier map entry on ties.
-    best = F.array_max(
-        F.transform(
-            scored,
-            lambda s: F.struct(
-                s["score"].alias("score"),
-                (-s["ord"]).alias("neg_ord"),
-                s["abbrev"].alias("abbrev"),
-            ),
         )
-    )
-    fuzzy = F.when(best["score"] > fuzzy_threshold, best["abbrev"])
+        fuzzy = F.when(best["score"] > fuzzy_threshold, best["abbrev"])
+        return F.coalesce(exact["abbrev"], fuzzy)
 
-    return F.when(state.isNull(), F.lit(None).cast("string")).otherwise(
-        exact.otherwise(fuzzy)
+    return let(
+        F.trim(F.regexp_replace(F.upper(F.trim(state)), r"[\.\s]+", " ")), resolve
     )

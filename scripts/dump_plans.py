@@ -13,6 +13,10 @@ prints, for each query, the physical operator tree (node names and tree
 shape only; expressions, attribute ids and node ids are dropped) of every
 frame passed to ``session.materialize`` while the query builds, then of
 the final plan.  Run it on two checkouts and ``diff`` the outputs.
+Naming no query is an error (exit 2), not an empty, vacuously equal dump.
+
+Both modes run on a fixed ``local[4]`` session with 4 shuffle partitions,
+so the dumped plans do not depend on the host's core count.
 """
 
 from __future__ import annotations
@@ -24,6 +28,9 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Fixed so `hashpartitioning(..., N)` in the dumps does not follow the host.
+PLAN_CORES = 4
 
 SHOWCASE = [
     (
@@ -301,7 +308,9 @@ def dump_trees(sf_dir: str, names: list[str]) -> None:
     import __spark_entry__ as entrymod
     from firmable_company_data_pipeline_spark import get_spark
 
-    spark = get_spark("plan-trees")
+    spark = get_spark(
+        "plan-trees", master=f"local[{PLAN_CORES}]", shuffle_partitions=PLAN_CORES
+    )
     qs = entrymod.queries()
     for name in names:
         spark.catalog.clearCache()
@@ -317,13 +326,19 @@ def dump_trees(sf_dir: str, names: list[str]) -> None:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     if "--trees" in sys.argv:
-        dump_trees(sf_dir, sys.argv[sys.argv.index("--trees") + 1 :])
+        names = sys.argv[sys.argv.index("--trees") + 1 :]
+        if not names:
+            print(__doc__, file=sys.stderr)
+            sys.exit(2)
+        dump_trees(sf_dir, names)
         return
 
     import __spark_entry__ as entrymod
     from firmable_company_data_pipeline_spark import get_spark
 
-    spark = get_spark("plan-dump")
+    spark = get_spark(
+        "plan-dump", master=f"local[{PLAN_CORES}]", shuffle_partitions=PLAN_CORES
+    )
     qs = entrymod.queries()
 
     out = [

@@ -65,3 +65,26 @@ def test_bench_raw_out_default_is_keyed_by_cores():
     bench = _load_bench()
     assert _os.path.basename(bench.default_raw_out(8)) == "bench_raw_c8.json"
     assert bench.default_raw_out(32) != bench.default_raw_out(8)
+
+
+def test_dump_plans_trees_without_names_exits_2():
+    """``--trees`` with no query names is a usage error, not an empty
+    dump that two checkouts would trivially agree on."""
+    import os as _os
+    import subprocess
+    import sys
+
+    script = _os.path.join(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))),
+        "scripts",
+        "dump_plans.py",
+    )
+    proc = subprocess.run(
+        [sys.executable, script, "/nonexistent", "--trees"],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 2
+    assert proc.stdout == ""
+    assert "--trees QUERY" in proc.stderr

@@ -909,3 +909,31 @@ def test_kmv_sketch_rank_is_windowgrouplimit_and_bloom_broadcasts(plans):
     b = plans("bloom_filtered_lineitems")
     assert "BroadcastNestedLoopJoin" in b, "bloom vector not broadcast"
     assert "CartesianProduct" not in b
+
+
+@pytest.mark.parametrize(
+    "builder, needle",
+    [
+        ("standardize_state", "upper("),
+        ("extract_abn_clean_text", "regexp_extract("),
+        ("validate_abn", "regexp_replace("),
+    ],
+)
+def test_builder_evaluates_each_input_once(spark, builder, needle):
+    """Bind-once rule (ARCHITECTURE §1): each builder's derived input
+    appears once in its analyzed expression (``extract_abn``: once per
+    candidate), not pasted into every CASE WHEN branch that reads it —
+    those copies were 128, 30 and 12 before ``functions.bind.let``."""
+    from pyspark.sql import functions as F
+
+    import firmable_company_data_pipeline_spark.functions as lib
+
+    x = F.col("x")
+    column, expected = {
+        "standardize_state": (lib.standardize_state(x), 1),
+        "extract_abn_clean_text": (lib.extract_abn(lib.clean_text(x)), 2),
+        "validate_abn": (lib.validate_abn(x), 1),
+    }[builder]
+    df = spark.createDataFrame([], "x string").select(column.alias("o"))
+    analyzed = df._jdf.queryExecution().analyzed().expressions().head().toString()
+    assert analyzed.count(needle) == expected

@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 import firmable_company_data_pipeline_spark.functions as lib
+from firmable_company_data_pipeline_spark.functions.states import STATE_MAPPING
 from firmable_company_data_pipeline_spark.functions.textstats import (
     HASH_MOD,
     char_fold_hash,
@@ -54,6 +55,146 @@ def test_validate_abn_property(spark, vals):
 
     got = _batch(spark, vals, lib.validate_abn)
     assert got == [oracle(v) for v in vals]
+
+
+def _levenshtein(a, b):
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[len(b)]
+
+
+def _state_oracle(state, threshold=85.0):
+    """F9 as a Python loop: exact key (as cleaned, or despaced) in map
+    order, else the best Levenshtein ratio above ``threshold``, the
+    earlier map entry on ties. Spark's ``trim`` strips spaces only, and
+    Java's ``\\s`` is the ASCII whitespace class."""
+    if state is None:
+        return None
+    cleaned = re.sub(r"[.\s]+", " ", state.strip(" ").upper(), flags=re.ASCII)
+    cleaned = cleaned.strip(" ")
+    despaced = cleaned.replace(" ", "")
+    for key, abbrev in STATE_MAPPING.items():
+        if key in (cleaned, despaced):
+            return abbrev
+
+    def ratio(key):
+        max_len = max(len(cleaned), len(key))
+        return 100.0 if max_len == 0 else (
+            (1.0 - _levenshtein(cleaned, key) / max_len) * 100.0
+        )
+
+    score, _, abbrev = max(
+        (ratio(key), -i, abbrev) for i, (key, abbrev) in enumerate(STATE_MAPPING.items())
+    )
+    return abbrev if score > threshold else None
+
+
+def _extract_abn_oracle(text):
+    """F5 as a Python loop: the ``ABN``-prefixed run, then the first bare
+    2-3-3-3 digit group; keep the first that is non-empty and valid."""
+    if text is None:
+        return None
+    for pattern, flags in (
+        (r"ABN[:\s]*([0-9 ]{11,20})", re.IGNORECASE | re.ASCII),
+        (r"\b(\d{2}\s?\d{3}\s?\d{3}\s?\d{3})\b", re.ASCII),
+    ):
+        m = re.search(pattern, text, flags)
+        cand = re.sub(r"\s+", "", m.group(1), flags=re.ASCII) if m else ""
+        if cand and _abn_valid(cand):
+            return cand
+    return None
+
+
+def _abn_valid(abn):
+    if not re.fullmatch(r"[0-9]{11}", abn):
+        return False
+    w = [10, 1, 3, 5, 7, 9, 11, 13, 15, 17, 19]
+    return sum((int(d) - 1 if i == 0 else int(d)) * w[i] for i, d in enumerate(abn)) % 89 == 0
+
+
+# (input, expected): each names a case the oracle must also agree on.
+STATE_CASES = [
+    (None, None),
+    ("", None),
+    ("   ", None),
+    ("N.S.W.", "NSW"),
+    ("S.A.", "SA"),
+    ("S A", "SA"),
+    (" new  south wales ", "NSW"),
+    ("QUEENSLND", "QLD"),  # one edit in ten: ratio 90 > 85
+    ("QUENSLND", None),  # two edits in ten: ratio 80, under the bar
+    ("TASMNIA", "TAS"),  # one edit in eight: ratio 87.5
+]
+VALID_ABNS = ["51824753556", "61195537215", "91191239662", "85675197253"]
+ABN_CASES = [
+    (None, None),
+    ("", None),
+    ("   ", None),
+    ("ABN: 51 824 753 556", "51824753556"),
+    # The ABN-prefixed run fails the checksum; the bare group passes.
+    ("ABN: 1234 5678 9012 call 51 824 753 556", "51824753556"),
+    # A run longer than 11 digits is one invalid candidate.
+    ("ABN: 518247535561234", None),
+    ("abn 51824753556 0000 then 61 195 537 215", "51824753556"),
+    ("ABN 12345678901 and 91191239662", None),
+]
+
+state_text = st.one_of(
+    st.none(),
+    st.text(alphabet="NSWVICQLDTAERHOUY nswqld.\t-", max_size=20),
+    st.builds(
+        lambda key, pos, ch: key[:pos] + ch + key[pos + 1 :],
+        st.sampled_from(list(STATE_MAPPING)),
+        st.integers(0, 28),
+        st.sampled_from(["", "X", ".", " ", "A"]),
+    ),
+)
+abn_text = st.one_of(
+    st.none(),
+    st.lists(
+        st.one_of(
+            st.sampled_from(["ABN", "abn:", "ABN: ", " ", "x", ".", "-", *VALID_ABNS,
+                             "51 824 753 556", "85 675 197 253"]),
+            st.text(alphabet="0123456789 ", max_size=14),
+        ),
+        max_size=6,
+    ).map("".join),
+)
+
+
+def test_standardize_state_cases(spark):
+    vals = [v for v, _ in STATE_CASES]
+    got = _batch(spark, vals, lib.standardize_state)
+    assert got == [e for _, e in STATE_CASES]
+    assert got == [_state_oracle(v) for v in vals]
+    # "SWA" is one deletion from both "SA" and "WA": map order picks SA.
+    tied = _batch(spark, ["SWA"], lambda c: lib.standardize_state(c, 60.0))
+    assert tied == ["SA"] == [_state_oracle("SWA", 60.0)]
+
+
+@SETTINGS
+@given(st.lists(state_text, min_size=1, max_size=30))
+def test_standardize_state_property(spark, vals):
+    got = _batch(spark, vals, lib.standardize_state)
+    assert got == [_state_oracle(v) for v in vals]
+
+
+def test_extract_abn_cases(spark):
+    vals = [v for v, _ in ABN_CASES]
+    got = _batch(spark, vals, lib.extract_abn)
+    assert got == [e for _, e in ABN_CASES]
+    assert got == [_extract_abn_oracle(v) for v in vals]
+
+
+@SETTINGS
+@given(st.lists(abn_text, min_size=1, max_size=30))
+def test_extract_abn_property(spark, vals):
+    got = _batch(spark, vals, lib.extract_abn)
+    assert got == [_extract_abn_oracle(v) for v in vals]
 
 
 @SETTINGS
